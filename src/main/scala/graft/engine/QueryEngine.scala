@@ -11,11 +11,24 @@ import ExprCompiler._
 /** Result of a read query: the sliced frame plus the pre-slice frame whose
   * count is the reference's `unsliced_df_len` pagination protocol
   * (reference: qcache/qframe/__init__.py:47-48, app.py:195). The count is a
-  * separate lazy plan — callers pay for it only if they read the header. */
-final case class QueryResult(df: DataFrame, preSlice: DataFrame) {
+  * separate lazy plan — callers pay for it only if they read the header.
+  * `offset` and `limit` are the slice as requested, 0 meaning none (the
+  * dialect treats 0 as no slice). */
+final case class QueryResult(df: DataFrame, preSlice: DataFrame, offset: Long, limit: Long) {
   /** lazy val, not def: a memoized plan (CacheItem.memoizedPlan) serves
     * repeat requests from the same QueryResult — the count job runs once. */
   lazy val unslicedLength: Long = preSlice.count()
+
+  /** The unsliced length, given that `served` rows is the COMPLETE slice
+    * this result returned (no row guard cut it). When the slice ends before
+    * its limit, the rows it served prove the length is offset + served —
+    * unless it served nothing past a positive offset, which only bounds
+    * the length from above. Negative slices count from the end, and a full
+    * page says nothing about what follows it; both run the count job. */
+  def unslicedLength(served: Long): Long =
+    if (offset >= 0 && offset <= Int.MaxValue && limit >= 0 && limit <= Int.MaxValue &&
+        (limit == 0 || served < limit) && (served > 0 || offset == 0)) offset + served
+    else unslicedLength
 }
 
 /** Compiles the JSON query dialect to a lazy DataFrame plan, in the
@@ -87,8 +100,9 @@ object QueryEngine {
     val filtered = applyWhere(base, q.where, root, resolve)
     val projected = project(filtered, q.groupBy, q.distinct, q.select)
     val ordered = applyOrderBy(projected, q.orderBy)
-    val sliced = applySlice(ordered, q.offset, q.limit)
-    QueryResult(dropHidden(sliced), dropHidden(ordered))
+    val (offset, limit) = (sliceArg("offset", q.offset), sliceArg("limit", q.limit))
+    val sliced = applySlice(ordered, offset, limit)
+    QueryResult(dropHidden(sliced), dropHidden(ordered), offset, limit)
   }
 
   private def dropHidden(df: DataFrame): DataFrame = {
@@ -452,24 +466,23 @@ object QueryEngine {
     case other => Errors.malformed(s"Invalid type for $name", other)
   }
 
+  private def sliceArg(name: String, v: Option[Any]): Long =
+    v.map(intArg(name, _)).getOrElse(0L)
+
   /** Falsy offset/limit (0) are no-ops, like the reference's truthiness
     * checks, and NEGATIVE values follow Python slice semantics — the
     * reference slices with `df[offset:][:limit]`, so offset -k means "the
     * last k rows" and limit -k "all but the last k"
     * (reference: query.py:184-193). Negative values cost one count job to
     * translate into a non-negative skip/cap. */
-  private def applySlice(df: DataFrame, offsetQ: Option[Any], limitQ: Option[Any]): DataFrame = {
+  private def applySlice(df: DataFrame, offset: Long, limit: Long): DataFrame = {
     var out = df
-    offsetQ.map(intArg("offset", _)).filter(_ != 0L).foreach { n =>
-      out =
-        if (n > 0) out.offset(n.toInt)
-        else out.offset(math.max(0L, out.count() + n).toInt)
-    }
-    limitQ.map(intArg("limit", _)).filter(_ != 0L).foreach { n =>
-      out =
-        if (n > 0) out.limit(n.toInt)
-        else out.limit(math.max(0L, out.count() + n).toInt)
-    }
+    if (offset != 0L) out =
+      if (offset > 0) out.offset(offset.toInt)
+      else out.offset(math.max(0L, out.count() + offset).toInt)
+    if (limit != 0L) out =
+      if (limit > 0) out.limit(limit.toInt)
+      else out.limit(math.max(0L, out.count() + limit).toInt)
     out
   }
 }

@@ -32,7 +32,12 @@ object SessionTuning {
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2",
     "spark.sql.codegen.cache.maxEntries" -> "5000")
 
-  /** Fold [[perfConfs]] into a session builder. */
+  /** Fold [[perfConfs]] into a session builder and install
+    * [[graft.plans.GraftExtensions]]: the SQL-surface kernels, and the
+    * physical rule that keeps filter and alias constants out of generated
+    * code, so a repeat query with a new constant reuses compiled classes. */
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
-    perfConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+    perfConfs.foldLeft(b.withExtensions(new graft.plans.GraftExtensions())) {
+      case (bb, (k, v)) => bb.config(k, v)
+    }
 }

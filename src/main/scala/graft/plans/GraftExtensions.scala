@@ -24,6 +24,11 @@ import graft.functions._
   *
   * Each function resolves to the SAME Expression class the DataFrame
   * operators use — one implementation, two surfaces.
+  *
+  * It also installs [[ParameterizeLiterals]], which keeps filter and
+  * alias constants out of generated code, so queries that differ only in
+  * such constants share compiled classes. Every graft session carries
+  * these extensions (see graft.engine.SessionTuning).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -37,6 +42,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectColumnar(_ => ParameterizeLiterals.columnarRule)
     ext.injectFunction((FunctionIdentifier("graft_dot"),
       info("graft_dot", "_FUNC_(a, b) - fused dot product of two array<double>"),
       (args: Seq[Expression]) => {

@@ -52,6 +52,13 @@ final class GraftServer(spark: SparkSession, port: Int,
   private val AcceptedTypes =
     Set("application/json", "text/csv", "application/x-ndjson")
 
+  // The JDK server writes response headers and body as separate segments;
+  // without TCP_NODELAY, Nagle's algorithm holds a small body back until
+  // the client's delayed ACK (~40 ms on Linux) releases it. The JDK reads
+  // this property once, when the first server of the JVM is created.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+
   private val server = ssl match {
     case Some(ctx) =>
       val s = HttpsServer.create(new InetSocketAddress(port), 0)
@@ -293,9 +300,7 @@ final class GraftServer(spark: SparkSession, port: Int,
       stats.inc("replace_count")
       cache.delete(key)
     }
-    val durations =
-      try cache.ensureFree(if (ct == "text/csv") body.length else body.length / 2)
-      catch { case e: IllegalStateException => throw e }
+    val durations = cache.ensureFree(if (ct == "text/csv") body.length else body.length / 2)
     val text = new String(body, UTF_8)
     val parsed =
       try {
@@ -425,7 +430,7 @@ final class GraftServer(spark: SparkSession, port: Int,
         // retries with a short backoff: swap windows are per-shard
         // renames, milliseconds in practice. Every other failure
         // propagates unchanged on the first attempt.
-        def attempt(): (String, Long, Long) = {
+        def attempt(): (String, Long) = {
           val result =
             if (crossDataset || forced)
               QueryEngine.run(withStandIns, q, resolver)
@@ -459,18 +464,19 @@ final class GraftServer(spark: SparkSession, port: Int,
                   s"result exceeds max-result-bytes=$maxResultBytes; " +
                     "add offset/limit to page the result"))
             }
-          // Without offset/limit the serialized row count IS the unsliced
-          // length — the separate count job only runs for sliced queries.
-          val unsliced =
-            if (q.offset.isEmpty && q.limit.isEmpty) rowCount
-            else result.unslicedLength
-          (text, rowCount, unsliced)
+          if (maxResultRows > 0 && rowCount > maxResultRows)
+            throw new HttpFail(413, errorJson(
+              s"result exceeds max-result-rows=$maxResultRows; " +
+                "add offset/limit to page the result"))
+          // the served rows usually prove the unsliced length; the
+          // separate count job runs only when they cannot
+          (text, result.unslicedLength(rowCount))
         }
         // READ-ONLY retries: a maintenance clause that failed mid-write
         // must surface, never silently re-apply (a second vocab_update
         // would double its delta)
         val retryable = !forced && !XopEngine.hasMaintenance(q)
-        val (text, rowCount, unsliced) =
+        val (text, unsliced) =
           try attempt()
           catch { case e: Throwable if retryable && isMissingInputFile(e) =>
             item.invalidateMemo(memoKey) // the rebuilt plan re-memoizes
@@ -481,10 +487,6 @@ final class GraftServer(spark: SparkSession, port: Int,
               attempt()
             }
           }
-        if (maxResultRows > 0 && rowCount > maxResultRows)
-          throw new HttpFail(413, errorJson(
-            s"result exceeds max-result-rows=$maxResultRows; " +
-              "add offset/limit to page the result"))
         val bytes = text.getBytes(UTF_8)
         // multibyte tail case: the serializer aborts on CHAR count (a
         // lower bound on UTF-8 bytes); the encoded length is the real
@@ -514,10 +516,19 @@ final class GraftServer(spark: SparkSession, port: Int,
     }
   }
 
+  /** Janino compiles counted by Spark (JVM-wide) at the last snapshot. */
+  private val compilesSeen = new java.util.concurrent.atomic.AtomicLong(compileCount)
+  private def compileCount: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   private def statistics(exchange: HttpExchange): Unit = {
+    val compiles = compileCount
     val snapshot = stats.snapshot() ++ Map(
       "dataset_count" -> cache.count.toLong,
-      "cache_size" -> cache.size)
+      "cache_size" -> cache.size,
+      // since the last snapshot, like the counters; JVM-wide, so it also
+      // counts background compiles (shape warmer, other sessions)
+      "codegen_compile_count" -> (compiles - compilesSeen.getAndSet(compiles)))
     respond(exchange, 200, QueryJson.write(snapshot).getBytes(UTF_8),
       Map("Content-Type" -> "application/json; charset=utf-8"))
   }

@@ -471,6 +471,38 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.body() == """[{"foo":2,"bar":"bbb"}]""")
   }
 
+  test("pagination: unsliced length from served rows, count where they cannot prove it") {
+    storeCsv("t4b", csvData)
+    def page(q: String): (String, String) = {
+      val r = query("t4b", q)
+      assert(r.statusCode() == 200, q)
+      (r.body(), r.headers().firstValue("X-QCache-unsliced-length").get)
+    }
+    // short last page: the served row proves the length
+    assert(page("""{"offset": 2, "limit": 5}""") == ("""[{"foo":3,"bar":"ccc"}]""", "3"))
+    // offset exactly at the end serves nothing, so the count answers
+    assert(page("""{"offset": 3, "limit": 2}""") == ("[]", "3"))
+    assert(page("""{"offset": 5}""") == ("[]", "3"))
+    // zero offset and zero limit are no-op slices
+    val all = """[{"foo":1,"bar":"aaa"},{"foo":2,"bar":"bbb"},{"foo":3,"bar":"ccc"}]"""
+    assert(page("""{"offset": 0}""") == (all, "3"))
+    assert(page("""{"limit": 0}""") == (all, "3"))
+    // a negative offset counts from the end
+    assert(page("""{"offset": -1}""") == ("""[{"foo":3,"bar":"ccc"}]""", "3"))
+    assert(page("""{"offset": -1, "limit": 1}""") == ("""[{"foo":3,"bar":"ccc"}]""", "3"))
+  }
+
+  test("small responses are not held back by delayed ACKs") {
+    // Nagle plus the client's delayed ACK put ~40 ms on every small
+    // response without TCP_NODELAY; one client reuses one connection
+    val ms = (1 to 10).map { _ =>
+      val t0 = System.nanoTime()
+      assert(send(req("/status").GET().build()).statusCode() == 200)
+      (System.nanoTime() - t0) / 1e6
+    }
+    assert(ms.min < 30.0, ms.map(m => f"$m%.1f").mkString("latencies ms: ", ", ", ""))
+  }
+
   test("GET on /q path is 404; unknown key is 404; counts a miss") {
     storeCsv("t5", csvData)
     assert(send(req("/dataset/t5/q").GET().build()).statusCode() == 404)
@@ -637,8 +669,13 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r1.body().contains("\"miss_count\""))
     assert(r1.body().contains("\"store_count\""))
     assert(r1.body().contains("\"dataset_count\""))
+    // JVM-wide Janino compiles since the last snapshot: background work
+    // compiles too, so only presence and sign are stable
+    val compiles = "\"codegen_compile_count\":(-?\\d+)".r
+    assert(compiles.findFirstMatchIn(r1.body()).exists(_.group(1).toLong >= 0), r1.body())
     val r2 = send(req("/statistics").GET().build())
     assert(!r2.body().contains("\"hit_count\"")) // reset on snapshot
+    assert(compiles.findFirstMatchIn(r2.body()).exists(_.group(1).toLong >= 0), r2.body())
   }
 
   test("status endpoint") {

@@ -180,6 +180,20 @@ class EngineProjectSpec extends AnyFunSuite {
     assert(r.unslicedLength == 3L)
   }
 
+  test("served rows give the unsliced length when they prove it") {
+    // the pre-slice frame has 3 rows; a result of 3 means the count ran
+    def len(offset: Long, limit: Long, served: Long): Long =
+      QueryResult(basicFrame, basicFrame, offset, limit).unslicedLength(served)
+    assert(len(0, 0, 9) == 9)  // no slice: every row was served
+    assert(len(4, 0, 2) == 6)  // rows served past an offset
+    assert(len(4, 5, 2) == 6)  // short page
+    assert(len(0, 5, 0) == 0)  // empty result with no offset
+    assert(len(1, 2, 2) == 3)  // full page: more rows may follow
+    assert(len(9, 0, 0) == 3)  // nothing served past an offset
+    assert(len(-2, 0, 2) == 3) // negative slices count from the end
+    assert(len(0, -1, 2) == 3)
+  }
+
   test("negative offset and limit follow Python slice semantics") {
     // reference slices df[offset:][:limit]
     assert(rows(runQ(basicFrame, """{"offset": -2}""").df) == Seq("aaa", "ccc"))
