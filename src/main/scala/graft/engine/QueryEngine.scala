@@ -9,22 +9,26 @@ import scala.collection.mutable
 import ExprCompiler._
 
 /** Result of a read query: the sliced frame plus the pre-slice frame whose
-  * count is the reference's `unsliced_df_len` pagination protocol
-  * (reference: qcache/qframe/__init__.py:47-48, app.py:195). The count is a
-  * separate lazy plan — callers pay for it only if they read the header.
-  * `offset` and `limit` are the slice as requested, 0 meaning none (the
-  * dialect treats 0 as no slice). */
-final case class QueryResult(df: DataFrame, preSlice: DataFrame, offset: Long, limit: Long) {
+  * row count is the reference's `unsliced_df_len` pagination protocol
+  * (reference: qcache/qframe/__init__.py:47-48, app.py:195). `offset` and
+  * `limit` are the slice as requested, 0 meaning none (the dialect treats 0
+  * as no slice). `preSliceRows` is that count when it is already known:
+  * the stored table's row count for a query that keeps every row, or the
+  * count a negative slice ran at plan-build time. Otherwise the count is a
+  * separate lazy plan, paid for only when the header needs it. */
+final case class QueryResult(df: DataFrame, preSlice: DataFrame, offset: Long, limit: Long,
+                             preSliceRows: Option[Long] = None) {
   /** lazy val, not def: a memoized plan (CacheItem.memoizedPlan) serves
     * repeat requests from the same QueryResult — the count job runs once. */
-  lazy val unslicedLength: Long = preSlice.count()
+  lazy val unslicedLength: Long = preSliceRows.getOrElse(preSlice.count())
 
   /** The unsliced length, given that `served` rows is the COMPLETE slice
     * this result returned (no row guard cut it). When the slice ends before
     * its limit, the rows it served prove the length is offset + served —
     * unless it served nothing past a positive offset, which only bounds
     * the length from above. Negative slices count from the end, and a full
-    * page says nothing about what follows it; both run the count job. */
+    * page says nothing about what follows it; both fall back to
+    * [[unslicedLength]]. */
   def unslicedLength(served: Long): Long =
     if (offset >= 0 && offset <= Int.MaxValue && limit >= 0 && limit <= Int.MaxValue &&
         (limit == 0 || served < limit) && (served > 0 || offset == 0)) offset + served
@@ -69,10 +73,15 @@ object QueryEngine {
 
   /** `resolve` lets xop clauses reference OTHER stored datasets by name
     * (decontamination eval sets, exclusion lists, ANN query sets) — the
-    * server passes its dataset cache; the bare overloads resolve nothing. */
+    * server passes its dataset cache; the bare overloads resolve nothing.
+    * `tableRows` is `table`'s exact row count when the caller knows it (the
+    * server counts every frame it caches): a query that keeps every row
+    * then reports it as its unsliced length, and translates a negative
+    * slice with it, without a count job. */
   def run(table: DataFrame, q: Query,
-          resolve: String => Option[DataFrame]): QueryResult =
-    try runInternal(table, q, table, resolve)
+          resolve: String => Option[DataFrame],
+          tableRows: Option[Long] = None): QueryResult =
+    try runInternal(table, q, table, resolve, tableRows)
     catch {
       case e: org.apache.spark.sql.AnalysisException =>
         Errors.malformed(s"Invalid type in argument: ${e.getSimpleMessage}")
@@ -89,11 +98,14 @@ object QueryEngine {
     run(table, q, resolve)
   }
 
+  /** `tableRows` counts `table`; a nested `from` reads the same table. */
   private def runInternal(table: DataFrame, q: Query, root: DataFrame,
-                          resolve: String => Option[DataFrame]): QueryResult = {
+                          resolve: String => Option[DataFrame],
+                          tableRows: Option[Long]): QueryResult = {
     // from: evaluate the nested query first; in-subqueries keep resolving
     // against the ROOT dataset (reference: query.py:217-218, context.py).
-    val base0 = q.from.map(f => runInternal(table, f, root, resolve).df).getOrElse(table)
+    val base0 = q.from.map(f => runInternal(table, f, root, resolve, tableRows).df)
+      .getOrElse(table)
     // xop: extension operator runs next, deriving the frame the remaining
     // reference clauses apply to (SURVEY §7.5; see XopEngine).
     val base = q.xop.map(x => XopEngine.run(base0, x, resolve)).getOrElse(base0)
@@ -101,9 +113,20 @@ object QueryEngine {
     val projected = project(filtered, q.groupBy, q.distinct, q.select)
     val ordered = applyOrderBy(projected, q.orderBy)
     val (offset, limit) = (sliceArg("offset", q.offset), sliceArg("limit", q.limit))
-    val sliced = applySlice(ordered, offset, limit)
-    QueryResult(dropHidden(sliced), dropHidden(ordered), offset, limit)
+    val (sliced, preSliceRows) =
+      applySlice(ordered, offset, limit, tableRows.filter(_ => keepsEveryRow(q)))
+    QueryResult(dropHidden(sliced), dropHidden(ordered), offset, limit, preSliceRows)
   }
+
+  /** True when the pre-slice frame has exactly the input table's rows.
+    * `select` columns and aliases, `order_by` and stand-in columns keep
+    * every row; `where`, `group_by`, `distinct`, an aggregate `select` and
+    * `xop` may not, and neither may a `from` that drops rows or slices. */
+  private def keepsEveryRow(q: Query): Boolean =
+    q.where.forall(_ == Nil) && q.groupBy.isEmpty && q.distinct.isEmpty && q.xop.isEmpty &&
+      q.select.forall(_.forall(e => e.isInstanceOf[String] || isAliasExpr(e))) &&
+      q.from.forall(f => keepsEveryRow(f) &&
+        sliceArg("offset", f.offset) == 0 && sliceArg("limit", f.limit) == 0)
 
   private def dropHidden(df: DataFrame): DataFrame = {
     val hidden = df.schema.fieldNames.filter(n => n == RowId || n.startsWith("__in_"))
@@ -148,7 +171,7 @@ object QueryEngine {
             if (!hasColumn(current, colName))
               Errors.malformed("Column is not defined", l)
             val subQ = Query.fromAny(sub)
-            val subResult = runInternal(root, subQ, root, resolve).df
+            val subResult = runInternal(root, subQ, root, resolve, None).df
             if (!hasColumn(subResult, colName))
               Errors.malformed(s"""Unknown column "$colName"""", l)
             val k = markers.length
@@ -473,16 +496,19 @@ object QueryEngine {
     * checks, and NEGATIVE values follow Python slice semantics — the
     * reference slices with `df[offset:][:limit]`, so offset -k means "the
     * last k rows" and limit -k "all but the last k"
-    * (reference: query.py:184-193). Negative values cost one count job to
-    * translate into a non-negative skip/cap. */
-  private def applySlice(df: DataFrame, offset: Long, limit: Long): DataFrame = {
+    * (reference: query.py:184-193). Negative values need the pre-slice
+    * row count: `rows` when it is known, else one count job at plan-build
+    * time. Returns the sliced frame and the pre-slice row count, if known
+    * or counted. */
+  private def applySlice(df: DataFrame, offset: Long, limit: Long,
+                         rows: Option[Long]): (DataFrame, Option[Long]) = {
+    val known = if (offset < 0 || limit < 0) Some(rows.getOrElse(df.count())) else rows
+    val skip = if (offset < 0) math.max(0L, known.get + offset) else offset
+    val take =
+      if (limit < 0) math.max(0L, math.max(0L, known.get - skip) + limit) else limit
     var out = df
-    if (offset != 0L) out =
-      if (offset > 0) out.offset(offset.toInt)
-      else out.offset(math.max(0L, out.count() + offset).toInt)
-    if (limit != 0L) out =
-      if (limit > 0) out.limit(limit.toInt)
-      else out.limit(math.max(0L, out.count() + limit).toInt)
-    out
+    if (skip != 0L) out = out.offset(skip.toInt)
+    if (limit != 0L) out = out.limit(take.toInt)
+    (out, known)
   }
 }

@@ -33,9 +33,11 @@ object SessionTuning {
     "spark.sql.codegen.cache.maxEntries" -> "5000")
 
   /** Fold [[perfConfs]] into a session builder and install
-    * [[graft.plans.GraftExtensions]]: the SQL-surface kernels, and the
+    * [[graft.plans.GraftExtensions]]: the SQL-surface kernels, the
     * physical rule that keeps filter and alias constants out of generated
-    * code, so a repeat query with a new constant reuses compiled classes. */
+    * code, so a repeat query with a new constant reuses compiled classes,
+    * and the optimizer rule that drops row-order sorts a one-partition
+    * cache already satisfies, so a limited read stops after its rows. */
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
     perfConfs.foldLeft(b.withExtensions(new graft.plans.GraftExtensions())) {
       case (bb, (k, v)) => bb.config(k, v)

@@ -27,8 +27,10 @@ import graft.functions._
   *
   * It also installs [[ParameterizeLiterals]], which keeps filter and
   * alias constants out of generated code, so queries that differ only in
-  * such constants share compiled classes. Every graft session carries
-  * these extensions (see graft.engine.SessionTuning).
+  * such constants share compiled classes, and [[RemoveCachedOrderSorts]],
+  * which drops the row-order sort a single-partition cache already
+  * satisfies, so a limited read stops after the rows it returns. Every
+  * graft session carries these extensions (see graft.engine.SessionTuning).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -43,6 +45,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectColumnar(_ => ParameterizeLiterals.columnarRule)
+    ext.injectOptimizerRule(_ => RemoveCachedOrderSorts)
     ext.injectFunction((FunctionIdentifier("graft_dot"),
       info("graft_dot", "_FUNC_(a, b) - fused dot product of two array<double>"),
       (args: Seq[Expression]) => {

@@ -5,8 +5,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** A cached dataset: the persisted DataFrame plus the bookkeeping the
-  * reference keeps per entry (reference: qcache/dataset_cache.py:4-21). */
-final class CacheItem(val df: DataFrame, val size: Long, val creationTime: Long) {
+  * reference keeps per entry (reference: qcache/dataset_cache.py:4-21), and
+  * the frame's exact row count, counted when it was cached. */
+final class CacheItem(val df: DataFrame, val size: Long, val creationTime: Long,
+                      val rowCount: Long) {
   @volatile var lastAccessTime: Long = creationTime
   @volatile var accessCount: Long = 0
 
@@ -92,13 +94,13 @@ final class DatasetCache(val maxSize: Long, val maxAge: Long,
     }
   }
 
-  def put(key: String, df: DataFrame, byteSize: Long): Unit = lock.synchronized {
+  def put(key: String, df: DataFrame, byteSize: Long, rowCount: Long): Unit = lock.synchronized {
     // unpersist a survivor of concurrent same-key stores (store() deletes
     // first, but two racing POSTs can both pass that check) — without this
     // the loser's blocks leak until session end
     items.remove(key).foreach { old => totalSize -= old.size; old.df.unpersist() }
     df.persist(StorageLevel.MEMORY_ONLY)
-    items(key) = new CacheItem(df, byteSize, clock())
+    items(key) = new CacheItem(df, byteSize, clock(), rowCount)
     totalSize += byteSize
   }
 
@@ -109,11 +111,11 @@ final class DatasetCache(val maxSize: Long, val maxAge: Long,
     * holding the cache mutex — and only the pointer swap synchronizes. */
   def replaceFrame(key: String, df: DataFrame): Unit = {
     df.persist(StorageLevel.MEMORY_ONLY)
-    df.count() // materialize before exposing the swapped frame
+    val rowCount = df.count() // materialize before exposing the swapped frame
     val swapped = lock.synchronized {
       items.get(key) match {
         case Some(old) =>
-          items(key) = new CacheItem(df, old.size, old.creationTime)
+          items(key) = new CacheItem(df, old.size, old.creationTime, rowCount)
           Some(old.df)
         case None => None
       }

@@ -316,16 +316,22 @@ final class GraftServer(spark: SparkSession, port: Int,
       } catch {
         case e: MalformedQueryException => throw new HttpFail(400, errorJson(e.getMessage))
       }
-    // Cache layout: RANGE-partitioned and in-partition-sorted on the hidden
-    // ingest-order column. The InMemoryRelation then advertises
-    // RangePartitioning + [__row_id__ ASC] ordering, so the pandas-order
-    // sort every unordered query issues is elided by the physical planner
-    // (no exchange, no sort — collect() preserves partition order). The
-    // range shuffle is a one-off at store time; partition count is sized
-    // from a driver-side newline count, not an extra Spark job. The parse
-    // output is persisted FIRST so the range partitioner's bounds-sampling
-    // job and the shuffle read the parsed cache instead of each re-running
-    // the body parse lineage.
+    // Cache layout: range-partitioned on the hidden ingest-order column and
+    // sorted within partitions. Tables estimated at up to 100k rows are ONE
+    // partition. The cached scan reports that layout (range or single
+    // partition) and [__row_id__ ASC] ordering, so the physical planner
+    // drops the pandas-order sort every unordered query issues, and
+    // collect() preserves partition order. Under a limit the planner never
+    // sees that ordering (it plans a heap over every row); for one-partition
+    // tables graft.plans.RemoveCachedOrderSorts removes the sort before
+    // that, so a limited read stops after its rows. Larger tables keep it.
+    // The range shuffle is a one-off at store time; partition count is
+    // sized from a driver-side newline count, not an extra Spark job. The
+    // parse output is persisted FIRST so the range partitioner's
+    // bounds-sampling job and the shuffle read the parsed cache instead of
+    // each re-running the body parse lineage. The row count that
+    // materializes the cache is kept: it is the unsliced length of every
+    // query that keeps all rows.
     val estRows =
       (if (ct == "application/json") text.count(_ == '{')
        else text.count(_ == '\n')).toLong max 1L
@@ -338,7 +344,7 @@ final class GraftServer(spark: SparkSession, port: Int,
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     val rowCount = df.count()
     parsed.unpersist()
-    cache.put(key, df, inMemorySize(df))
+    cache.put(key, df, inMemorySize(df), rowCount)
     stats.inc("size_evict_count", durations.length)
     stats.inc("store_count")
     stats.append("store_row_counts", rowCount.toDouble)
@@ -431,10 +437,8 @@ final class GraftServer(spark: SparkSession, port: Int,
         // renames, milliseconds in practice. Every other failure
         // propagates unchanged on the first attempt.
         def attempt(): (String, Long) = {
-          val result =
-            if (crossDataset || forced)
-              QueryEngine.run(withStandIns, q, resolver)
-            else item.memoizedPlan(memoKey)(QueryEngine.run(withStandIns, q, resolver))
+          def plan = QueryEngine.run(withStandIns, q, resolver, Some(item.rowCount))
+          val result = if (crossDataset || forced) plan else item.memoizedPlan(memoKey)(plan)
           // Response-size guard (OFF by default — full dumps are the
           // reference's contract and the api suite asserts them): the dump
           // path collects the whole result to the driver, which is fine at
@@ -468,8 +472,9 @@ final class GraftServer(spark: SparkSession, port: Int,
             throw new HttpFail(413, errorJson(
               s"result exceeds max-result-rows=$maxResultRows; " +
                 "add offset/limit to page the result"))
-          // the served rows usually prove the unsliced length; the
-          // separate count job runs only when they cannot
+          // the served rows or the stored row count usually give the
+          // unsliced length; the separate count job runs only when neither
+          // can
           (text, result.unslicedLength(rowCount))
         }
         // READ-ONLY retries: a maintenance clause that failed mid-write

@@ -110,7 +110,7 @@ object ShapeWarmer {
           val withStandIns =
             graft.sources.Ingest.addStandInColumns(item.df, standIns)
           val result = item.memoizedPlan(key)(
-            graft.engine.QueryEngine.run(withStandIns, q, _ => None))
+            graft.engine.QueryEngine.run(withStandIns, q, _ => None, Some(item.rowCount)))
           // materialize: run the finalized plan without collecting rows
           // to the driver (an InternalRow count, not a new count() plan)
           val _ = result.df.queryExecution.toRdd.count()

@@ -492,6 +492,147 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(page("""{"offset": -1, "limit": 1}""") == ("""[{"foo":3,"bar":"ccc"}]""", "3"))
   }
 
+  /** A query answered by the shared server, after any shape warm-up has
+    * drained: (status, body, unsliced-length header, Spark jobs run). */
+  def counted(key: String, q: String, headers: (String, String)*): (Int, String, String, Int) = {
+    graft.server.ShapeWarmer.drain()
+    var b = req(s"/dataset/$key?q=" + java.net.URLEncoder.encode(q, UTF_8)).GET()
+    headers.foreach { case (k, v) => b = b.header(k, v) }
+    val (r, jobs) = TestSpark.jobsDuring(send(b.build()))
+    (r.statusCode(), r.body(),
+      r.headers().firstValue("X-QCache-unsliced-length").orElse(""), jobs)
+  }
+
+  def tenRows(key: String): Unit = {
+    graft.server.ShapeWarmer.clear()
+    val csv = "a,b\n" + (1 to 10).map(i => s"$i,${i % 3}").mkString("\n") + "\n"
+    assert(storeCsv(key, csv).statusCode() == 201)
+  }
+
+  def aValues(body: String): Seq[Int] =
+    "\"a\":(\\d+)".r.findAllMatchIn(body).map(_.group(1).toInt).toSeq
+
+  test("pagination: full pages of row-keeping queries take the stored row count, no count job") {
+    tenRows("len1")
+    // every one is a full page, so the served rows cannot prove the length
+    val (s1, b1, l1, j1) = counted("len1", """{"offset": 2, "limit": 3}""")
+    assert((s1, aValues(b1), l1, j1) == (200, Seq(3, 4, 5), "10", 1))
+    val (_, b2, l2, j2) = counted("len1",
+      """{"select": ["a", ["=", "c", ["+", "a", 1]]], "order_by": ["-a"], "limit": 2}""")
+    assert((b2, l2, j2) == ("""[{"a":10,"c":11},{"a":9,"c":10}]""", "10", 1))
+    val (_, b3, l3, j3) = counted("len1", """{"select": ["a", "extra"], "limit": 2}""",
+      "X-QCache-stand-in-columns" -> "extra=7")
+    assert((b3, l3, j3) == ("""[{"a":1,"extra":7},{"a":2,"extra":7}]""", "10", 1))
+    // an update re-counts the swapped frame
+    val u = send(req("/dataset/len1/q").POST(BodyPublishers.ofString(
+      """{"update": [["b", 9]], "where": ["==", "a", 1]}""")).build())
+    assert(u.statusCode() == 200)
+    val (_, b4, l4, j4) = counted("len1", """{"limit": 2}""")
+    assert((b4, l4, j4) == ("""[{"a":1,"b":9},{"a":2,"b":2}]""", "10", 1))
+  }
+
+  test("pagination: row-dropping queries still count their pre-slice rows") {
+    tenRows("len2")
+    // the same shapes unsliced: the served rows prove the length, so these
+    // jobs only answer the query
+    def jobsUnsliced(q: String): Int = counted("len2", q)._4
+    def check(sliced: String, unsliced: String, length: String): Unit = {
+      val (status, _, l, jobs) = counted("len2", sliced)
+      assert(status == 200, sliced)
+      assert(l == length, sliced)
+      assert(jobs > jobsUnsliced(unsliced), s"$sliced must run its count job")
+    }
+    check("""{"where": [">", "a", 2], "limit": 3}""", """{"where": [">", "a", 2]}""", "8")
+    check("""{"distinct": ["b"], "limit": 2}""", """{"distinct": ["b"]}""", "3")
+    check("""{"select": [["sum", "a"]], "limit": 1}""", """{"select": [["sum", "a"]]}""", "1")
+    check("""{"from": {"select": ["a"]}, "where": [">", "a", 4], "limit": 2}""",
+      """{"from": {"select": ["a"]}, "where": [">", "a", 4]}""", "6")
+  }
+
+  test("pagination: negative slices count once, or not at all for row-keeping queries") {
+    tenRows("len3")
+    val (_, b1, l1, j1) = counted("len3", """{"offset": -5}""")
+    assert((aValues(b1), l1, j1) == (6 to 10, "10", 1))
+    val (_, b2, l2, j2) = counted("len3", """{"limit": -3}""")
+    assert((aValues(b2), l2, j2) == (1 to 7, "10", 1))
+    // a filtered negative slice counts at plan-build time; the header
+    // reuses that count instead of running a second one. A full filtered
+    // page runs its collect plus the count, which sizes one count.
+    val filteredCount = counted("len3", """{"where": [">", "a", 2], "limit": 3}""")._4 - 1
+    val (_, b3, l3, j3) = counted("len3", """{"where": [">", "a", 2], "offset": -5}""")
+    assert((aValues(b3), l3) == (6 to 10, "8"))
+    assert(j3 == filteredCount + 1)
+    val (_, b4, l4, j4) = counted("len3", """{"where": [">", "a", 2], "limit": -3}""")
+    assert((aValues(b4), l4) == (3 to 7, "8"))
+    assert(j4 == filteredCount + 1)
+  }
+
+  /** Plans over a frame exactly as the server cached it. */
+  object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    def run(key: String, q: String): (Seq[Long], Boolean, Seq[String]) = {
+      val df = graft.engine.QueryEngine.run(server.cache.peek(key).get.df, q).df
+      val rows = df.collect().map(_.getAs[Number]("a").longValue).toSeq
+      val logicalSort = df.queryExecution.optimizedPlan.exists {
+        case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s.global
+        case _ => false
+      }
+      (rows, logicalSort, collect(df.queryExecution.executedPlan) { case p => p.nodeName })
+    }
+    def unsorted(key: String, q: String, limitNode: String = "CollectLimit"): Seq[Long] = {
+      val (rows, logicalSort, nodes) = run(key, q)
+      assert(!logicalSort, q)
+      assert(nodes.contains(limitNode), s"$q: $nodes")
+      assert(!nodes.exists(n => n == "Sort" || n == "TakeOrderedAndProject" || n == "Exchange"),
+        s"$q: $nodes")
+      rows
+    }
+    def sorted(key: String, q: String): Seq[Long] = {
+      val (rows, logicalSort, _) = run(key, q)
+      assert(logicalSort, q)
+      rows
+    }
+  }
+
+  test("limited reads of a one-partition cache skip the row-order sort and keep ingest order") {
+    val csv = "a,b\n" + (1 to 1000).map(i => s"$i,${i % 7}").mkString("\n") + "\n"
+    assert(storeCsv("ord1", csv).statusCode() == 201)
+    assert(Plans.unsorted("ord1", """{"offset": 10, "limit": 5}""") == (11L to 15L))
+    assert(Plans.unsorted("ord1", """{"where": [">", "a", 500], "limit": 3}""") ==
+      Seq(501L, 502L, 503L))
+    assert(Plans.unsorted("ord1", """{"select": ["a"], "limit": 3}""") == Seq(1L, 2L, 3L))
+    assert(Plans.unsorted("ord1", """{"from": {"limit": 20}, "where": [">", "a", 5], "limit": 4}""") ==
+      Seq(6L, 7L, 8L, 9L))
+    // below the top of the plan a limit is a GlobalLimit, not a CollectLimit
+    assert(Plans.unsorted("ord1", """{"from": {"limit": 20}, "where": [">", "a", 5]}""",
+      limitNode = "GlobalLimit") == (6L to 20L))
+    // rows merged or reordered by the query keep their sort
+    assert(Plans.sorted("ord1", """{"distinct": ["b"], "limit": 3}""") == Seq(1L, 2L, 3L))
+    assert(Plans.sorted("ord1", """{"select": ["b", ["max", "a"]], "group_by": ["b"]}""") ==
+      (994L to 1000L))
+    assert(Plans.sorted("ord1", """{"order_by": ["-a"], "limit": 3}""") == Seq(1000L, 999L, 998L))
+    assert(Plans.sorted("ord1",
+      """{"where": ["in", "b", {"where": ["==", "a", 3]}], "limit": 3}""") == Seq(3L, 10L, 17L))
+    // and over HTTP the page reads the same rows
+    assert(query("ord1", """{"offset": 10, "limit": 2}""").body() ==
+      """[{"a":11,"b":4},{"a":12,"b":5}]""")
+  }
+
+  test("limited reads of a multi-partition cache keep their sort and ingest order") {
+    val n = 120000 // over the store's 50k rows per partition: two partitions
+    val csv = (1 to n).map(i => s"$i,${i % 7}").mkString("a,b\n", "\n", "\n")
+    assert(storeCsv("ord2", csv).statusCode() == 201)
+    val sizes = server.cache.peek("ord2").get.df.rdd
+      .mapPartitions(it => Iterator(it.size)).collect().toSeq
+    assert(sizes.length == 2 && sizes.sum == n)
+    val edge = sizes.head.toLong // last row of the first partition
+    assert(Plans.sorted("ord2", s"""{"offset": ${edge - 3}, "limit": 6}""") ==
+      ((edge - 2) to (edge + 3)))
+    assert(Plans.sorted("ord2", s"""{"where": [">", "a", ${edge - 2}], "limit": 4}""") ==
+      ((edge - 1) to (edge + 2)))
+    assert(Plans.sorted("ord2", s"""{"from": {"offset": ${edge - 1}, "limit": 3}}""") ==
+      (edge to (edge + 2)))
+  }
+
   test("small responses are not held back by delayed ACKs") {
     // Nagle plus the client's delayed ACK put ~40 ms on every small
     // response without TCP_NODELAY; one client reuses one connection

@@ -202,6 +202,40 @@ class EngineProjectSpec extends AnyFunSuite {
     assert(rows(runQ(basicFrame, """{"limit": -5}""").df) == Nil)
   }
 
+  test("a known table row count is the unsliced length of row-keeping queries, with no job") {
+    def length(q: String, tableRows: Option[Long]): (Long, Int) = {
+      val r = QueryEngine.run(basicFrame, Query.parse(q), XopEngine.NoResolver, tableRows)
+      TestSpark.jobsDuring(r.unslicedLength)
+    }
+    for (q <- Seq("""{"limit": 1}""", """{"select": ["foo"], "offset": 1, "limit": 1}""",
+        """{"select": ["foo", ["=", "x", "baz"]], "order_by": ["-x"], "limit": 1}""",
+        """{"from": {"select": ["foo", "baz"]}, "limit": 1}""", """{"where": [], "limit": 1}"""))
+      assert(length(q, Some(3L)) == ((3L, 0)), q)
+    // clauses that may drop or merge rows, and a from that does, count
+    for ((q, n) <- Seq(
+        """{"where": [">", "baz", 5], "limit": 1}""" -> 2L,
+        """{"distinct": ["qux"], "limit": 1}""" -> 2L,
+        """{"select": [["count"]], "limit": 1}""" -> 1L,
+        """{"select": ["qux", ["sum", "baz"]], "group_by": ["qux"], "limit": 1}""" -> 2L,
+        """{"from": {"limit": 2}, "limit": 1}""" -> 2L,
+        """{"from": {"where": [">", "baz", 5]}, "limit": 1}""" -> 2L)) {
+      val (len, jobs) = length(q, Some(3L))
+      assert(len == n && jobs > 0, q)
+    }
+    val (len, jobs) = length("""{"limit": 1}""", None)
+    assert(len == 3L && jobs > 0)
+  }
+
+  test("a negative slice's plan-build count is reused as the unsliced length") {
+    for (q <- Seq("""{"where": [">", "baz", 5], "offset": -1}""",
+                  """{"where": [">", "baz", 5], "limit": -1}""")) {
+      val (r, buildJobs) = TestSpark.jobsDuring(runQ(basicFrame, q))
+      assert(buildJobs > 0, q)
+      assert(TestSpark.jobsDuring(r.unslicedLength(1)) == ((2L, 0)), q)
+      assert(rows(r.df).length == 1, q)
+    }
+  }
+
   // --- calculations / aliasing (test_qframe.py:417-555) ---
   test("column aliasing") {
     assert(rows(runQ(calculationFrame, """{"select": [["=", "baz", "foo"]]}""").df, "baz") ==

@@ -22,4 +22,24 @@ object TestSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** `body`'s result and the number of Spark jobs that started while it
+    * ran. Events already queued are delivered first, so jobs of earlier
+    * actions do not count; background work (the shape warmer) must be
+    * drained by the caller. */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.GraftTestShims.drainListeners(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      org.apache.spark.GraftTestShims.drainListeners(sc)
+      (result, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
