@@ -2,7 +2,7 @@ package graft.engine
 
 import scala.collection.Map
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Decontaminate, Embeddings, Joins, Multimodal,
@@ -187,13 +187,13 @@ object XopEngine {
     case None => default
   }
 
-  /** Load a persisted IVF quantizer named by an `index` arg. The value is
-    * a RELATIVE path resolved under the `spark.graft.index.root` session
+  /** Resolve an `index` arg to an artifact path. The value is a
+    * RELATIVE path resolved under the `spark.graft.index.root` session
     * conf (the server sets it from `--index-root`): an HTTP query must
     * never name an arbitrary server filesystem path, and with no root
     * configured the argument is rejected outright. Load failures surface
     * as 400s (the artifact's name/content is part of the query), not
-    * 500s. */
+    * 500s — see [[loadArtifact]]. */
   private def indexPath(df: DataFrame, raw: Any, op: String): String = {
     val rel = raw match {
       case s: String if s.nonEmpty => s
@@ -209,56 +209,13 @@ object XopEngine {
     s"${root.stripSuffix("/")}/$rel"
   }
 
-  private def loadIndex(df: DataFrame, raw: Any, op: String): Seq[Seq[Double]] =
-    try graft.ops.IvfIndex.load(df.sparkSession, indexPath(df, raw, op))
-    catch {
-      case e: IllegalArgumentException =>
-        Errors.malformed(s"xop '$op': ${e.getMessage}")
-      case e: org.apache.spark.sql.AnalysisException =>
-        Errors.malformed(s"xop '$op': unreadable index artifact: ${e.getMessage}")
-    }
-
-  /** Load a persisted Bloom-exclusion sketch named by an `index` arg —
-    * same root resolution and failure taxonomy as [[loadIndex]]. */
-  private def loadBloom(df: DataFrame, raw: Any,
-                        op: String): graft.ops.BloomIndex.Artifact =
-    try graft.ops.BloomIndex.loadWithMeta(df.sparkSession, indexPath(df, raw, op))
-    catch {
-      case e: IllegalArgumentException =>
-        Errors.malformed(s"xop '$op': ${e.getMessage}")
-      case e: org.apache.spark.sql.AnalysisException =>
-        Errors.malformed(s"xop '$op': unreadable index artifact: ${e.getMessage}")
-    }
-
-  /** Load a persisted MinHash signature index named by an `index` arg —
-    * same root resolution and failure taxonomy as [[loadIndex]]. */
-  private def loadMinhash(df: DataFrame, raw: Any,
-                          op: String): graft.ops.MinHashIndex.Artifact =
-    try graft.ops.MinHashIndex.load(df.sparkSession, indexPath(df, raw, op))
-    catch {
-      case e: IllegalArgumentException =>
-        Errors.malformed(s"xop '$op': ${e.getMessage}")
-      case e: org.apache.spark.sql.AnalysisException =>
-        Errors.malformed(s"xop '$op': unreadable index artifact: ${e.getMessage}")
-    }
-
-  /** Load a persisted decontamination gram index named by an `index`
-    * arg — same root resolution and failure taxonomy as [[loadIndex]]. */
-  private def loadDecont(df: DataFrame, raw: Any,
-                         op: String): graft.ops.DecontIndex.Artifact =
-    try graft.ops.DecontIndex.load(df.sparkSession, indexPath(df, raw, op))
-    catch {
-      case e: IllegalArgumentException =>
-        Errors.malformed(s"xop '$op': ${e.getMessage}")
-      case e: org.apache.spark.sql.AnalysisException =>
-        Errors.malformed(s"xop '$op': unreadable index artifact: ${e.getMessage}")
-    }
-
-  /** Load a persisted vocabulary named by an `index` arg — same root
-    * resolution and failure taxonomy as [[loadIndex]]. */
-  private def loadVocab(df: DataFrame, raw: Any,
-                        op: String): graft.ops.VocabIndex.Artifact =
-    try graft.ops.VocabIndex.load(df.sparkSession, indexPath(df, raw, op))
+  /** Load the persisted artifact named by an `index` arg through the
+    * family's `load`: root resolution as in [[indexPath]], and every
+    * load failure (missing, foreign, older/newer format, corrupt) is a
+    * 400. */
+  private def loadArtifact[A](df: DataFrame, raw: Any, op: String)
+                             (load: (SparkSession, String) => A): A =
+    try load(df.sparkSession, indexPath(df, raw, op))
     catch {
       case e: IllegalArgumentException =>
         Errors.malformed(s"xop '$op': ${e.getMessage}")
@@ -535,7 +492,7 @@ object XopEngine {
                 for (k <- Seq("num_hashes", "shingle") if args.contains(k))
                   Errors.malformed(
                     s"xop '$name': the index fixes '$k' — drop the argument")
-                val art = loadMinhash(df, raw, name)
+                val art = loadArtifact(df, raw, name)(graft.ops.MinHashIndex.load)
                 if (bands <= 0 || art.numHashes % bands != 0)
                   Errors.malformed(s"xop '$name': bands must divide the " +
                     s"index's num_hashes=${art.numHashes}")
@@ -650,12 +607,12 @@ object XopEngine {
         val textCol = column(df, args, "column", name)
         args.get("index") match {
           case Some(raw) =>
-            val art = loadVocab(df, raw, name)
+            val art = loadArtifact(df, raw, name)(graft.ops.VocabIndex.load)
             // free identity tripwire: the artifact records which column
             // its vocabulary was built over
-            for (built <- art.textCol if built != textCol)
+            if (art.textCol != textCol)
               Errors.malformed(
-                s"xop '$name': vocabulary was built over column '$built', " +
+                s"xop '$name': vocabulary was built over column '${art.textCol}', " +
                   s"this query reads '$textCol' — fix 'column' or rebuild")
             if (boolArg(args, "verify_index", default = false, name))
               try graft.ops.VocabIndex.verifyContent(art, "vocabulary",
@@ -987,7 +944,7 @@ object XopEngine {
             if (args.contains("k") || args.contains("iters"))
               Errors.malformed(
                 s"xop '$name': 'index' excludes 'k'/'iters' (no build runs)")
-            loadIndex(df, args("index"), name)
+            loadArtifact(df, args("index"), name)(graft.ops.IvfIndex.load)
           } else args.get("centroids") match {
             case Some(raw) =>
               if (args.contains("k") || args.contains("iters"))
@@ -1158,7 +1115,7 @@ object XopEngine {
                 Errors.malformed(
                   s"xop '$name': 'index' excludes 'cells' (the artifact fixes the quantizer)")
               Similarity.ivfTopKWith(df, queries, id, vec, k,
-                loadIndex(df, raw, name),
+                loadArtifact(df, raw, name)(graft.ops.IvfIndex.load),
                 nProbe = intArg(args, "probe", 4, name).toInt)
             case None => Similarity.ivfTopK(df, queries, id, vec, k,
               nCells = intArg(args, "cells", 64, name).toInt,
@@ -1360,7 +1317,7 @@ object XopEngine {
             if (args.contains("n"))
               Errors.malformed(
                 s"xop '$name': the index fixes 'n' — drop the argument")
-            val art = loadDecont(df, raw, name)
+            val art = loadArtifact(df, raw, name)(graft.ops.DecontIndex.load)
             if (boolArg(args, "verify_index", default = false, name)) {
               val evalDf0 = dataset("eval")
               val evalCol = args.get("eval_column")
@@ -1584,7 +1541,7 @@ object XopEngine {
               Errors.malformed(
                 s"xop '$name': 'index' excludes '$fixed' (the artifact fixes " +
                   "the signature parameters)")
-            val art = loadMinhash(df, raw, name)
+            val art = loadArtifact(df, raw, name)(graft.ops.MinHashIndex.load)
             if (art.numHashes % nb != 0)
               Errors.malformed(
                 s"xop '$name': bands must divide the index's num_hashes=${art.numHashes}")
@@ -1599,15 +1556,14 @@ object XopEngine {
               for (c <- Seq(cid, ccol) if !ExprCompiler.hasColumn(corpus, c))
                 Errors.malformed(s"xop '$name': corpus dataset has no column", c)
               // FREE identity tripwires first (schema-only)
-              for (built <- art.idCol if built != cid)
+              if (art.idCol != cid)
                 Errors.malformed(
-                  s"xop '$name': minhash index was built over column '$built', " +
+                  s"xop '$name': minhash index was built over column '${art.idCol}', " +
                     s"this query verifies against '$cid' — fix 'corpus_id' or rebuild")
-              for (built <- art.idType;
-                   now = corpus.schema(cid).dataType.catalogString
-                   if built != now)
+              val now = corpus.schema(cid).dataType.catalogString
+              if (art.idType != now)
                 Errors.malformed(
-                  s"xop '$name': minhash index was built over $built ids, " +
+                  s"xop '$name': minhash index was built over ${art.idType} ids, " +
                     s"corpus column '$cid' is $now — rebuild the artifact")
               try graft.ops.MinHashIndex.verifyContent(art, "minhash index",
                 corpus, cid, ccol)
@@ -1661,7 +1617,7 @@ object XopEngine {
         val raw = args.getOrElse("index",
           Errors.malformed(s"xop '$name': 'index' is required (the artifact to refresh)"))
         val path = indexPath(df, raw, name)
-        val before = loadMinhash(df, raw, name)
+        val before = loadArtifact(df, raw, name)(graft.ops.MinHashIndex.load)
         val art =
           try graft.ops.MinHashIndex.update(df.sparkSession, path, df, id, textCol)
           catch {
@@ -1669,8 +1625,7 @@ object XopEngine {
               Errors.malformed(s"xop '$name': ${e.getMessage}")
           }
         import df.sparkSession.implicits._
-        Seq((before.nDocs.getOrElse(-1L), art.nDocs.getOrElse(-1L),
-          art.contentFingerprint.getOrElse(""),
+        Seq((before.nDocs, art.nDocs, art.contentFingerprint,
           art.contentFingerprint != before.contentFingerprint))
           .toDF("n_docs_before", "n_docs", "fingerprint", "changed")
 
@@ -1683,7 +1638,7 @@ object XopEngine {
         val raw = args.getOrElse("index",
           Errors.malformed(s"xop '$name': 'index' is required (the artifact to refresh)"))
         val path = indexPath(df, raw, name)
-        val before = loadBloom(df, raw, name)
+        val before = loadArtifact(df, raw, name)(graft.ops.BloomIndex.loadWithMeta)
         val removed = args.get("removed").map { _ =>
           val rdf = dataset("removed")
           val rid = args.get("removed_id")
@@ -1705,9 +1660,7 @@ object XopEngine {
               Errors.malformed(s"xop '$name': ${e.getMessage}")
           }
         import df.sparkSession.implicits._
-        Seq((before.nIds.getOrElse(-1L), art.nIds.getOrElse(-1L),
-          art.nInserted.getOrElse(-1L),
-          art.contentFingerprint.getOrElse(""),
+        Seq((before.nIds, art.nIds, art.nInserted, art.contentFingerprint,
           art.contentFingerprint != before.contentFingerprint))
           .toDF("n_ids_before", "n_ids", "n_inserted", "fingerprint", "changed")
 
@@ -1728,7 +1681,7 @@ object XopEngine {
           intArg(args, "max_slabs", graft.ops.VocabIndex.DefaultMaxSlabs, name)
         if (vuMaxSlabs < 0 || vuMaxSlabs > Int.MaxValue)
           Errors.malformed(s"xop '$name': 'max_slabs' must be >= 0", vuMaxSlabs)
-        val before = loadVocab(df, raw, name)
+        val before = loadArtifact(df, raw, name)(graft.ops.VocabIndex.load)
         val art =
           try graft.ops.VocabIndex.update(df.sparkSession, path, df, textCol,
             vuMaxSlabs.toInt)
@@ -1737,9 +1690,8 @@ object XopEngine {
               Errors.malformed(s"xop '$name': ${e.getMessage}")
           }
         import df.sparkSession.implicits._
-        Seq((before.nDocs.getOrElse(-1L), art.nDocs.getOrElse(-1L),
-          art.nTokens.getOrElse(-1L), art.theta.getOrElse(-1L),
-          art.contentFingerprint.getOrElse(""),
+        Seq((before.nDocs, art.nDocs, art.nTokens, art.theta.getOrElse(-1L),
+          art.contentFingerprint,
           art.contentFingerprint != before.contentFingerprint))
           .toDF("n_docs_before", "n_docs", "n_tokens", "theta",
             "fingerprint", "changed")
@@ -1756,7 +1708,7 @@ object XopEngine {
         val slab = intArg(args, "slab", -1L, name)
         if (slab < 0)
           Errors.malformed(s"xop '$name': 'slab' is required (a recorded slab id)")
-        val before = loadVocab(df, raw, name)
+        val before = loadArtifact(df, raw, name)(graft.ops.VocabIndex.load)
         val art =
           try graft.ops.VocabIndex.removeSlab(df.sparkSession, path, slab)
           catch {
@@ -1764,10 +1716,9 @@ object XopEngine {
               Errors.malformed(s"xop '$name': ${e.getMessage}")
           }
         import df.sparkSession.implicits._
-        Seq((before.nDocs.getOrElse(-1L), art.nDocs.getOrElse(-1L),
-          art.nTokens.getOrElse(-1L), art.theta.getOrElse(-1L),
+        Seq((before.nDocs, art.nDocs, art.nTokens, art.theta.getOrElse(-1L),
           art.slabs.map(_.length.toLong).getOrElse(-1L),
-          art.contentFingerprint.getOrElse("")))
+          art.contentFingerprint))
           .toDF("n_docs_before", "n_docs", "n_tokens", "theta",
             "n_slabs", "fingerprint")
 
@@ -1786,7 +1737,7 @@ object XopEngine {
         val keepLast = intArg(args, "keep_last", 2L, name)
         if (keepLast < 0)
           Errors.malformed(s"xop '$name': keep_last must be >= 0")
-        val before = loadVocab(df, raw, name)
+        val before = loadArtifact(df, raw, name)(graft.ops.VocabIndex.load)
         val art =
           try graft.ops.VocabIndex.compactSlabs(df.sparkSession, path, keepLast.toInt)
           catch {
@@ -1796,8 +1747,7 @@ object XopEngine {
         import df.sparkSession.implicits._
         Seq((before.slabs.map(_.length.toLong).getOrElse(-1L),
           art.slabs.map(_.length.toLong).getOrElse(-1L),
-          art.nDocs.getOrElse(-1L), art.theta.getOrElse(-1L),
-          art.contentFingerprint.getOrElse(""),
+          art.nDocs, art.theta.getOrElse(-1L), art.contentFingerprint,
           art.slabs.map(_.length) != before.slabs.map(_.length)))
           .toDF("n_slabs_before", "n_slabs", "n_docs", "theta",
             "fingerprint", "changed")
@@ -1816,7 +1766,7 @@ object XopEngine {
         val path = indexPath(df, raw, name)
         val iters = intArg(args, "iters", 1, name).toInt
         if (iters < 0) Errors.malformed(s"xop '$name': iters must be >= 0")
-        val before = loadIndex(df, raw, name)
+        val before = loadArtifact(df, raw, name)(graft.ops.IvfIndex.load)
         val refined =
           try graft.ops.IvfIndex.refine(df.sparkSession, path, df, vecCol, iters)
           catch {
@@ -1920,26 +1870,25 @@ object XopEngine {
             if (args.contains("fpp"))
               Errors.malformed(
                 s"xop '$name': 'index' excludes 'fpp' (no sketch build runs)")
-            val art = loadBloom(df, raw, name)
+            val art = loadArtifact(df, raw, name)(graft.ops.BloomIndex.loadWithMeta)
             // FREE identity tripwires (schema-only): a sketch probed
             // through a different column or type silently under-deletes
             // (probe-negative rows skip the rescue anti-join), and the
             // row-count tripwire below cannot see a same-size
             // column/type mismatch
-            for (built <- art.idCol if built != exclId)
+            if (art.idCol != exclId)
               Errors.malformed(
-                s"xop '$name': bloom index was built over column '$built', " +
+                s"xop '$name': bloom index was built over column '${art.idCol}', " +
                   s"this query excludes on '$exclId' — rebuild or fix 'exclude_id'")
-            for (built <- art.idType;
-                 now = excl.schema(exclId).dataType.catalogString
-                 if built != now)
+            val now = excl.schema(exclId).dataType.catalogString
+            if (art.idType != now)
               Errors.malformed(
-                s"xop '$name': bloom index was built over $built ids, " +
+                s"xop '$name': bloom index was built over ${art.idType} ids, " +
                   s"exclude column '$exclId' is $now — rebuild the artifact")
             // STRONG opt-in check: recompute the content fingerprint
             // (one column-pruned aggregation over the list) — catches
             // the same-count swap the free tripwires cannot; reuses the
-            // artifact loadBloom just fetched (no second storage read)
+            // artifact just loaded (no second storage read)
             if (boolArg(args, "verify_index", default = false, name))
               try graft.ops.BloomIndex.verifyContent(art,
                 "bloom index", excl, exclId)
@@ -1955,12 +1904,11 @@ object XopEngine {
             // exclusion would silently under-delete. A same-size swap
             // still slips through — rebuilding on refresh is the
             // contract; this catches the common append-only drift.
-            for (built <- art.nIds;
-                 now <- org.apache.spark.sql.GraftSqlShims.exactRowCountOf(excl)
-                 if now != built)
+            for (rows <- org.apache.spark.sql.GraftSqlShims.exactRowCountOf(excl)
+                 if rows != art.nIds)
               Errors.malformed(
-                s"xop '$name': bloom index is stale (built over $built rows, " +
-                  s"exclude dataset now has $now) — rebuild the artifact")
+                s"xop '$name': bloom index is stale (built over ${art.nIds} rows, " +
+                  s"exclude dataset now has $rows) — rebuild the artifact")
             Dedup.excludeByBloomWith(df, id, art.bytes, excl, exclId)
           case None =>
             if (args.contains("verify_index"))
@@ -2020,7 +1968,7 @@ object XopEngine {
               s"xop '$name': 'index' excludes 'id'/'k'/'iters' (no build runs)")
           Similarity.clusterAssignWith(df,
             vectorColumn(df, args, "column", name),
-            loadIndex(df, args("index"), name))
+            loadArtifact(df, args("index"), name)(graft.ops.IvfIndex.load))
         } else args.get("centroids") match {
           case Some(raw) =>
             // explicit-centroid assignment (x42b): no build, pure argmax;

@@ -5,7 +5,7 @@ package graft.ops
   * read-modify-write cycle over `<path>/manifest.json` plus staged data
   * moves; the HTTP server runs requests on a thread pool, so two
   * concurrent maintenance calls on the SAME artifact path could
-  * interleave those cycles — both read manifest v1, both write their own
+  * interleave those cycles — both read the same manifest, both write their own
   * successor, and one update's registry entries (or Bloom delta, or
   * refined centroids) silently vanish. Wrapping each mutating entry
   * point in [[withWriteLock]] serializes writers per normalized path so
@@ -38,7 +38,7 @@ package graft.ops
   * canonical root, so filesystem aliasing of the same directory through
   * different spellings is not a supported layout). READS are not locked:
   * loads resolve the manifest in one read and every mutation publishes
-  * its manifest ATOMICALLY ([[publishManifest]]: write a hidden temp
+  * its manifest ATOMICALLY ([[ArtifactStore.publishManifest]]: write a hidden temp
   * file, then a rename-with-OVERWRITE — atomic on POSIX local
   * filesystems and HDFS), so an unlocked reader sees either the old or
   * the new manifest bytes, never a truncated or partial file (the
@@ -47,197 +47,8 @@ package graft.ops
   */
 object ArtifactLock {
 
-  /** Atomically publish `json` as `<path>/manifest.json`: write to a
-    * hidden sibling temp file, then rename over the target with
-    * OVERWRITE via FileContext — the one rename Hadoop guarantees
-    * atomic on local POSIX filesystems and HDFS alike. Readers racing
-    * the publish see complete old bytes or complete new bytes; there is
-    * no moment where the manifest is missing or truncated. Shared by
-    * all four artifact kinds' writers. */
-  def publishManifest(spark: org.apache.spark.sql.SparkSession,
-                      path: String, json: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val tmp = new org.apache.hadoop.fs.Path(path,
-      s".manifest.json.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val fs = p.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val scheme = Option(fs.getUri.getScheme).getOrElse("file")
-    try {
-      if (scheme == "file" || scheme == "local") {
-        // POSIX rename: the only rename that is truly atomic-with-replace
-        // on a local filesystem. Hadoop's local FileContext rename with
-        // OVERWRITE deletes the destination FIRST (a missing-manifest
-        // window the ArtifactRaceSpec hammer actually caught under load).
-        val dir = java.nio.file.Paths.get(
-          new org.apache.hadoop.fs.Path(path).toUri.getPath)
-        java.nio.file.Files.move(dir.resolve(tmp.getName), dir.resolve(p.getName),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } else {
-        // HDFS-class filesystems implement rename-with-OVERWRITE
-        // atomically at the namenode
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-        fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      }
-    } catch { case e: Throwable =>
-      // a failed rename must not leak the hidden temp (nothing else ever
-      // cleans a live-JVM failure; crash leftovers are swept by
-      // pruneGenerations). The publish itself still failed — rethrow.
-      try fs.delete(tmp, false) catch { case _: Exception => () }
-      throw e
-    }
-  }
-
-  /** Publish driver-held `bytes` as `<dir>/<name>` WITHOUT a Spark job:
-    * write a hidden sibling temp, rename into place. The artifact
-    * writers used to round-trip such payloads (sketch bytes, centroid
-    * lists) through a 1-row/1-file parquet WRITE ACTION, paying the
-    * full fixed per-action cost (~300 ms of planning + stage scheduling
-    * + commit at ANY size — ProfileWriteOverhead, round 20) to move
-    * bytes the driver already held; the paired load paid a collect
-    * action to get them back. The payloads are driver-scale by
-    * construction (a serialized BloomFilter, nCells×dim doubles), so a
-    * plain filesystem write is the honest cost. Readers are safe the
-    * same way parquet was: the file is complete and renamed into place
-    * BEFORE the manifest points at its generation dir, and loads of a
-    * pruned generation heal through [[retryingLoad]]. */
-  private[graft] def writeBytesFile(spark: org.apache.spark.sql.SparkSession,
-                                    dir: String, name: String,
-                                    bytes: Array[Byte]): Unit = {
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(d)
-    val tmp = new org.apache.hadoop.fs.Path(d,
-      s".$name.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(d, name)
-    // generation dirs are fresh per mutation, but a hand-managed path
-    // may reuse one — clear any stale target so the rename cannot fail
-    // into a half-published state
-    try fs.delete(dst, false) catch { case _: Exception => () }
-    if (!fs.rename(tmp, dst)) {
-      try fs.delete(tmp, false) catch { case _: Exception => () }
-      throw new IllegalStateException(s"could not publish $dst")
-    }
-  }
-
-  /** Read `<file>` fully into driver memory (None when absent). The
-    * read side of [[writeBytesFile]] — no Spark job. A prune racing the
-    * exists/open window surfaces as FileNotFoundException, which
-    * [[retryingLoad]]'s classifier already treats as a maintenance race
-    * and heals with a fresh manifest resolve. */
-  private[graft] def readBytesFile(spark: org.apache.spark.sql.SparkSession,
-                                   file: String): Option[Array[Byte]] = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](1 << 16)
-        var n = in.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-        Some(bos.toByteArray)
-      } finally in.close()
-    }
-  }
-
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Generation-suffixed data-relation directory name: generation 0 is
-    * the bare legacy name (pre-generation artifacts load unchanged),
-    * generation N > 0 is `<base>-N`. Mutations write the NEXT
-    * generation's dirs and repoint the (atomically published) manifest
-    * (`data_gen`) — an unlocked reader that resolved the old manifest
-    * keeps reading the old generation's files, which stay on disk until
-    * the generation after next prunes them. In-place Overwrite/swap
-    * gave racing readers missing dirs and vanished footers
-    * (ArtifactRaceSpec). */
-  private[graft] def genDirName(base: String, gen: Long): String =
-    if (gen <= 0L) base else s"$base-$gen"
-
-  /** The existing artifact's data generation, when `path` already holds
-    * one: None for a fresh path; an unreadable/legacy manifest reads as
-    * generation 0 (so a rebuild over it writes generation 1 and never
-    * truncates dirs a reader may hold open). */
-  private[graft] def currentDataGen(spark: org.apache.spark.sql.SparkSession,
-                                    path: String): Option[Long] = {
-    val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mPath)) None
-    else try {
-      val in = fs.open(mPath)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      graft.engine.QueryJson.parse(text) match {
-        case m: scala.collection.Map[String @unchecked, Any @unchecked] =>
-          Some(m.get("data_gen") match {
-            case Some(l: Long) if l >= 0 => l
-            case _ => 0L
-          })
-        case _ => Some(0L)
-      }
-    } catch { case _: Exception => Some(0L) }
-  }
-
-  /** How many PRIOR generations a prune keeps alive for unlocked
-    * readers. One was not enough: a load is manifest-read → parquet-read
-    * (plus the scan's captured file listing), so a reader that resolved
-    * generation N keeps touching N's files for a visible span — and two
-    * back-to-back saves inside that span would delete N under it
-    * (exactly the ArtifactRaceSpec IVF failure round 18's final suite
-    * run produced). K=2 means a reader must lag THREE whole saves to
-    * lose its directory, and [[retryingLoad]] heals even that. These
-    * relations are artifact-sized (a sketch row, nCells centroids, a
-    * vocab), so the extra kept generation is bytes, not data-scale. */
-  private[graft] val KeepGenerations = 2L
-
-  /** Best-effort cleanup AFTER a new generation's manifest published:
-    * delete the named bases' generations older than `newGen -
-    * KeepGenerations` (the previous TWO generations stay alive for
-    * readers that resolved an older manifest around the publish). Crash
-    * between publish and prune just leaves extra dirs for the next
-    * mutation's prune. Also sweeps orphaned `.manifest.json.*.tmp`
-    * files a crashed publish left behind (only ones old enough that no
-    * in-flight publish from another JVM can still own them). */
-  private[graft] def pruneGenerations(spark: org.apache.spark.sql.SparkSession,
-                                      path: String, bases: Seq[String],
-                                      newGen: Long,
-                                      keep: Long = KeepGenerations): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val pat = ("^(" + bases.mkString("|") + ")(?:-([0-9]+))?$").r
-    // crash leftovers next to the manifest: orphaned publish temps and
-    // takeover claims a crashed contender never deleted
-    val tmpPat = "^(\\.manifest\\.json\\..*\\.tmp|\\.maintenance\\.lease\\.takeover\\..*)$".r
-    val staleTmpMs = 60000L
-    try {
-      val now = System.currentTimeMillis()
-      fs.listStatus(root).foreach { st =>
-        st.getPath.getName match {
-          case pat(_, g) =>
-            val gen = Option(g).map(_.toLong).getOrElse(0L)
-            if (gen < newGen - keep) fs.delete(st.getPath, true)
-          case n if tmpPat.findFirstIn(n).isDefined &&
-              now - st.getModificationTime > staleTmpMs =>
-            fs.delete(st.getPath, false)
-          case _ => ()
-        }
-      }
-    } catch { case e: Exception =>
-      // cleanup is best-effort (the new generation is already live) —
-      // but a silently-swallowed auth/permission error repeating on
-      // every save deserves a trace
-      log.warn(s"generation prune at $path failed (kept going): $e")
-    }
-  }
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -290,7 +101,7 @@ object ArtifactLock {
     * (GraftServer's query attempt loop): generation prunes and shard
     * swaps are milliseconds wide, so two re-resolutions close the
     * window a lagging reader can still hit even with
-    * [[KeepGenerations]] prior generations kept. Every other failure
+    * [[ArtifactStore.KeepGenerations]] prior generations kept. Every other failure
     * propagates unchanged on the first attempt. `f` must be a pure
     * read. */
   def retryingLoad[T](f: => T): T = {
@@ -304,6 +115,18 @@ object ArtifactLock {
     }
     throw new IllegalStateException("unreachable")
   }
+
+  /** Bounded re-plan retry for library-level PROBES of a lazy artifact
+    * relation (MinHash signatures, decontamination grams): runs `use`
+    * against a fresh `load` and, when the ACTION fails because
+    * maintenance deleted files the plan captured (a MinHash shard swap
+    * or a generation prune — [[isMissingInputFile]]), loads again and
+    * re-runs, up to twice. The reload is what heals: it resolves a fresh
+    * manifest and file listing. `use` must be a pure read and must
+    * contain the action (collect/count/write), not just the plan, or the
+    * retry guards nothing. The library twin of the HTTP server's re-plan
+    * retry. */
+  def probeRetrying[A, T](load: => A)(use: A => T): T = retryingLoad(use(load))
 
   /** Normalize a path string to its lock key: Hadoop Path normalization
     * (collapses `//`, strips trailing `/`) so the spellings one caller

@@ -1,9 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import scala.collection.mutable
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Persistable Bloom-exclusion artifact — the [[IvfIndex]] pattern
   * applied to [[Dedup.excludeByBloom]]'s sketch.
@@ -11,26 +10,26 @@ import scala.collection.mutable
   * The Bloom build is the per-refresh cost of id exclusion: one full
   * aggregation job over the exclusion list (10^9-id lists are normal for
   * a "never re-train on these" ledger), re-paid by every session that
-  * excludes against it. This artifact persists the built sketch:
+  * excludes against it. This artifact persists the built sketch
+  * (format v2, manifest and generations through [[ArtifactStore]]):
   *
   *   - `<path>/bloom[-g]/sketch.bin` — the serialized `BloomFilter`
   *     bytes as a raw file (Spark's own writeTo format; bit-array
   *     OR-merge makes the build order-independent, so the bytes are
-  *     deterministic for a given list + parameters). Written and read
-  *     via the filesystem API — the bytes are driver-held on both
-  *     sides, so no Spark action is spent moving them (round-21 trim);
-  *     artifacts from before the trim stored a one-row parquet relation
-  *     `(bloom BINARY)` in the same dir, which loads unchanged.
-  *   - `<path>/manifest.json` — format version + build parameters
-  *     (n_items estimate, fpp, byte length as an integrity check), the
-  *     id column's NAME and TYPE (a sketch probed through a different
-  *     column or type silently under-deletes — the consumer validates
-  *     both for free), and an order-independent CONTENT fingerprint of
-  *     the id list (exact decimal sum of xxhash64(id) — append, remove
-  *     and replace all move it, unlike a bit-xor where a same-count
-  *     pair swap can cancel; the count tripwire alone cannot see a
-  *     same-size swap). Written via the Hadoop FileSystem API (any
-  *     Spark-reachable filesystem).
+  *     deterministic for a given list + parameters). The bytes are
+  *     driver-held on both sides, so no Spark action moves them.
+  *   - `<path>/manifest.json` — the build parameters (fpp, the sizing
+  *     `n_items_built` and the exact `n_hash_functions`), the byte
+  *     length as an integrity check, the id column's NAME and TYPE (a
+  *     sketch probed through a different column or type silently
+  *     under-deletes — the consumer validates both for free), the list's
+  *     row count `n_ids`, the cumulative non-null insert load
+  *     `n_inserted`, and an order-independent CONTENT fingerprint of the
+  *     id list (exact decimal sum of xxhash64(id) — append, remove and
+  *     replace all move it, unlike a bit-xor where a same-count pair
+  *     swap can cancel; the count tripwire alone cannot see a same-size
+  *     swap). All of them are mandatory; `fpp_estimate` is recorded
+  *     once an [[update]] ran.
   *
   * The artifact is sketch-only by design: the exact exclusion ids stay
   * wherever the pipeline already keeps them (they are still needed for
@@ -60,7 +59,8 @@ object BloomIndex {
   final class SketchOutgrownException(message: String)
     extends IllegalArgumentException(message)
 
-  val FormatVersion = 1
+  val FormatVersion = 2
+  private val Kind = "bloom_exclusion"
 
   /** Order-independent content fingerprint of `df`'s id list: the exact
     * decimal sum of xxhash64 over the raw (non-distinct) column — one
@@ -75,56 +75,54 @@ object BloomIndex {
   def fingerprint(df: DataFrame, idCol: String): String =
     fingerprintAndCount(df, idCol)._1
 
-  /** Marker for the CURRENT fingerprint formula, recorded in the
-    * manifest: "zero" = null ids contribute 0. Artifacts whose manifest
-    * lacks the marker predate the null-neutral change (their formula
-    * folded xxhash64's seed per null row); the two formulas agree on any
-    * null-free list, so verification of such artifacts proceeds normally
-    * unless the current list actually contains nulls — then it demands a
-    * rebuild with a precise error instead of a misleading "stale". */
-  val FingerprintNullsZero = "zero"
+  /** The fingerprint sum, the exact row count and the null-id count —
+    * one aggregation, or observed metrics riding a sketch build. */
+  private def fingerprintExprs(idCol: String): Seq[Column] = Seq(
+    sum(when(col(idCol).isNotNull, xxhash64(col(idCol))).otherwise(lit(0L))
+      .cast("decimal(38,0)")).as("fp"),
+    count(lit(1)).as("n"),
+    count(when(col(idCol).isNull, lit(1))).as("n_null"))
 
-  /** [[fingerprint]], the exact list row count, and the null-id count,
-    * all from the SAME aggregation pass. */
-  private def fingerprintAndCount(df: DataFrame, idCol: String): (String, Long, Long) = {
-    val row = df.agg(
-      sum(when(col(idCol).isNotNull, xxhash64(col(idCol))).otherwise(lit(0L))
-        .cast("decimal(38,0)")).as("fp"),
-      count(lit(1)).as("n"),
-      count(when(col(idCol).isNull, lit(1))).as("n_null")).head()
+  /** [[fingerprint]] and the exact list row count from one pass. */
+  private def fingerprintAndCount(df: DataFrame, idCol: String): (String, Long) = {
+    val e = fingerprintExprs(idCol)
+    val row = df.agg(e.head, e.tail: _*).head()
     (Option(row.getDecimal(0)).map(d => BigDecimal(d).toBigInt.toString)
-      .getOrElse("0"), row.getLong(1), row.getLong(2))
+      .getOrElse("0"), row.getLong(1))
+  }
+
+  /** `df` with [[fingerprintExprs]] observed into `obs`. */
+  private def observedFingerprint(df: DataFrame, idCol: String,
+                                  obs: org.apache.spark.sql.Observation): DataFrame = {
+    val e = fingerprintExprs(idCol)
+    df.observe(obs, e.head, e.tail: _*)
+  }
+
+  /** (fingerprint, rows, null ids) from an [[observedFingerprint]]. */
+  private def observed(obs: org.apache.spark.sql.Observation): (String, Long, Long) = {
+    val m = obs.get
+    (Observed.decimalSum(m, "fp").toString, Observed.long(m, "n"),
+      Observed.long(m, "n_null"))
   }
 
   /** Build the sketch over `exclude`'s id column (the same build
     * [[Dedup.excludeByBloom]] runs inline) and persist it at `path`.
     * The manifest's row count, null count and content fingerprint ride
-    * the sketch-building aggregation as observed metrics (same
-    * expressions as [[fingerprintAndCount]], one evaluation per row),
-    * so the build scans the exclusion list exactly once instead of
-    * paying a second pass. Returns the serialized bytes. */
+    * the sketch-building aggregation as observed metrics, so the build
+    * scans the exclusion list exactly once. An empty or all-null list
+    * persists an empty sketch that excludes nothing. Returns the
+    * serialized bytes. */
   def buildAndSave(exclude: DataFrame, idCol: String, fpp: Double,
                    path: String): Array[Byte] =
       ArtifactLock.withWriteLock(path) {
     val nItems = Dedup.bloomSizing(exclude)
     val obs = org.apache.spark.sql.Observation()
-    val observed = exclude.observe(obs,
-      sum(when(col(idCol).isNotNull, xxhash64(col(idCol))).otherwise(lit(0L))
-        .cast("decimal(38,0)")).as("fp"),
-      count(lit(1)).as("n"),
-      count(when(col(idCol).isNull, lit(1))).as("n_null"))
-    val bytes = Dedup.buildBloomSized(observed, idCol, nItems, fpp)
-    val m = obs.get
-    val (fp, n, nNull) = (Observed.decimalSum(m, "fp").toString,
-      Observed.long(m, "n"), Observed.long(m, "n_null"))
-    save(exclude.sparkSession, path, bytes, fpp = fpp,
-      nIds = Some(n),
-      idCol = Some(idCol),
-      idType = Some(exclude.schema(idCol).dataType.catalogString),
-      contentFingerprint = Some(fp),
-      nItemsBuilt = Some(nItems),
-      nInserted = Some(n - nNull),
-      nHashFunctions = Some(numHashFunctions(nItems, fpp).toLong))
+    val bytes = Dedup.buildBloomSized(observedFingerprint(exclude, idCol, obs),
+      idCol, nItems, fpp)
+    val (fp, n, nNull) = observed(obs)
+    save(exclude.sparkSession, path, Artifact(bytes, n, idCol,
+      exclude.schema(idCol).dataType.catalogString, fp, fpp, nItems,
+      n - nNull, numHashFunctions(nItems, fpp).toLong))
     bytes
   }
 
@@ -138,73 +136,42 @@ object BloomIndex {
     * honesty guard. Recorded in the manifest at build time so the
     * estimate never reconstructs. */
   private[graft] def numHashFunctions(nItems: Long, fpp: Double): Int = {
-    val m = org.apache.spark.util.sketch.BloomFilter
-      .optimalNumOfBits(nItems, fpp)
+    val m = BloomFilter.optimalNumOfBits(nItems, fpp)
     math.max(1, math.round(m.toDouble / nItems * math.log(2)).toInt)
   }
 
-  /** Loaded artifact: the sketch bytes plus whatever build metadata the
-    * artifact recorded (all optional — hand-built manifests may omit
-    * them; every recorded field is validated at use time). `fpp` /
+  /** Loaded artifact: the sketch bytes plus its build metadata. `fpp` /
     * `nItemsBuilt` are the sketch's BUILD parameters (together they
     * determine the bit-array shape — [[update]] needs both);
     * `nInserted` counts every non-null id ever hashed INTO the sketch,
     * monotone under updates (removals leave bits set), the load the
-    * false-positive estimate is computed from. */
-  final case class Artifact(bytes: Array[Byte], nIds: Option[Long],
-                            idCol: Option[String] = None,
-                            idType: Option[String] = None,
-                            contentFingerprint: Option[String] = None,
-                            fingerprintNulls: Option[String] = None,
-                            fpp: Option[Double] = None,
-                            nItemsBuilt: Option[Long] = None,
-                            nInserted: Option[Long] = None,
-                            nHashFunctions: Option[Long] = None)
+    * false-positive estimate is computed from; `nIds` and
+    * `contentFingerprint` track the CURRENT ledger. */
+  final case class Artifact(bytes: Array[Byte], nIds: Long, idCol: String,
+                            idType: String, contentFingerprint: String,
+                            fpp: Double, nItemsBuilt: Long, nInserted: Long,
+                            nHashFunctions: Long)
 
-  /** Persist already-built sketch bytes at `path` (overwrite). */
-  def save(spark: SparkSession, path: String, bytes: Array[Byte],
-           fpp: Double, nIds: Option[Long] = None,
-           idCol: Option[String] = None, idType: Option[String] = None,
-           contentFingerprint: Option[String] = None,
-           nItemsBuilt: Option[Long] = None,
-           nInserted: Option[Long] = None,
-           fppEstimate: Option[Double] = None,
-           nHashFunctions: Option[Long] = None): Unit =
-      ArtifactLock.withWriteLock(path) {
-    require(bytes.nonEmpty, "bloom bytes must be non-empty")
-    // generationed sketch dir (the vocab pattern): write the NEXT
-    // generation's dir, repoint the manifest atomically, prune older —
-    // an in-place Overwrite raced unlocked readers with missing files.
-    // The sketch bytes are DRIVER-HELD, so they go down as a raw file
-    // ([[ArtifactLock.writeBytesFile]]) instead of the former 1-row
-    // parquet write ACTION — one fewer ~300 ms fixed-cost Spark job per
-    // save at any scale (round-21 trim; loads read pre-trim parquet
-    // sketches unchanged).
-    val newGen: Long =
-      ArtifactLock.currentDataGen(spark, path).map(_ + 1L).getOrElse(0L)
-    ArtifactLock.writeBytesFile(spark,
-      s"$path/${ArtifactLock.genDirName("bloom", newGen)}", "sketch.bin", bytes)
-    val manifest = mutable.LinkedHashMap[String, Any](
-      "version" -> FormatVersion,
-      "kind" -> "bloom_exclusion",
-      "fpp" -> fpp,
-      "data_gen" -> newGen,
-      "n_bytes" -> bytes.length.toLong) ++
-      nIds.map("n_ids" -> _.asInstanceOf[Any]) ++
-      idCol.map("id_col" -> _.asInstanceOf[Any]) ++
-      idType.map("id_type" -> _.asInstanceOf[Any]) ++
-      contentFingerprint.map("fingerprint" -> _.asInstanceOf[Any]) ++
-      contentFingerprint.map(_ =>
-        "fingerprint_nulls" -> FingerprintNullsZero.asInstanceOf[Any]) ++
-      nItemsBuilt.map("n_items_built" -> _.asInstanceOf[Any]) ++
-      nInserted.map("n_inserted" -> _.asInstanceOf[Any]) ++
-      nHashFunctions.map("n_hash_functions" -> _.asInstanceOf[Any]) ++
-      fppEstimate.map("fpp_estimate" -> _.asInstanceOf[Any])
-    // temp + atomic rename: an unlocked reader must never see a
-    // truncated manifest (ArtifactLock.publishManifest)
-    ArtifactLock.publishManifest(spark, path,
-      graft.engine.QueryJson.write(manifest))
-    ArtifactLock.pruneGenerations(spark, path, Seq("bloom"), newGen)
+  /** Persist `art` as the next generation at `path`: the sketch as a
+    * raw file in a fresh generation dir, then the manifest repointed
+    * atomically and older generations pruned ([[ArtifactStore]]).
+    * Caller holds the write lock. */
+  private def save(spark: SparkSession, path: String, art: Artifact,
+                   fppEstimate: Option[Double] = None): Unit = {
+    val newGen = ArtifactStore.nextGen(spark, path)
+    ArtifactStore.writeBytesFile(spark,
+      s"$path/${ArtifactStore.genDirName("bloom", newGen)}", "sketch.bin", art.bytes)
+    ArtifactStore.publish(spark, path, Kind, FormatVersion, newGen, Seq(
+      "fpp" -> art.fpp,
+      "n_bytes" -> art.bytes.length.toLong,
+      "n_ids" -> art.nIds,
+      "id_col" -> art.idCol,
+      "id_type" -> art.idType,
+      "fingerprint" -> art.contentFingerprint,
+      "n_items_built" -> art.nItemsBuilt,
+      "n_inserted" -> art.nInserted,
+      "n_hash_functions" -> art.nHashFunctions) ++
+      fppEstimate.map("fpp_estimate" -> _), Seq("bloom"))
   }
 
   /** Load a persisted sketch. Fails fast (IllegalArgumentException) on a
@@ -213,75 +180,24 @@ object BloomIndex {
     loadWithMeta(spark, path).bytes
 
   /** Load a persisted sketch with its manifest metadata. Every failure
-    * mode — missing, foreign, corrupt, unparsable manifest, missing
-    * sketch parquet — surfaces as IllegalArgumentException (the
-    * documented fail-fast contract; raw parse/read exceptions are
-    * wrapped so direct-API consumers can catch one type). A load racing
-    * concurrent saves is retried bounded ([[ArtifactLock.retryingLoad]]
-    * — re-resolves the manifest on a pruned-generation read failure). */
+    * mode — missing, foreign, older/newer format, a missing or mistyped
+    * field, an unreadable or mis-sized sketch — surfaces as
+    * IllegalArgumentException. A load racing concurrent saves is
+    * retried bounded ([[ArtifactLock.retryingLoad]] — re-resolves the
+    * manifest on a pruned-generation read failure). */
   def loadWithMeta(spark: SparkSession, path: String): Artifact =
-    ArtifactLock.retryingLoad(loadWithMetaOnce(spark, path))
+    ArtifactLock.retryingLoad(loadOnce(spark, path))
 
-  private def loadWithMetaOnce(spark: SparkSession, path: String): Artifact = {
-    val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mPath))
-      throw new IllegalArgumentException(
-        s"no bloom index at $path (missing manifest.json)")
-    val in = fs.open(mPath)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val parsed =
-      try graft.engine.QueryJson.parse(text)
-      catch { case e: Exception => throw new IllegalArgumentException(
-        s"malformed bloom manifest at $path: ${e.getMessage}") }
-    val manifest = parsed match {
-      case m: scala.collection.Map[String @unchecked, Any @unchecked] => m
-      case _ => throw new IllegalArgumentException(
-        s"malformed bloom manifest at $path")
-    }
-    if (!manifest.get("kind").contains("bloom_exclusion"))
-      throw new IllegalArgumentException(
-        s"artifact at $path is not a bloom exclusion (kind=${manifest.get("kind")})")
-    if (!manifest.get("version").contains(FormatVersion.toLong))
-      throw new IllegalArgumentException(
-        s"unsupported bloom index version ${manifest.get("version")} at $path")
-    val dataGen: Long = manifest.get("data_gen") match {
-      case Some(l: Long) if l >= 0 => l
-      case _ => 0L
-    }
-    val genDir = s"$path/${ArtifactLock.genDirName("bloom", dataGen)}"
-    // raw sketch file first (current writers — a plain driver read, no
-    // Spark job); artifacts written before the round-21 trim fall back
-    // to the 1-row parquet collect
-    val bytes = ArtifactLock.readBytesFile(spark, s"$genDir/sketch.bin")
-      .getOrElse {
-        val rows =
-          try spark.read.parquet(genDir).collect()
-          catch { case e: org.apache.spark.sql.AnalysisException =>
-            // cause attached: retryingLoad's classifier walks the chain to
-            // tell a maintenance race (PATH_NOT_FOUND) from real corruption
-            throw new IllegalArgumentException(
-              s"bloom index at $path is corrupt: unreadable sketch: ${e.getMessage}", e) }
-        if (rows.length != 1)
-          throw new IllegalArgumentException(
-            s"bloom index at $path is corrupt: expected one sketch row, got ${rows.length}")
-        rows.head.getAs[Array[Byte]]("bloom")
-      }
-    if (bytes == null || !manifest.get("n_bytes").contains(bytes.length.toLong))
-      throw new IllegalArgumentException(
-        s"bloom index at $path is corrupt: byte length disagrees with manifest")
-    Artifact(bytes,
-      manifest.get("n_ids").collect { case l: Long => l },
-      manifest.get("id_col").collect { case s: String => s },
-      manifest.get("id_type").collect { case s: String => s },
-      manifest.get("fingerprint").collect { case s: String => s },
-      manifest.get("fingerprint_nulls").collect { case s: String => s },
-      manifest.get("fpp").collect { case d: Double => d },
-      manifest.get("n_items_built").collect { case l: Long => l },
-      manifest.get("n_inserted").collect { case l: Long => l },
-      manifest.get("n_hash_functions").collect { case l: Long => l })
+  private def loadOnce(spark: SparkSession, path: String): Artifact = {
+    val m = ArtifactStore.read(spark, path, Kind, FormatVersion, "bloom index")
+    val bytes = ArtifactStore.readBytesFile(spark, m,
+      s"${ArtifactStore.genDirName("bloom", m.dataGen)}/sketch.bin", "sketch")
+    if (bytes.length.toLong != m.long("n_bytes"))
+      m.corrupt(s"sketch holds ${bytes.length} bytes, manifest records " +
+        m.long("n_bytes"))
+    Artifact(bytes, m.long("n_ids"), m.string("id_col"), m.string("id_type"),
+      m.string("fingerprint"), m.double("fpp"), m.long("n_items_built"),
+      m.long("n_inserted"), m.long("n_hash_functions"))
   }
 
   /** STRONG staleness check: recompute the content fingerprint of the
@@ -290,8 +206,7 @@ object BloomIndex {
     * cannot. One column-pruned aggregation job over the list (so NOT on
     * the default query path — opt in per query via the xop
     * `verify_index` flag, or call this after a ledger refresh).
-    * IllegalArgumentException on mismatch or when the artifact predates
-    * fingerprints. */
+    * IllegalArgumentException on mismatch. */
   def verifyContent(spark: SparkSession, path: String,
                     exclude: DataFrame, idCol: String): Unit =
     verifyContent(loadWithMeta(spark, path), s"bloom index at $path",
@@ -302,26 +217,12 @@ object BloomIndex {
     * manifest+sketch read. `what` names the artifact in errors. */
   def verifyContent(art: Artifact, what: String,
                     exclude: DataFrame, idCol: String): Unit = {
-    val recorded = art.contentFingerprint.getOrElse(
-      throw new IllegalArgumentException(
-        s"$what records no content fingerprint " +
-          "(pre-fingerprint artifact) — rebuild it to enable verification"))
-    val (current, _, nNull) = fingerprintAndCount(exclude, idCol)
-    // formula-generation guard: an artifact without the nulls marker was
-    // fingerprinted under the old formula (seed folded per null row).
-    // Both formulas agree on null-free lists, so verification proceeds
-    // there; with nulls present the comparison would be apples-to-
-    // oranges — demand a rebuild with the real reason, not "stale"
-    if (art.fingerprintNulls.isEmpty && nNull > 0)
-      throw new IllegalArgumentException(
-        s"$what predates the null-neutral fingerprint formula and the " +
-          s"exclude list contains $nNull null ids — rebuild the artifact " +
-          "to verify it")
-    if (current != recorded)
+    val current = fingerprint(exclude, idCol)
+    if (current != art.contentFingerprint)
       throw new IllegalArgumentException(
         s"$what is stale: exclude list content changed " +
-          s"(fingerprint $current, artifact built over $recorded) — " +
-          "rebuild the artifact")
+          s"(fingerprint $current, artifact built over " +
+          s"${art.contentFingerprint}) — rebuild the artifact")
   }
 
   /** INCREMENTAL sketch maintenance — the [[MinHashIndex.update]]
@@ -355,13 +256,10 @@ object BloomIndex {
     * Preconditions: `removed` rows must be exactly the rows that LEFT
     * the ledger (same multiplicity — the fingerprint is a sum over raw
     * rows; a removal count exceeding the recorded ledger size fails
-    * fast as an obviously-wrong delta); the artifact must record its
-    * build sizing (n_items_built; artifacts from before incremental
-    * maintenance need one rebuild) and use the null-neutral fingerprint
-    * formula. An empty delta returns the loaded artifact without
-    * writing. Like the MinHash swap, the rewrite assumes a
-    * single-writer refresh window: nothing should load the artifact
-    * mid-update. */
+    * fast as an obviously-wrong delta). An empty delta returns the
+    * loaded artifact without writing. Like the MinHash swap, the
+    * rewrite assumes a single-writer refresh window: nothing should
+    * load the artifact mid-update. */
   def update(spark: SparkSession, path: String,
              added: DataFrame, addedIdCol: String,
              removed: Option[(DataFrame, String)] = None,
@@ -369,101 +267,59 @@ object BloomIndex {
       ArtifactLock.withWriteLock(path) {
     val art = loadWithMeta(spark, path)
     val what = s"bloom index at $path"
-    def need[A](o: Option[A], field: String): A = o.getOrElse(
-      throw new IllegalArgumentException(
-        s"$what records no $field — rebuild it once with buildAndSave " +
-          "to enable incremental updates"))
-    val fpp = need(art.fpp, "fpp")
-    val nItemsBuilt = need(art.nItemsBuilt, "n_items_built")
-    val nInserted = need(art.nInserted, "n_inserted")
-    val oldFp = BigInt(need(art.contentFingerprint, "content fingerprint"))
-    val oldN = need(art.nIds, "n_ids")
-    if (art.fingerprintNulls.isEmpty)
-      throw new IllegalArgumentException(
-        s"$what predates the null-neutral fingerprint formula — rebuild it once")
     // same identity tripwires the probe path enforces: a delta hashed
     // through a different column name or type would silently diverge
     // from the ledger the sketch claims to cover
     def checkSide(df: DataFrame, c: String, side: String): Unit = {
       Dedup.requireIntegralId(df, c, s"$side id")
-      for (built <- art.idCol if built != c)
+      if (art.idCol != c)
         throw new IllegalArgumentException(
-          s"$what was built over column '$built', $side uses '$c'")
-      for (built <- art.idType;
-           now = df.schema(c).dataType.catalogString if built != now)
+          s"$what was built over column '${art.idCol}', $side uses '$c'")
+      val now = df.schema(c).dataType.catalogString
+      if (art.idType != now)
         throw new IllegalArgumentException(
-          s"$what was built over $built ids, $side column '$c' is $now")
+          s"$what was built over ${art.idType} ids, $side column '$c' is $now")
     }
     checkSide(added, addedIdCol, "added")
     removed.foreach { case (df, c) => checkSide(df, c, "removed") }
     // the added side's fingerprint/counts ride the added-side sketch
     // build as observed metrics (the buildAndSave discipline): one scan
-    // of the delta instead of a fingerprint aggregation PLUS a sketch
-    // aggregation (round-21 trim). The sketch is built unconditionally
-    // — an empty or all-null delta builds an empty filter that is
-    // simply never merged, at the same one-action cost the standalone
-    // fingerprint pass used to spend.
+    // of the delta. An empty or all-null delta builds an empty sketch of
+    // the base's shape, whose merge below sets no bit.
     val addObs = org.apache.spark.sql.Observation()
-    val observedAdded = added.observe(addObs,
-      sum(when(col(addedIdCol).isNotNull, xxhash64(col(addedIdCol)))
-        .otherwise(lit(0L)).cast("decimal(38,0)")).as("fp"),
-      count(lit(1)).as("n"),
-      count(when(col(addedIdCol).isNull, lit(1))).as("n_null"))
-    // an added side with zero non-null ids makes Spark's bloom aggregate
-    // return a null buffer, which stat.bloomFilter NPEs decoding (the
-    // aggregation JOB itself completed — the observed metrics are
-    // posted). That is exactly the case whose sketch is never merged
-    // (nAdd - nAddNull == 0 below), so an absent sketch is the honest
-    // result; the removal-only update in the spec pins this path.
-    val addedSketch: Option[Array[Byte]] =
-      try Some(Dedup.buildBloomSized(observedAdded, addedIdCol, nItemsBuilt, fpp))
-      catch { case _: NullPointerException => None }
-    val mAdd = addObs.get
-    val (addFp, nAdd, nAddNull) = (Observed.decimalSum(mAdd, "fp").toString,
-      Observed.long(mAdd, "n"), Observed.long(mAdd, "n_null"))
-    val (remFp, nRem, _) = removed.map { case (df, c) =>
-      fingerprintAndCount(df, c) }.getOrElse(("0", 0L, 0L))
+    val addedSketch = Dedup.buildBloomSized(
+      observedFingerprint(added, addedIdCol, addObs), addedIdCol,
+      art.nItemsBuilt, art.fpp)
+    val (addFp, nAdd, nAddNull) = observed(addObs)
+    val (remFp, nRem) = removed.map { case (df, c) =>
+      fingerprintAndCount(df, c) }.getOrElse(("0", 0L))
     if (nAdd == 0L && nRem == 0L) return art
-    if (oldN + nAdd - nRem < 0L)
+    if (art.nIds + nAdd - nRem < 0L)
       throw new IllegalArgumentException(
         s"$what: removal of $nRem rows exceeds the ledger the artifact " +
-          s"records ($oldN + $nAdd added) — the delta does not describe " +
+          s"records (${art.nIds} + $nAdd added) — the delta does not describe " +
           "this ledger; rebuild instead")
-    val newInserted = nInserted + (nAdd - nAddNull)
-    // estimated fpp at the new load: k from the manifest when the build
-    // recorded it (exact), else recomputed with the library's own
-    // pre-rounding formula — never reconstructed from bitSize(), whose
-    // round-up to a 64-bit-word multiple puts k off by one near a .5
-    // boundary; m IS the actual bit array length (the real geometry)
-    val base = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(art.bytes))
-    val m = base.bitSize().toDouble
-    val k = art.nHashFunctions
-      .getOrElse(numHashFunctions(nItemsBuilt, fpp).toLong).toDouble
-    val est = math.pow(1.0 - math.exp(-k * newInserted / m), k)
-    if (est > maxFppFactor * fpp)
+    val newInserted = art.nInserted + (nAdd - nAddNull)
+    // estimated fpp at the new load: k is the build's recorded count
+    // (exact — never reconstructed from bitSize(), whose round-up to a
+    // 64-bit-word multiple puts k off by one near a .5 boundary); m IS
+    // the actual bit array length (the real geometry)
+    val base = BloomFilter.readFrom(new java.io.ByteArrayInputStream(art.bytes))
+    val k = art.nHashFunctions.toDouble
+    val est = math.pow(1.0 - math.exp(-k * newInserted / base.bitSize().toDouble), k)
+    if (est > maxFppFactor * art.fpp)
       throw new SketchOutgrownException(
         f"$what has outgrown its sketch: estimated false-positive rate " +
           f"$est%.2g at ${newInserted} inserted ids exceeds $maxFppFactor%.1f× " +
-          f"the built fpp=$fpp%.2g — rebuild the artifact at the new scale")
-    if (nAdd - nAddNull > 0L)
-      base.mergeInPlace(org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(addedSketch.getOrElse(
-          throw new IllegalStateException(
-            s"$what: added-side sketch missing for ${nAdd - nAddNull} ids")))))
+          f"the built fpp=${art.fpp}%.2g — rebuild the artifact at the new scale")
+    base.mergeInPlace(BloomFilter.readFrom(new java.io.ByteArrayInputStream(addedSketch)))
     val bos = new java.io.ByteArrayOutputStream()
     base.writeTo(bos)
-    save(spark, path, bos.toByteArray, fpp = fpp,
-      nIds = Some(oldN + nAdd - nRem),
-      idCol = art.idCol.orElse(Some(addedIdCol)),
-      idType = art.idType.orElse(
-        Some(added.schema(addedIdCol).dataType.catalogString)),
-      contentFingerprint = Some((oldFp + BigInt(addFp) - BigInt(remFp)).toString),
-      nItemsBuilt = Some(nItemsBuilt),
-      nInserted = Some(newInserted),
-      fppEstimate = Some(est),
-      nHashFunctions = Some(art.nHashFunctions.getOrElse(
-        numHashFunctions(nItemsBuilt, fpp).toLong)))
+    save(spark, path, art.copy(bytes = bos.toByteArray,
+      nIds = art.nIds + nAdd - nRem,
+      contentFingerprint =
+        (BigInt(art.contentFingerprint) + BigInt(addFp) - BigInt(remFp)).toString,
+      nInserted = newInserted), fppEstimate = Some(est))
     loadWithMeta(spark, path)
   }
 
@@ -491,8 +347,7 @@ object BloomIndex {
     try (update(spark, path, added, addedIdCol, removed, maxFppFactor), false)
     catch {
       case _: SketchOutgrownException =>
-        val fpp = rebuildFpp.orElse(
-          loadWithMeta(spark, path).fpp).getOrElse(0.01)
+        val fpp = rebuildFpp.getOrElse(loadWithMeta(spark, path).fpp)
         buildAndSave(ledger, ledgerIdCol, fpp, path)
         (loadWithMeta(spark, path), true)
     }

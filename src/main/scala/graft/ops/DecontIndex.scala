@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import scala.collection.mutable
-
 /** Persistable decontamination artifact — the last pipeline family that
   * recomputed its reference side per run, brought to the same
   * manifest/generation/lease posture as [[BloomIndex]]/[[VocabIndex]]/
@@ -22,22 +20,21 @@ import scala.collection.mutable
   *     REFRESH exact: removing a document decrements its grams and only
   *     a count reaching zero leaves the relation — a gram shared by a
   *     surviving document keeps matching.
-  *   - `<path>/bloom[-g]/` — serialized `BloomFilter` over the gram
-  *     hashes, the map-side pre-filter: the train side's exploded
-  *     (doc, gram) relation is probed inside codegen and only
+  *   - `<path>/bloom[-g]/sketch.bin` — serialized `BloomFilter` over
+  *     the gram hashes as a raw file, the map-side pre-filter: the train
+  *     side's exploded (doc, gram) relation is probed inside codegen and only
   *     probe-positive grams (true matches + fpp of the rest) reach the
   *     exact join, so the joined mass is contamination-density-sized,
   *     not corpus-gram-sized. False positives are rescued by the exact
   *     (hash, gram) join against the grams relation — the same
   *     sketch-then-verify posture as [[Dedup.excludeByBloomWith]] — so
   *     results are EXACT regardless of fpp.
-  *   - `<path>/manifest.json` — atomically published
-  *     ([[ArtifactLock.publishManifest]]): format version, the gram
-  *     length `n` (a consumer probing with a different n would silently
-  *     miss every gram — it fails fast instead), fpp, generation,
-  *     gram count, sketch byte length, and an order-independent content
-  *     fingerprint (exact decimal sum of the gram hashes) for
-  *     [[verifyContent]].
+  *   - `<path>/manifest.json` — format v2, atomically published
+  *     ([[ArtifactStore]]), all fields mandatory: the gram length `n` (a
+  *     consumer probing with a different n would silently miss every
+  *     gram — it fails fast instead), fpp, generation, gram count,
+  *     sketch byte length, and an order-independent content fingerprint
+  *     (exact decimal sum of the gram hashes) for [[verifyContent]].
   *
   * Unlike the id-ledger Bloom ([[BloomIndex.update]]), incremental
   * refresh here rebuilds the SKETCH every time: the sketch's input is
@@ -51,20 +48,21 @@ import scala.collection.mutable
   *
   * Mutations run under [[ArtifactLock.withWriteLock]] (process monitor
   * + cross-process fenced lease); generationed relations keep
-  * [[ArtifactLock.KeepGenerations]] prior generations for unlocked
-  * readers and loads retry through [[ArtifactLock.retryingLoad]].
+  * [[ArtifactStore.KeepGenerations]] prior generations for unlocked
+  * readers and loads retry through [[ArtifactLock.retryingLoad]] (lazy
+  * probes through [[ArtifactLock.probeRetrying]]).
   */
 object DecontIndex {
 
-  val FormatVersion = 1
+  val FormatVersion = 2
+  private val Kind = "decont_ngram"
 
   /** A loaded artifact: the distinct eval-gram relation (lazy over the
     * pinned generation — gram-set-sized), the sketch bytes, and the
     * build parameters consumers validate against. */
   final case class Artifact(grams: DataFrame, bloomBytes: Array[Byte],
                             n: Int, fpp: Double, nGrams: Long,
-                            contentFingerprint: Option[String],
-                            dataGen: Long)
+                            contentFingerprint: String, dataGen: Long)
 
   /** The (gram, gh, n_refs) relation for an eval corpus — one explode
     * with per-document dedup, one count aggregation. */
@@ -78,7 +76,9 @@ object DecontIndex {
   /** Derive the eval suite's gram relation and persist grams + sketch +
     * manifest at `path`. The eval corpus is scanned ONCE (the gram
     * derivation); the sketch and fingerprint aggregate over the
-    * just-written gram relation, which is suite-sized. */
+    * just-written gram relation, which is suite-sized. A suite with no
+    * n-gram of length `n` (every document shorter) persists an empty
+    * artifact that flags nothing. */
   def buildAndSave(eval: DataFrame, textCol: String, path: String,
                    n: Int = 8, fpp: Double = 0.01): Artifact = {
     require(n > 0, "n must be positive")
@@ -110,9 +110,8 @@ object DecontIndex {
   private def saveGrams(spark: SparkSession, path: String, grams: DataFrame,
                         n: Int, fpp: Double,
                         abortIf: () => Unit = () => ()): Artifact = {
-    val newGen: Long =
-      ArtifactLock.currentDataGen(spark, path).map(_ + 1L).getOrElse(0L)
-    val gramsDir = s"$path/${ArtifactLock.genDirName("grams", newGen)}"
+    val newGen = ArtifactStore.nextGen(spark, path)
+    val gramsDir = s"$path/${ArtifactStore.genDirName("grams", newGen)}"
     // the gram count and content fingerprint ride the write as observed
     // metrics (the shared artifact-build discipline) — they used to
     // cost a second aggregation over the written parquet
@@ -137,124 +136,40 @@ object DecontIndex {
     val written = spark.read.parquet(gramsDir)
     val bytes = Dedup.buildBloomSized(written, "gh",
       math.max(nGrams, 1L), fpp)
-    // the sketch bytes are driver-held: a raw-file publish
-    // ([[ArtifactLock.writeBytesFile]]) replaces the former 1-row
-    // parquet write ACTION — one fewer fixed-cost Spark job per save
-    // (round-21 trim; pre-trim parquet sketches still load)
-    ArtifactLock.writeBytesFile(spark,
-      s"$path/${ArtifactLock.genDirName("bloom", newGen)}", "sketch.bin", bytes)
-    val manifest = mutable.LinkedHashMap[String, Any](
-      "version" -> FormatVersion,
-      "kind" -> "decont_ngram",
+    // the sketch bytes are driver-held: a raw file, no Spark job
+    ArtifactStore.writeBytesFile(spark,
+      s"$path/${ArtifactStore.genDirName("bloom", newGen)}", "sketch.bin", bytes)
+    ArtifactStore.publish(spark, path, Kind, FormatVersion, newGen, Seq(
       "n" -> n.toLong,
       "fpp" -> fpp,
-      "data_gen" -> newGen,
       "n_grams" -> nGrams,
       "n_bytes" -> bytes.length.toLong,
-      "fingerprint" -> fingerprint)
-    ArtifactLock.publishManifest(spark, path,
-      graft.engine.QueryJson.write(manifest))
-    ArtifactLock.pruneGenerations(spark, path, Seq("grams", "bloom"), newGen)
-    Artifact(written, bytes, n, fpp, nGrams, Some(fingerprint), newGen)
+      "fingerprint" -> fingerprint), Seq("grams", "bloom"))
+    Artifact(written, bytes, n, fpp, nGrams, fingerprint, newGen)
   }
 
   /** Load a persisted artifact. Fails fast (IllegalArgumentException)
     * on a missing/foreign/corrupt artifact; a load racing concurrent
     * saves is retried bounded ([[ArtifactLock.retryingLoad]]). The
     * grams relation comes back LAZY over the pinned generation —
-    * [[ArtifactLock.KeepGenerations]] prior generations outlive later
-    * saves for exactly this reader. */
+    * [[ArtifactStore.KeepGenerations]] prior generations outlive later
+    * saves for exactly this reader; an action racing maintenance
+    * belongs inside [[ArtifactLock.probeRetrying]]. */
   def load(spark: SparkSession, path: String): Artifact =
     ArtifactLock.retryingLoad(loadOnce(spark, path))
 
-  /** Load-and-use with the probe retried through maintenance churn
-    * ([[MinHashIndex.probeRetrying]]'s contract): when `use`'s ACTION
-    * over the lazy grams relation dies on a pruned generation's files
-    * (a reader lagging [[ArtifactLock.KeepGenerations]]+1 saves),
-    * re-load and re-run up to twice — the fresh load resolves a fresh
-    * manifest + file listing. `use` must be a pure read and contain the
-    * action (collect/count/write), not just the plan. */
-  def probeRetrying[T](spark: SparkSession, path: String)
-                      (use: Artifact => T): T =
-    ArtifactLock.retryingLoad(use(loadOnce(spark, path)))
-
   private def loadOnce(spark: SparkSession, path: String): Artifact = {
-    val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mPath))
-      throw new IllegalArgumentException(
-        s"no decontamination index at $path (missing manifest.json)")
-    val in = fs.open(mPath)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val parsed =
-      try graft.engine.QueryJson.parse(text)
-      catch { case e: Exception => throw new IllegalArgumentException(
-        s"malformed decontamination manifest at $path: ${e.getMessage}") }
-    val manifest = parsed match {
-      case m: scala.collection.Map[String @unchecked, Any @unchecked] => m
-      case _ => throw new IllegalArgumentException(
-        s"malformed decontamination manifest at $path")
-    }
-    if (!manifest.get("kind").contains("decont_ngram"))
-      throw new IllegalArgumentException(
-        s"artifact at $path is not a decontamination index " +
-          s"(kind=${manifest.get("kind")})")
-    if (!manifest.get("version").contains(FormatVersion.toLong))
-      throw new IllegalArgumentException(
-        s"unsupported decontamination index version " +
-          s"${manifest.get("version")} at $path")
-    val n = manifest.get("n") match {
-      case Some(l: Long) if l > 0 => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"decontamination index at $path records no gram length (got $other)")
-    }
-    val fpp = manifest.get("fpp") match {
-      case Some(d: Double) => d
-      case _ => 0.01
-    }
-    val dataGen: Long = manifest.get("data_gen") match {
-      case Some(l: Long) if l >= 0 => l
-      case _ => 0L
-    }
-    val nGrams = manifest.get("n_grams") match {
-      case Some(l: Long) if l >= 0 => l
-      case other => throw new IllegalArgumentException(
-        s"decontamination index at $path records no gram count (got $other)")
-    }
-    val bloomGenDir = s"$path/${ArtifactLock.genDirName("bloom", dataGen)}"
-    // raw sketch file first (current writers — no Spark job); pre-trim
-    // artifacts fall back to the 1-row parquet collect
-    val bytes = ArtifactLock.readBytesFile(spark, s"$bloomGenDir/sketch.bin")
-      .getOrElse {
-        val rows =
-          try spark.read.parquet(bloomGenDir).collect()
-          catch { case e: org.apache.spark.sql.AnalysisException =>
-            // cause attached: retryingLoad's classifier walks the chain to
-            // tell a maintenance race (PATH_NOT_FOUND) from real corruption
-            throw new IllegalArgumentException(
-              s"decontamination index at $path is corrupt: unreadable " +
-                s"sketch: ${e.getMessage}", e) }
-        if (rows.length != 1)
-          throw new IllegalArgumentException(
-            s"decontamination index at $path is corrupt: expected one sketch " +
-              s"row, got ${rows.length}")
-        rows.head.getAs[Array[Byte]]("bloom")
-      }
-    if (bytes == null || !manifest.get("n_bytes").contains(bytes.length.toLong))
-      throw new IllegalArgumentException(
-        s"decontamination index at $path is corrupt: sketch byte length " +
-          "disagrees with manifest")
-    val grams =
-      try spark.read.parquet(
-        s"$path/${ArtifactLock.genDirName("grams", dataGen)}")
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"decontamination index at $path is corrupt: unreadable gram " +
-            s"relation: ${e.getMessage}", e) }
-    Artifact(grams, bytes, n, fpp, nGrams,
-      manifest.get("fingerprint").collect { case s: String => s }, dataGen)
+    val m = ArtifactStore.read(spark, path, Kind, FormatVersion,
+      "decontamination index")
+    val bytes = ArtifactStore.readBytesFile(spark, m,
+      s"${ArtifactStore.genDirName("bloom", m.dataGen)}/sketch.bin", "sketch")
+    if (bytes.length.toLong != m.long("n_bytes"))
+      m.corrupt(s"sketch holds ${bytes.length} bytes, manifest records " +
+        m.long("n_bytes"))
+    val grams = ArtifactStore.readRelation(spark, m,
+      ArtifactStore.genDirName("grams", m.dataGen), "gram relation")
+    Artifact(grams, bytes, m.posInt("n"), m.double("fpp"), m.long("n_grams"),
+      m.string("fingerprint"), m.dataGen)
   }
 
   /** STRONG staleness check: re-derive the gram fingerprint from the
@@ -264,19 +179,15 @@ object DecontIndex {
     * refresh). IllegalArgumentException on mismatch. */
   def verifyContent(art: Artifact, what: String,
                     eval: DataFrame, textCol: String): Unit = {
-    val recorded = art.contentFingerprint.getOrElse(
-      throw new IllegalArgumentException(
-        s"$what records no content fingerprint — rebuild it to enable " +
-          "verification"))
     val row = gramCounts(eval, textCol, art.n)
       .agg(sum(col("gh").cast("decimal(38,0)")).as("fp")).head()
     val current = Option(row.getDecimal(0))
       .map(d => BigDecimal(d).toBigInt.toString).getOrElse("0")
-    if (current != recorded)
+    if (current != art.contentFingerprint)
       throw new IllegalArgumentException(
         s"$what is stale: eval suite content changed (fingerprint " +
-          s"$current, artifact built over $recorded) — update or rebuild " +
-          "the artifact")
+          s"$current, artifact built over ${art.contentFingerprint}) — " +
+          "update or rebuild the artifact")
   }
 
   /** INCREMENTAL suite refresh: fold added/removed eval DOCUMENTS into

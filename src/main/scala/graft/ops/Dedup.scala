@@ -1179,14 +1179,30 @@ object Dedup {
 
   /** [[buildBloom]] at an EXPLICIT sizing — the incremental-update path,
     * where the added rows must hash into a bit array shaped exactly like
-    * the base artifact's. */
+    * the base artifact's. Runs the aggregate `stat.bloomFilter` runs,
+    * but decodes its result itself: with no non-null id in the input
+    * (an empty or all-null list) the aggregate's buffer is null, which
+    * `stat.bloomFilter` dereferences into a NullPointerException. The
+    * answer there is the aggregate's own empty buffer — the same
+    * (nItems, numBits) shape with no bit set, so it probes negative
+    * everywhere and merges into a same-sized sketch as a no-op. */
   private[graft] def buildBloomSized(exclude: DataFrame, excludeIdCol: String,
                                      nItems: Long, fpp: Double): Array[Byte] = {
     requireIntegralId(exclude, excludeIdCol, "exclude id")
-    val bf = exclude.stat.bloomFilter(excludeIdCol, nItems, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    bos.toByteArray
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val agg = new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
+      org.apache.spark.sql.GraftSqlShims.expression(col(excludeIdCol)),
+      Literal(nItems),
+      Literal(org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(nItems, fpp)))
+    val bytes = exclude
+      .select(org.apache.spark.sql.GraftSqlShims.column(agg.toAggregateExpression()))
+      .head().getAs[Array[Byte]](0)
+    if (bytes != null) bytes
+    else {
+      val bos = new java.io.ByteArrayOutputStream()
+      agg.createAggregationBuffer().writeTo(bos)
+      bos.toByteArray
+    }
   }
 
   /** The Bloom exclusion's ids must be integral on BOTH sides: the

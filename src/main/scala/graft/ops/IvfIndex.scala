@@ -2,8 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import scala.collection.mutable
-
 /** Persistable coarse-quantizer (IVF / spherical-k-means) index artifact.
   *
   * The quantizer build is the expensive half of [[Similarity.ivfTopK]] /
@@ -19,15 +17,12 @@ import scala.collection.mutable
   *     round-trips, so a loaded quantizer reproduces assignments
   *     BIT-FOR-BIT (pinned in OpsSpec). Written and read via the
   *     filesystem API — the list is driver-held on both sides, so no
-  *     Spark action is spent moving it (round-21 trim); artifacts from
-  *     before the trim stored a one-file parquet relation
-  *     `(cell INT, centroid ARRAY<DOUBLE>)` in the same dir, which
-  *     loads unchanged.
-  *   - `<path>/manifest.json` — format version + build parameters
-  *     (n_cells requested, n_centroids actually built, dim,
-  *     kmeans_iters), written via the Hadoop FileSystem API so the path
-  *     may be any Spark-reachable filesystem (local, HDFS, S3), not just
-  *     the driver's local disk.
+  *     Spark action is spent moving it.
+  *   - `<path>/manifest.json` — format v2 ([[ArtifactStore]]) with the
+  *     mandatory build parameters: n_cells requested, n_centroids
+  *     actually built, dim, kmeans_iters. Everything goes through the
+  *     Hadoop FileSystem API, so the path may be any Spark-reachable
+  *     filesystem (local, HDFS, S3), not just the driver's local disk.
   *
   * The artifact is centroids-only by design: corpus cell ASSIGNMENT is a
   * stateless map-only pass (cheap, and any persisted copy would go stale
@@ -42,7 +37,8 @@ import scala.collection.mutable
   */
 object IvfIndex {
 
-  val FormatVersion = 1
+  val FormatVersion = 2
+  private val Kind = "ivf_coarse_quantizer"
 
   /** Build the quantizer for `corpus` (through the session cache — a
     * warm build is free) and persist it at `path`. Returns the
@@ -80,99 +76,58 @@ object IvfIndex {
     * unchanged and nothing is rewritten (the identity x79b anchors
     * through DuckDB). Seeding from an `iters = 0` artifact on an
     * unchanged corpus reproduces `buildQuantizer(..., iters)`
-    * BIT-FOR-BIT — the parquet round-trip is IEEE-exact and both
+    * BIT-FOR-BIT — the raw-file round-trip is IEEE-exact and both
     * paths normalize the seed the same way (also pinned). */
   def refine(spark: SparkSession, path: String, corpus: DataFrame,
              vecCol: String, iters: Int): Seq[Seq[Double]] =
       ArtifactLock.withWriteLock(path) {
     require(iters >= 0, "iters must be >= 0")
-    val centroids = load(spark, path)
-    if (iters == 0) centroids
+    val q = ArtifactLock.retryingLoad(loadOnce(spark, path))
+    if (iters == 0) q.centroids
     else {
-      val manifest = readManifest(spark, path)
-      val prevIters = manifest.get("kmeans_iters") match {
-        case Some(l: Long) if l >= 0 => l
-        case _ => 0L
-      }
-      val nCells = manifest.get("n_cells") match {
-        case Some(l: Long) if l > 0 && l <= Int.MaxValue => l.toInt
-        case _ => centroids.length
-      }
-      val refined = Similarity.kmeansRefine(corpus, vecCol, centroids, iters)
-      save(spark, path, refined, nCells = nCells,
-        kmeansIters = (prevIters + iters).toInt)
+      val refined = Similarity.kmeansRefine(corpus, vecCol, q.centroids, iters)
+      save(spark, path, refined, nCells = q.nCells,
+        kmeansIters = (q.kmeansIters + iters).toInt)
       refined
     }
   }
 
-  /** Persist an already-built centroid list at `path` (overwrite). */
+  /** Persist an already-built centroid list at `path` (overwrite): the
+    * NEXT generation's raw centroid file, then the manifest repointed
+    * atomically and older generations pruned ([[ArtifactStore]]) — the
+    * refine path rewrites this artifact while unlocked readers may hold
+    * the previous generation. */
   def save(spark: SparkSession, path: String, centroids: Seq[Seq[Double]],
            nCells: Int, kmeansIters: Int): Unit =
       ArtifactLock.withWriteLock(path) {
     require(centroids.nonEmpty, "centroids must be non-empty")
     require(centroids.map(_.length).distinct.size == 1,
       "centroids must share one dimensionality")
-    // nCells×dim doubles — DRIVER-HELD data, published as a raw binary
-    // file (count, dim, then raw IEEE754 bits — bit-exact round-trip,
-    // same exactness guarantee the parquet doubles gave) instead of the
-    // former one-file parquet write ACTION: one fewer ~300 ms
-    // fixed-cost Spark job per save at any scale (round-21 trim;
-    // pre-trim parquet centroid relations still load). Generationed
-    // (the vocab pattern): write the NEXT generation's dir, repoint the
-    // manifest atomically, prune older — an in-place Overwrite (the
-    // refine path rewrites this relation) raced unlocked readers
-    val newGen: Long =
-      ArtifactLock.currentDataGen(spark, path).map(_ + 1L).getOrElse(0L)
-    ArtifactLock.writeBytesFile(spark,
-      s"$path/${ArtifactLock.genDirName("centroids", newGen)}",
+    val newGen = ArtifactStore.nextGen(spark, path)
+    ArtifactStore.writeBytesFile(spark,
+      s"$path/${ArtifactStore.genDirName("centroids", newGen)}",
       "centroids.bin", encodeCentroids(centroids))
-    val manifest = mutable.LinkedHashMap[String, Any](
-      "version" -> FormatVersion,
-      "kind" -> "ivf_coarse_quantizer",
-      "data_gen" -> newGen,
+    ArtifactStore.publish(spark, path, Kind, FormatVersion, newGen, Seq(
       "n_cells" -> nCells.toLong,
       "n_centroids" -> centroids.length.toLong,
       "dim" -> centroids.head.length.toLong,
-      "kmeans_iters" -> kmeansIters.toLong)
-    // temp + atomic rename: an unlocked reader must never see a
-    // truncated manifest (ArtifactLock.publishManifest)
-    ArtifactLock.publishManifest(spark, path,
-      graft.engine.QueryJson.write(manifest))
-    ArtifactLock.pruneGenerations(spark, path, Seq("centroids"), newGen)
+      "kmeans_iters" -> kmeansIters.toLong), Seq("centroids"))
   }
 
-  private def readManifest(spark: SparkSession,
-                           path: String): scala.collection.Map[String, Any] = {
-    val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mPath))
-      throw new IllegalArgumentException(s"no IVF index at $path (missing manifest.json)")
-    val in = fs.open(mPath)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val manifest = graft.engine.QueryJson.parse(text) match {
-      case m: scala.collection.Map[String @unchecked, Any @unchecked] => m
-      case _ => throw new IllegalArgumentException(s"malformed IVF manifest at $path")
-    }
-    if (!manifest.get("kind").contains("ivf_coarse_quantizer"))
-      throw new IllegalArgumentException(
-        s"artifact at $path is not an IVF quantizer (kind=${manifest.get("kind")})")
-    if (!manifest.get("version").contains(FormatVersion.toLong))
-      throw new IllegalArgumentException(
-        s"unsupported IVF index version ${manifest.get("version")} at $path")
-    manifest
-  }
+  /** A loaded quantizer with the build parameters [[refine]] carries
+    * forward. */
+  private final case class Quantizer(centroids: Seq[Seq[Double]],
+                                     nCells: Int, kmeansIters: Long)
 
   /** Load a persisted quantizer. Fails fast (IllegalArgumentException)
     * on a missing/foreign/corrupt artifact rather than returning a
     * half-index. A load racing concurrent saves is retried bounded
-    * ([[ArtifactLock.retryingLoad]]): manifest-read → parquet-read is
+    * ([[ArtifactLock.retryingLoad]]): manifest-read → centroid-read is
     * not atomic, so a reader lagging several saves can still find its
     * resolved generation pruned — the retry re-resolves the manifest
-    * (fresh generation, fresh file listing) and reads again. */
+    * and reads again. */
   def load(spark: SparkSession, path: String): Seq[Seq[Double]] =
-    ArtifactLock.retryingLoad(loadOnce(spark, path))
+    ArtifactLock.retryingLoad(loadOnce(spark, path)).centroids
 
   /** Raw on-disk centroid encoding: int32 count, int32 dim, then
     * count×dim float64 raw bits (DataOutputStream big-endian) —
@@ -187,46 +142,28 @@ object IvfIndex {
     bos.toByteArray
   }
 
-  private def decodeCentroids(path: String, bytes: Array[Byte]): Seq[Seq[Double]] = {
+  private def decodeCentroids(m: ArtifactStore.Manifest,
+                              bytes: Array[Byte]): Seq[Seq[Double]] = {
     val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
     try {
       val n = in.readInt(); val dim = in.readInt()
       if (n <= 0 || dim <= 0 || bytes.length != 8L + n.toLong * dim * 8)
-        throw new IllegalArgumentException(
-          s"IVF index at $path is corrupt: centroid file length " +
-            s"${bytes.length} disagrees with header ($n × $dim)")
+        m.corrupt(s"centroid file length ${bytes.length} disagrees with " +
+          s"header ($n × $dim)")
       Seq.tabulate(n)(_ => Seq.fill(dim)(in.readDouble()))
-    } catch { case _: java.io.EOFException =>
-      throw new IllegalArgumentException(
-        s"IVF index at $path is corrupt: truncated centroid file")
-    }
+    } catch { case _: java.io.EOFException => m.corrupt("truncated centroid file") }
   }
 
-  private def loadOnce(spark: SparkSession, path: String): Seq[Seq[Double]] = {
-    val manifest = readManifest(spark, path)
-    val dataGen: Long = manifest.get("data_gen") match {
-      case Some(l: Long) if l >= 0 => l
-      case _ => 0L
-    }
-    val genDir = s"$path/${ArtifactLock.genDirName("centroids", dataGen)}"
-    // raw centroid file first (current writers — a plain driver read, no
-    // Spark job); pre-trim artifacts fall back to the parquet collect
-    val centroids = ArtifactLock.readBytesFile(spark, s"$genDir/centroids.bin")
-      .map(decodeCentroids(path, _))
-      .getOrElse(spark.read.parquet(genDir)
-        .orderBy("cell")
-        .collect()
-        .map(r => r.getAs[scala.collection.Seq[Double]]("centroid").toSeq)
-        .toSeq)
-    val expected = manifest.get("n_centroids")
-    if (!expected.contains(centroids.length.toLong))
-      throw new IllegalArgumentException(
-        s"IVF index at $path is corrupt: manifest claims $expected centroids, " +
-          s"parquet holds ${centroids.length}")
-    if (centroids.isEmpty || centroids.map(_.length).distinct.size != 1 ||
-        !manifest.get("dim").contains(centroids.head.length.toLong))
-      throw new IllegalArgumentException(
-        s"IVF index at $path is corrupt: centroid dimensionality disagrees with manifest")
-    centroids
+  private def loadOnce(spark: SparkSession, path: String): Quantizer = {
+    val m = ArtifactStore.read(spark, path, Kind, FormatVersion, "IVF index")
+    val centroids = decodeCentroids(m, ArtifactStore.readBytesFile(spark, m,
+      s"${ArtifactStore.genDirName("centroids", m.dataGen)}/centroids.bin",
+      "centroids"))
+    if (centroids.length.toLong != m.long("n_centroids"))
+      m.corrupt(s"manifest claims ${m.long("n_centroids")} centroids, the " +
+        s"centroid file holds ${centroids.length}")
+    if (centroids.head.length.toLong != m.long("dim"))
+      m.corrupt("centroid dimensionality disagrees with manifest")
+    Quantizer(centroids, m.posInt("n_cells"), m.long("kmeans_iters"))
   }
 }

@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import scala.collection.mutable
-
 /** Persistable MinHash signature index — the third artifact kind beside
   * [[IvfIndex]] and [[BloomIndex]], and the one whose data plane is
   * CORPUS-scale: a parquet relation `(id, sig ARRAY<BIGINT>)`, one row
@@ -37,16 +35,19 @@ import scala.collection.mutable
   *     contract, just without the append-locality bonus. Probes are
   *     unaffected — band expansion re-shuffles by (band, bucket)
   *     anyway, and [[load]] drops the shard column so consumers see
-  *     exactly (id, sig, fp). Flat pre-shard layouts still load and
-  *     probe; [[update]] on them falls back to a whole-relation staged
-  *     rewrite.
-  *   - `<path>/manifest.json` — format version, the parameters that make
-  *     signatures comparable (num_hashes, shingle_size — consumers take
-  *     these FROM the artifact; a mismatched batch side would silently
-  *     produce incomparable signatures), the id column's name and type
-  *     (free identity tripwires), the exact doc count, and an
-  *     order-independent content fingerprint of the corpus's (id, text)
-  *     pairs for strong staleness detection.
+  *     exactly (id, sig, fp).
+  *   - `<path>/manifest.json` — format v2 ([[ArtifactStore]]), all
+  *     fields mandatory: the parameters that make signatures comparable
+  *     (num_hashes, shingle_size — consumers take these FROM the
+  *     artifact; a mismatched batch side would silently produce
+  *     incomparable signatures), the id column's name and type (free
+  *     identity tripwires), the exact doc count, an order-independent
+  *     content fingerprint of the corpus's (id, text) pairs for strong
+  *     staleness detection, and the shard layout (`shard_span` for
+  *     integral ids, `n_shards` for the rest — exactly one). The
+  *     relation swaps shards in place instead of writing generations
+  *     (keeping prior generations would double a corpus-sized
+  *     artifact), so its `data_gen` stays 0.
   *
   * Unlike the centroid/sketch artifacts, `load` runs NO Spark job: the
   * signature relation stays a lazy DataFrame. The count tripwire is one
@@ -62,19 +63,17 @@ import scala.collection.mutable
   */
 object MinHashIndex {
 
-  val FormatVersion = 1
+  val FormatVersion = 2
+  private val Kind = "minhash_signatures"
 
   /** Loaded artifact: the LAZY signature relation plus the manifest
-    * parameters. numHashes and shingleSize are mandatory (without them
-    * the signatures are uninterpretable); identity metadata is optional
-    * and validated at use time where recorded. */
+    * parameters. Exactly one of `shardSpan` (integral ids) and
+    * `nShards` (every other id type) is set — the layout's shard
+    * expression. */
   final case class Artifact(sigs: DataFrame, numHashes: Int, shingleSize: Int,
-                            idCol: Option[String] = None,
-                            idType: Option[String] = None,
-                            nDocs: Option[Long] = None,
-                            contentFingerprint: Option[String] = None,
-                            shardSpan: Option[Long] = None,
-                            nShards: Option[Int] = None)
+                            idCol: String, idType: String, nDocs: Long,
+                            contentFingerprint: String,
+                            shardSpan: Option[Long], nShards: Option[Int])
 
   /** Order-independent content fingerprint of the corpus's (id, text)
     * pairs: the exact decimal sum of xxhash64(id, text) — one
@@ -86,12 +85,17 @@ object MinHashIndex {
   def fingerprint(corpus: DataFrame, idCol: String, textCol: String): String =
     fingerprintAndCount(corpus, idCol, textCol)._1
 
+  /** The fingerprint sum and the row count — one aggregation, or
+    * observed metrics riding the signature build. */
+  private def fingerprintExprs(idCol: String, textCol: String) = Seq(
+    sum(xxhash64(Dedup.exactCol(idCol), Dedup.exactCol(textCol))
+      .cast("decimal(38,0)")).as("fp"),
+    count(lit(1)).as("n"))
+
   private def fingerprintAndCount(corpus: DataFrame, idCol: String,
                                   textCol: String): (String, Long) = {
-    val row = corpus.agg(
-      sum(xxhash64(Dedup.exactCol(idCol), Dedup.exactCol(textCol))
-        .cast("decimal(38,0)")).as("fp"),
-      count(lit(1)).as("n")).head()
+    val e = fingerprintExprs(idCol, textCol)
+    val row = corpus.agg(e.head, e.tail: _*).head()
     (Option(row.getDecimal(0)).map(d => BigDecimal(d).toBigInt.toString)
       .getOrElse("0"), row.getLong(1))
   }
@@ -116,14 +120,12 @@ object MinHashIndex {
     require(hashShards > 0, "hashShards must be positive")
     val spark = corpus.sparkSession
     // the doc count + content fingerprint ride the signature job as
-    // observed metrics (same expressions as fingerprintAndCount,
-    // evaluated once per row) instead of a second corpus scan — at
-    // fleet scale that second scan re-read the whole text column
+    // observed metrics (evaluated once per row) instead of a second
+    // corpus scan — at fleet scale that second scan re-read the whole
+    // text column
     val obs = org.apache.spark.sql.Observation()
-    val observed = corpus.observe(obs,
-      sum(xxhash64(Dedup.exactCol(idCol), Dedup.exactCol(textCol))
-        .cast("decimal(38,0)")).as("fp"),
-      count(lit(1)).as("n"))
+    val e = fingerprintExprs(idCol, textCol)
+    val observed = corpus.observe(obs, e.head, e.tail: _*)
     val sigs = Dedup.signatureRelationWithFp(observed, idCol, textCol, numHashes, shingleSize)
     val spanSharded = isIntegral(corpus.schema(idCol).dataType)
     val shard = if (spanSharded) shardOf(shardSpan) else hashShardOf(hashShards)
@@ -131,21 +133,27 @@ object MinHashIndex {
       .write.partitionBy("sig_shard")
       .mode(SaveMode.Overwrite).parquet(s"$path/signatures")
     val m = obs.get
-    val (fp, n) = (Observed.decimalSum(m, "fp").toString, Observed.long(m, "n"))
-    val manifest = mutable.LinkedHashMap[String, Any](
-      "version" -> FormatVersion,
-      "kind" -> "minhash_signatures",
-      "num_hashes" -> numHashes.toLong,
-      "shingle_size" -> shingleSize.toLong,
-      "id_col" -> idCol,
-      "id_type" -> corpus.schema(idCol).dataType.catalogString,
-      "n_docs" -> n,
-      "fingerprint" -> fp) ++
-      (if (spanSharded) Seq("shard_span" -> shardSpan.asInstanceOf[Any])
-       else Seq("n_shards" -> hashShards.toLong.asInstanceOf[Any]))
-    writeManifest(spark, path, graft.engine.QueryJson.write(manifest))
+    publish(spark, path, Artifact(sigs, numHashes, shingleSize, idCol,
+      corpus.schema(idCol).dataType.catalogString, Observed.long(m, "n"),
+      Observed.decimalSum(m, "fp").toString,
+      if (spanSharded) Some(shardSpan) else None,
+      if (spanSharded) None else Some(hashShards)))
     load(spark, path)
   }
+
+  /** Publish `art`'s manifest (its relation is already in place). The
+    * signature relation has no generations, so `data_gen` stays 0 and
+    * nothing is pruned. */
+  private def publish(spark: SparkSession, path: String, art: Artifact): Unit =
+    ArtifactStore.publish(spark, path, Kind, FormatVersion, 0L, Seq(
+      "num_hashes" -> art.numHashes.toLong,
+      "shingle_size" -> art.shingleSize.toLong,
+      "id_col" -> art.idCol,
+      "id_type" -> art.idType,
+      "n_docs" -> art.nDocs,
+      "fingerprint" -> art.contentFingerprint) ++
+      art.shardSpan.map("shard_span" -> _) ++
+      art.nShards.map(n => "n_shards" -> n.toLong), Nil)
 
   private def isIntegral(dt: org.apache.spark.sql.types.DataType): Boolean = {
     import org.apache.spark.sql.types._
@@ -177,14 +185,10 @@ object MinHashIndex {
   private def hashShardOf(n: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(col("id")), lit(n.toLong))
 
-  /** The layout's shard expression, if the artifact is shard-partitioned
-    * at all: locality span for integral-id layouts, id hash for the
-    * rest, None for flat pre-shard layouts. */
-  private def shardExprOf(art: Artifact): Option[org.apache.spark.sql.Column] =
-    art.shardSpan.map(shardOf).orElse(art.nShards.map(hashShardOf))
-
-  private def writeManifest(spark: SparkSession, path: String, json: String): Unit =
-    ArtifactLock.publishManifest(spark, path, json) // temp + atomic rename
+  /** The layout's shard expression: locality span for integral-id
+    * layouts, id hash for the rest ([[loadOnce]] admits exactly one). */
+  private def shardExprOf(art: Artifact): org.apache.spark.sql.Column =
+    art.shardSpan.map(shardOf).getOrElse(hashShardOf(art.nShards.get))
 
   /** Load a persisted signature index. Runs no Spark job — the signature
     * relation is returned lazy; schema and manifest coherence are
@@ -196,99 +200,38 @@ object MinHashIndex {
     * relation is corpus-sized, so keeping prior generations would
     * double the artifact's footprint), an ACTION racing an update can
     * still capture a pre-swap file listing — wrap the whole
-    * plan-and-act in [[probeRetrying]] for that (the HTTP server's
-    * query loop is the same retry one layer up). */
+    * plan-and-act in [[ArtifactLock.probeRetrying]] for that (the HTTP
+    * server's query loop is the same retry one layer up). */
   def load(spark: SparkSession, path: String): Artifact =
     ArtifactLock.retryingLoad(loadOnce(spark, path))
 
-  /** Bounded re-plan retry for library-level PROBES of this index: runs
-    * `use` against a freshly-loaded artifact and, when the action fails
-    * because an [[update]]'s shard swap raced the plan's captured file
-    * listing (a missing input file — [[ArtifactLock.isMissingInputFile]]),
-    * re-loads and re-runs, up to twice. The reload is what heals: a
-    * fresh `load` resolves a fresh file listing. `use` must be a pure
-    * read (it may run multiple times); put the ACTION (collect/count/
-    * write) inside it, not just the plan, or the retry guards nothing.
-    * This is the library twin of the HTTP server's re-plan retry for
-    * direct consumers of [[Dedup.minhashPairsAgainstIndex]] /
-    * [[Dedup.minhashPairsFromIndex]]. */
-  def probeRetrying[T](spark: SparkSession, path: String)
-                      (use: Artifact => T): T =
-    ArtifactLock.retryingLoad(use(loadOnce(spark, path)))
-
   private def loadOnce(spark: SparkSession, path: String): Artifact = {
-    val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mPath))
-      throw new IllegalArgumentException(
-        s"no minhash index at $path (missing manifest.json)")
-    val in = fs.open(mPath)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val parsed =
-      try graft.engine.QueryJson.parse(text)
-      catch { case e: Exception => throw new IllegalArgumentException(
-        s"malformed minhash manifest at $path: ${e.getMessage}") }
-    val manifest = parsed match {
-      case m: scala.collection.Map[String @unchecked, Any @unchecked] => m
-      case _ => throw new IllegalArgumentException(
-        s"malformed minhash manifest at $path")
-    }
-    if (!manifest.get("kind").contains("minhash_signatures"))
-      throw new IllegalArgumentException(
-        s"artifact at $path is not a minhash signature index " +
-          s"(kind=${manifest.get("kind")})")
-    if (!manifest.get("version").contains(FormatVersion.toLong))
-      throw new IllegalArgumentException(
-        s"unsupported minhash index version ${manifest.get("version")} at $path")
-    val numHashes = manifest.get("num_hashes") match {
-      case Some(l: Long) if l > 0 && l <= Int.MaxValue => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"minhash index at $path is corrupt: bad num_hashes $other")
-    }
-    val shingleSize = manifest.get("shingle_size") match {
-      case Some(l: Long) if l > 0 && l <= Int.MaxValue => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"minhash index at $path is corrupt: bad shingle_size $other")
-    }
-    // the shard-partitioned layout surfaces its directory key as a
-    // sig_shard column; drop it so consumers see exactly (id, sig, fp)
-    // regardless of layout — update() re-reads the relation itself when
-    // it needs shard pruning
-    val sigs =
-      (try spark.read.parquet(s"$path/signatures")
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        // cause attached: retryingLoad's classifier walks the chain to
-        // tell a maintenance race (PATH_NOT_FOUND) from real corruption
-        throw new IllegalArgumentException(
-          s"minhash index at $path is corrupt: unreadable signatures: ${e.getMessage}", e) })
-        .drop("sig_shard")
+    val m = ArtifactStore.read(spark, path, Kind, FormatVersion, "minhash index")
+    if (m.dataGen != 0L)
+      m.corrupt(s"bad data_gen ${m.dataGen} (the signature relation has no generations)")
+    val shardSpan = m.optLong("shard_span")
+    val nShards = m.optPosInt("n_shards")
+    if (shardSpan.isDefined == nShards.isDefined || shardSpan.contains(0L))
+      m.corrupt(s"bad shard layout: shard_span ${m.got("shard_span")}, " +
+        s"n_shards ${m.got("n_shards")} (exactly one, positive)")
+    // the layout surfaces its directory key as a sig_shard column; drop
+    // it so consumers see exactly (id, sig, fp) — update() re-reads the
+    // relation itself when it needs shard pruning
+    val sigs = ArtifactStore.readRelation(spark, m, "signatures", "signatures")
+      .drop("sig_shard")
     import org.apache.spark.sql.types._
-    val sigField = sigs.schema.fields.find(_.name == "sig")
-    val sigOk = sigField.exists(_.dataType match {
+    def colType(n: String): Option[DataType] =
+      sigs.schema.fields.find(_.name == n).map(_.dataType)
+    val sigOk = colType("sig").exists {
       case ArrayType(LongType, _) => true
       case _ => false
-    })
-    if (!sigs.columns.contains("id") || !sigOk)
-      throw new IllegalArgumentException(
-        s"minhash index at $path is corrupt: signatures must be (id, sig ARRAY<BIGINT>), " +
-          s"got ${sigs.schema.catalogString}")
-    // the per-row fp column (current builds) must be BIGINT when present;
-    // its absence only disables incremental update, not probing
-    sigs.schema.fields.find(_.name == "fp").foreach { f =>
-      if (f.dataType != LongType)
-        throw new IllegalArgumentException(
-          s"minhash index at $path is corrupt: fp must be BIGINT, got ${f.dataType.catalogString}")
     }
-    Artifact(sigs, numHashes, shingleSize,
-      manifest.get("id_col").collect { case s: String => s },
-      manifest.get("id_type").collect { case s: String => s },
-      manifest.get("n_docs").collect { case l: Long => l },
-      manifest.get("fingerprint").collect { case s: String => s },
-      manifest.get("shard_span").collect { case l: Long if l > 0 => l },
-      manifest.get("n_shards").collect {
-        case l: Long if l > 0 && l <= Int.MaxValue => l.toInt })
+    if (colType("id").isEmpty || !sigOk || !colType("fp").contains(LongType))
+      m.corrupt("signatures must be (id, sig ARRAY<BIGINT>, fp BIGINT), got " +
+        sigs.schema.catalogString)
+    Artifact(sigs, m.posInt("num_hashes"), m.posInt("shingle_size"),
+      m.string("id_col"), m.string("id_type"), m.long("n_docs"),
+      m.string("fingerprint"), shardSpan, nShards)
   }
 
   /** CHEAP staleness/integrity tripwire — one pruned scan of the index's
@@ -311,11 +254,9 @@ object MinHashIndex {
     if (badLen > 0)
       throw new IllegalArgumentException(
         s"$what is corrupt: $badLen signature rows have length != num_hashes=${art.numHashes}")
-    art.nDocs.foreach { recorded =>
-      if (actual != recorded)
-        throw new IllegalArgumentException(
-          s"$what is corrupt: manifest claims $recorded signatures, parquet holds $actual")
-    }
+    if (actual != art.nDocs)
+      throw new IllegalArgumentException(
+        s"$what is corrupt: manifest claims ${art.nDocs} signatures, parquet holds $actual")
   }
 
   /** STRONG staleness check: recompute the corpus content fingerprint and
@@ -332,15 +273,11 @@ object MinHashIndex {
   /** [[verifyContent]] against an ALREADY-loaded artifact. */
   def verifyContent(art: Artifact, what: String, corpus: DataFrame,
                     idCol: String, textCol: String): Unit = {
-    val recorded = art.contentFingerprint.getOrElse(
-      throw new IllegalArgumentException(
-        s"$what records no content fingerprint " +
-          "(pre-fingerprint artifact) — rebuild it to enable verification"))
     val (current, n) = fingerprintAndCount(corpus, idCol, textCol)
-    if (art.nDocs.exists(_ != n) || current != recorded)
+    if (art.nDocs != n || current != art.contentFingerprint)
       throw new IllegalArgumentException(
         s"$what is stale: corpus fingerprint $current (n=$n) does not match " +
-          s"the recorded $recorded (n=${art.nDocs.getOrElse("?")}) — rebuild the index")
+          s"the recorded ${art.contentFingerprint} (n=${art.nDocs}) — rebuild the index")
   }
 
   /** INCREMENTAL index maintenance — close the loop [[Dedup.corpusDiff]]
@@ -380,32 +317,17 @@ object MinHashIndex {
     * fan out through the joins), and nothing reads the artifact
     * mid-swap (single-writer refresh window; the swap is
     * delete-then-rename, not atomic). A no-drift corpus returns the
-    * loaded artifact untouched without writing anything. Artifacts
-    * built before the per-row fp column must be rebuilt once. */
+    * loaded artifact untouched without writing anything. */
   def update(spark: SparkSession, path: String, cur: DataFrame,
              idCol: String, textCol: String): Artifact =
       ArtifactLock.withWriteLock(path) {
     val art = load(spark, path)
     val what = s"minhash index at $path"
-    if (!art.sigs.columns.contains("fp"))
-      throw new IllegalArgumentException(
-        s"$what predates incremental maintenance (no per-row fp column) — " +
-          "rebuild it once with buildAndSave")
-    val oldFp = art.contentFingerprint.getOrElse(
-      throw new IllegalArgumentException(
-        s"$what records no content fingerprint — rebuild it to enable incremental update"))
-    val oldN = art.nDocs.getOrElse(
-      throw new IllegalArgumentException(
-        s"$what records no n_docs — rebuild it to enable incremental update"))
-    art.idCol.foreach { rec =>
-      if (rec != idCol) throw new IllegalArgumentException(
-        s"$what was built on id column '$rec', not '$idCol'")
-    }
+    if (art.idCol != idCol) throw new IllegalArgumentException(
+      s"$what was built on id column '${art.idCol}', not '$idCol'")
     val curIdType = cur.schema(idCol).dataType.catalogString
-    art.idType.foreach { rec =>
-      if (rec != curIdType) throw new IllegalArgumentException(
-        s"$what was built on id type $rec, current corpus has $curIdType")
-    }
+    if (art.idType != curIdType) throw new IllegalArgumentException(
+      s"$what was built on id type ${art.idType}, current corpus has $curIdType")
     // raw drift set: full-outer on id (null-safe: a null-id row is one
     // row, compared like any other), keep only rows whose hash differs
     // or that exist on one side only
@@ -426,9 +348,9 @@ object MinHashIndex {
       // only truncate in the >10000-shard fallback case, which re-runs
       // one global agg — the same pathological path that already pays a
       // whole-relation rewrite.
-      val shardOpt = shardExprOf(art)
+      val shard = shardExprOf(art)
       val perShard = delta
-        .groupBy(shardOpt.getOrElse(lit(0L)).as("__shard"))
+        .groupBy(shard.as("__shard"))
         .agg(
           sum(col("__fpc").cast("decimal(38,0)")).as("add_sum"),
           sum(col("__fpo").cast("decimal(38,0)")).as("remove_sum"),
@@ -455,8 +377,8 @@ object MinHashIndex {
             Option(g.getDecimal(1)).map(BigDecimal(_).toBigInt).getOrElse(BigInt(0)),
             g.getLong(2), g.getLong(3))
         }
-      val newFp = (BigInt(oldFp) - removeSum + addSum).toString
-      val newN = oldN + nAdded - nRemoved
+      val newFp = (BigInt(art.contentFingerprint) - removeSum + addSum).toString
+      val newN = art.nDocs + nAdded - nRemoved
       // departing ids (removed or changed) leave; arriving ids (added or
       // changed) are re-signatured from the current corpus. Both id sets
       // are drift-sized, so AQE broadcasts them against the big sides.
@@ -473,73 +395,50 @@ object MinHashIndex {
       // stage beside the live relation, then swap: the rewrite READS the
       // live signatures parquet, so an in-place Overwrite would delete
       // its own input mid-job
-      def rewriteWhole(): Unit = {
-        val keep = art.sigs
+      if (truncated) {
+        // a drift scattered over more than 10000 shards effectively IS
+        // the corpus: stage the whole relation and swap it in
+        art.sigs
           .join(removeIds, col("id") <=> col("__rm_id"), "left_anti")
           .select(col("id"), col("sig"), col("fp"))
-        val staged = keep.unionByName(fresh)
-        shardExprOf(art) match {
-          case Some(shard) => staged.withColumn("sig_shard", shard)
-            .write.partitionBy("sig_shard")
-            .mode(SaveMode.Overwrite).parquet(staging)
-          case None =>
-            staged.write.mode(SaveMode.Overwrite).parquet(staging)
-        }
+          .unionByName(fresh)
+          .withColumn("sig_shard", shard)
+          .write.partitionBy("sig_shard")
+          .mode(SaveMode.Overwrite).parquet(staging)
         fs.delete(sigPath, true)
         if (!fs.rename(new org.apache.hadoop.fs.Path(staging), sigPath))
           throw new IllegalStateException(
             s"could not swap staged signatures into place at $sigPath")
+      } else {
+        // drift-sized IO: only the shard directories holding a drifted
+        // id are re-read, re-written to staging, and swapped — every
+        // other shard's files stay byte-untouched (pinned by checksum in
+        // MinHashIndexSpec for both layouts). The shard set comes free
+        // from the per-shard stats rows collected above.
+        val affected = perShard.iterator.map(_.getLong(0)).toSet
+        spark.read.parquet(s"$path/signatures")
+          .filter(col("sig_shard").isin(affected.toSeq: _*))
+          .join(removeIds, col("id") <=> col("__rm_id"), "left_anti")
+          .select(col("id"), col("sig"), col("fp"))
+          .unionByName(fresh)
+          .withColumn("sig_shard", shard)
+          .write.partitionBy("sig_shard")
+          .mode(SaveMode.Overwrite).parquet(staging)
+        for (sh <- affected) {
+          val dst = new org.apache.hadoop.fs.Path(
+            s"$path/signatures/sig_shard=$sh")
+          val src = new org.apache.hadoop.fs.Path(
+            s"$staging/sig_shard=$sh")
+          fs.delete(dst, true)
+          // a shard whose every row departed produces no staged dir —
+          // deleting the live dir IS its rewrite
+          if (fs.exists(src) && !fs.rename(src, dst))
+            throw new IllegalStateException(
+              s"could not swap staged shard into place at $dst")
+        }
+        fs.delete(new org.apache.hadoop.fs.Path(staging), true)
       }
-      // drift-sized IO on the sharded layouts (span AND hash): only the
-      // shard directories holding a drifted id are re-read, re-written
-      // to staging, and swapped — every other shard's files stay
-      // byte-untouched (pinned by checksum in MinHashIndexSpec for both
-      // layouts). Falls back to the whole-relation staged rewrite for
-      // flat legacy layouts and for drifts so scattered (>10000 shards)
-      // that the drift effectively IS the corpus. The shard set comes
-      // free from the per-shard stats rows collected above.
-      val affectedShards: Option[Set[Long]] =
-        if (truncated) None
-        else shardOpt.map(_ => perShard.iterator.map(_.getLong(0)).toSet)
-      affectedShards match {
-        case Some(affected) =>
-          val shard = shardOpt.get
-          val live = spark.read.parquet(s"$path/signatures")
-          val keep = live
-            .filter(col("sig_shard").isin(affected.toSeq: _*))
-            .join(removeIds, col("id") <=> col("__rm_id"), "left_anti")
-            .select(col("id"), col("sig"), col("fp"))
-          keep.unionByName(fresh)
-            .withColumn("sig_shard", shard)
-            .write.partitionBy("sig_shard")
-            .mode(SaveMode.Overwrite).parquet(staging)
-          for (sh <- affected) {
-            val dst = new org.apache.hadoop.fs.Path(
-              s"$path/signatures/sig_shard=$sh")
-            val src = new org.apache.hadoop.fs.Path(
-              s"$staging/sig_shard=$sh")
-            fs.delete(dst, true)
-            // a shard whose every row departed produces no staged dir —
-            // deleting the live dir IS its rewrite
-            if (fs.exists(src) && !fs.rename(src, dst))
-              throw new IllegalStateException(
-                s"could not swap staged shard into place at $dst")
-          }
-          fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-        case _ => rewriteWhole()
-      }
-      val manifest = mutable.LinkedHashMap[String, Any](
-        "version" -> FormatVersion,
-        "kind" -> "minhash_signatures",
-        "num_hashes" -> art.numHashes.toLong,
-        "shingle_size" -> art.shingleSize.toLong,
-        "id_col" -> idCol,
-        "id_type" -> curIdType,
-        "n_docs" -> newN,
-        "fingerprint" -> newFp) ++
-        art.shardSpan.map("shard_span" -> _.asInstanceOf[Any]) ++
-        art.nShards.map(n => "n_shards" -> n.toLong.asInstanceOf[Any])
-      writeManifest(spark, path, graft.engine.QueryJson.write(manifest))
+      publish(spark, path, art.copy(nDocs = newN, contentFingerprint = newFp))
       load(spark, path)
     } finally delta.unpersist()
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,24 +20,28 @@ import scala.collection.mutable
   * (n desc, token asc) position, so ONE artifact built at a generous k
   * serves every smaller vocabulary size by a `rank <= v` filter.
   *
-  * Layout mirrors the other artifacts:
-  *   - `<path>/vocabulary/` — exact (no-capacity) builds only: the
-  *     (token, n, rank) parquet. Capacity-built artifacts stopped
-  *     storing it (round 20): their vocabulary is a pure function of
-  *     the summary — its top-k rows — and is derived lazily at load,
-  *     byte-identical, saving one write job per mutation;
-  *   - `<path>/summary/` — capacity-built artifacts only: the
+  * Layout (generationed directories and a format-v2 manifest through
+  * [[ArtifactStore]]):
+  *   - `<path>/vocabulary[-g]/` — exact (no-capacity) builds only: the
+  *     (token, n, rank) parquet. A capacity-built artifact's vocabulary
+  *     is a pure function of its summary — the top-k rows — and is
+  *     derived lazily at load, saving one write job per mutation;
+  *   - `<path>/summary[-g]/` — capacity-built artifacts only: the
   *     mergeable Space-Saving summary `(token, lo, hi)` that
   *     [[update]] merges an appended batch into (bounded at
   *     max(capacity, k) rows; the manifest's `theta` certifies any
   *     unstored token's count);
-  *   - `<path>/manifest.json` — format version, k, the optional sketch
-  *     capacity when the certified-bounds builder produced the counts,
-  *     the text column's name (free identity tripwire), the corpus doc
-  *     count, the relation's own row count, and an order-independent
-  *     content fingerprint of the corpus texts (the [[MinHashIndex]]
-  *     decimal-sum formula over xxhash64(text) — text only, because
-  *     the vocabulary depends on nothing else).
+  *   - `<path>/slabs/<id>/` — capacity-built artifacts only: each
+  *     ingest's raw summary, what [[removeSlab]] re-merges;
+  *   - `<path>/manifest.json` — k, the text column's name (free
+  *     identity tripwire), the corpus doc count, the relation's own row
+  *     count, and an order-independent content fingerprint of the
+  *     corpus texts (the [[MinHashIndex]] decimal-sum formula over
+  *     xxhash64(text) — text only, because the vocabulary depends on
+  *     nothing else), all mandatory. A capacity-built artifact also
+  *     records `capacity`, `theta`, `summary_rows` and the `slabs`
+  *     registry — all four, or none for an exact build — and, when
+  *     [[update]] auto-compacts, `auto_compact_keep`.
   *
   * `load` runs no Spark job; [[verifyCount]] is one scan of the tiny
   * relation; [[verifyContent]] recomputes the corpus fingerprint (one
@@ -44,7 +49,8 @@ import scala.collection.mutable
   */
 object VocabIndex {
 
-  val FormatVersion = 1
+  val FormatVersion = 2
+  private val Kind = "vocabulary"
 
   /** Default registry bound for [[update]]'s auto-compaction: with K=16
     * the newest 16 ingests stay individually removable while the
@@ -53,24 +59,24 @@ object VocabIndex {
   val DefaultMaxSlabs = 16
 
   /** Loaded artifact: the LAZY (token, n, rank) relation plus manifest
-    * parameters. k is mandatory (it bounds which vocabulary sizes the
-    * artifact can serve); the rest are optional tripwires. A
-    * capacity-built artifact additionally carries its mergeable
-    * Space-Saving summary `(token, lo, hi)` and the certified
-    * untracked-count bound `theta` — the state [[update]] merges a
-    * delta corpus into (true count of a stored token ∈ [lo, hi]; of
-    * any unstored token ≤ theta). */
+    * parameters. k bounds which vocabulary sizes the artifact can
+    * serve. A capacity-built artifact additionally carries its
+    * mergeable Space-Saving summary `(token, lo, hi)`, the certified
+    * untracked-count bound `theta`, the summary's row count and the
+    * slab registry — the state [[update]] merges a delta corpus into
+    * (true count of a stored token ∈ [lo, hi]; of any unstored token
+    * ≤ theta); all five are None for an exact build. */
   final case class Artifact(vocab: DataFrame, k: Int,
-                            capacity: Option[Int] = None,
-                            textCol: Option[String] = None,
-                            nDocs: Option[Long] = None,
-                            nTokens: Option[Long] = None,
-                            contentFingerprint: Option[String] = None,
-                            summary: Option[DataFrame] = None,
-                            theta: Option[Long] = None,
-                            slabs: Option[Seq[SlabMeta]] = None,
-                            dataGen: Long = 0L,
-                            summaryRows: Option[Long] = None)
+                            capacity: Option[Int],
+                            textCol: String,
+                            nDocs: Long,
+                            nTokens: Long,
+                            contentFingerprint: String,
+                            summary: Option[DataFrame],
+                            theta: Option[Long],
+                            slabs: Option[Seq[SlabMeta]],
+                            dataGen: Long,
+                            summaryRows: Option[Long])
 
   /** One ingest slab's registry entry: the raw per-slab summary lives
     * at `<path>/slabs/<id>/` (tokenSummaryAgg's (token, n, nhi, rho)
@@ -102,15 +108,6 @@ object VocabIndex {
       .getOrElse("0"), row.getLong(1))
   }
 
-  /** Build the top-`k` vocabulary and persist it at `path`. By default
-    * the exact [[TextOps.topTokens]] lineage (one token exchange with
-    * map-side combine, TakeOrdered k); pass `capacity` to build through
-    * the memory-bounded [[TextOps.topTokensSketch]] instead when even
-    * the aggregated vocabulary exchange is the bottleneck — the stored
-    * counts are then the sketch's certified lower bounds, and the
-    * manifest records the capacity so consumers can tell. Plus one
-    * column-pruned aggregation for the doc count + content
-    * fingerprint. */
   /** Observed-metric expressions for the corpus-consuming pass: the
     * manifest's doc count + content fingerprint ride the SAME job that
     * summarizes/aggregates the corpus (`observe` on the input relation)
@@ -125,38 +122,106 @@ object VocabIndex {
   private def obsLong(m: Map[String, Any], key: String): Long =
     Observed.long(m, key)
 
-  /** Generation-suffixed data-relation directory name: generation 0 is
-    * the bare legacy name (pre-generation artifacts load unchanged),
-    * generation N > 0 is `<base>-N`. Every mutation writes the NEXT
-    * generation's dirs and repoints the (atomically published) manifest
-    * — an unlocked reader that resolved the old manifest keeps reading
-    * the old generation's files, which stay on disk until the
-    * generation after next prunes them. The previous in-place
-    * delete+rename swap gave racing readers missing dirs and vanished
-    * footers (hammered in ArtifactRaceSpec). */
-  private def genDir(base: String, gen: Long): String =
-    ArtifactLock.genDirName(base, gen)
+  /** The capacity-built state [[update]], [[removeSlab]] and
+    * [[compactSlabs]] work on, as the manifest records it. */
+  private final case class SketchState(capacity: Int, theta: Long,
+                                       summaryRows: Long, slabs: Seq[SlabMeta])
 
-  /** The existing artifact's data generation, when `path` already holds
-    * one: None for a fresh path; an unreadable/legacy manifest reads as
-    * generation 0 (so a rebuild over it writes generation 1 and never
-    * truncates dirs a reader may hold open). */
-  private def currentDataGen(spark: SparkSession, path: String): Option[Long] =
-    ArtifactLock.currentDataGen(spark, path)
+  /** `art`'s capacity-built state and summary, or the rebuild
+    * instruction when `art` is an exact build (which stores neither). */
+  private def sketchOf(art: Artifact, what: String,
+                       op: String): (SketchState, DataFrame) =
+    (for (c <- art.capacity; t <- art.theta; r <- art.summaryRows;
+          sl <- art.slabs; s <- art.summary) yield (SketchState(c, t, r, sl), s))
+      .getOrElse(throw new IllegalArgumentException(
+        s"$what was built exact (no capacity) and stores no mergeable " +
+          s"summary — rebuild with a capacity to enable $op"))
 
-  private def pruneDataGenerations(spark: SparkSession, path: String,
-                                   newGen: Long): Unit = {
-    ArtifactLock.pruneGenerations(spark, path,
-      Seq("vocabulary", "summary"), newGen)
-    // legacy staging leftovers from the pre-generation swap form
-    try {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      Seq("summary.next", "vocabulary.next").foreach(n =>
-        fs.delete(new org.apache.hadoop.fs.Path(path, n), true))
-    } catch { case _: Exception => () }
+  /** Publish generation `newGen`'s manifest and prune older generations
+    * of the vocabulary/summary relations. */
+  private def publish(spark: SparkSession, path: String, newGen: Long, k: Int,
+                      textCol: String, nDocs: Long, nTokens: Long,
+                      fingerprint: String, sketch: Option[SketchState],
+                      extra: Seq[(String, Any)] = Nil): Unit =
+    ArtifactStore.publish(spark, path, Kind, FormatVersion, newGen, Seq(
+      "k" -> k.toLong,
+      "text_col" -> textCol,
+      "n_docs" -> nDocs,
+      "n_tokens" -> nTokens,
+      "fingerprint" -> fingerprint) ++
+      sketch.toSeq.flatMap(s => Seq(
+        "capacity" -> s.capacity.toLong,
+        "theta" -> s.theta,
+        "summary_rows" -> s.summaryRows,
+        "slabs" -> s.slabs.map(slabEntry).toList)) ++ extra,
+      Seq("vocabulary", "summary"))
+
+  /** Summarize `corpus` at `capacity` into the staged raw summary at
+    * `stage` — the one corpus-consuming action of a build or update,
+    * with the batch's untracked bound Θ riding it as an observed metric
+    * — and return Θ plus the staged summary normalized to
+    * (token, lo, hi). */
+  private def stageSummary(spark: SparkSession, corpus: DataFrame,
+                           textCol: String, capacity: Int,
+                           stage: Path): (Long, DataFrame) = {
+    val thetaObs = org.apache.spark.sql.Observation()
+    TextOps.tokenSummaryAgg(corpus, textCol, capacity)
+      .observe(thetaObs, coalesce(sum(when(col("token").isNull,
+        col("rho"))), lit(0L)).as("theta"))
+      .write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    val theta = obsLong(thetaObs.get, "theta")
+    (theta, spark.read.parquet(stage.toString).filter(col("token").isNotNull)
+      .select(col("token"), col("n").as("lo"),
+        (col("nhi") + lit(theta) - col("rho")).as("hi")))
   }
 
+  /** The staged raw summary BECOMES slab `id` — a filesystem move, no
+    * job: the per-ingest state [[removeSlab]] re-merges from. */
+  private def promoteSlab(spark: SparkSession, stage: Path, path: String,
+                          id: Long): Unit = {
+    val fs = stage.getFileSystem(spark.sessionState.newHadoopConf())
+    val dst = new Path(path, s"slabs/$id")
+    fs.delete(dst, true)
+    fs.mkdirs(dst.getParent)
+    if (!fs.rename(stage, dst))
+      throw new IllegalStateException(s"could not move $stage to $dst")
+  }
+
+  /** The n-way mergeable-summaries merge of stored slabs (the pairwise
+    * [[update]] rule generalized): a token's lo = Σ lo over the slabs
+    * that track it; its hi = Σ (nhi + θᵢ − rho) over tracking slabs,
+    * plus θⱼ for every slab that does not track it — computed as
+    * Σ_present hi + (Σ_all θ − Σ_present θ) in a single aggregate. The
+    * merged untracked bound is Σ_all θ. No slabs is the empty summary. */
+  private def mergeSlabs(spark: SparkSession, path: String,
+                         slabs: Seq[SlabMeta]): DataFrame = {
+    val thetaSum = slabs.map(_.theta).sum
+    slabs.map { s =>
+      spark.read.parquet(s"$path/slabs/${s.id}")
+        .filter(col("token").isNotNull)
+        .select(col("token"), col("n").as("__lo"),
+          (col("nhi") + lit(s.theta) - col("rho")).as("__hi"),
+          lit(s.theta).as("__th"))
+    }.reduceOption(_ unionByName _) match {
+      case None =>
+        import spark.implicits._
+        Seq.empty[(String, Long, Long)].toDF("token", "lo", "hi")
+      case Some(all) =>
+        all.groupBy(col("token"))
+          .agg(sum(col("__lo")).as("lo"),
+            (sum(col("__hi")) + lit(thetaSum) - sum(col("__th"))).as("hi"))
+    }
+  }
+
+  /** Build the top-`k` vocabulary and persist it at `path`. By default
+    * the exact [[TextOps.topTokens]] lineage (one token exchange with
+    * map-side combine, TakeOrdered k); pass `capacity` to build through
+    * the memory-bounded [[TextOps.topTokensSketch]] instead when even
+    * the aggregated vocabulary exchange is the bottleneck — the stored
+    * counts are then the sketch's certified lower bounds, and the
+    * manifest records the capacity so consumers can tell. The doc
+    * count and content fingerprint ride the corpus-consuming job as
+    * observed metrics. */
   def buildAndSave(corpus: DataFrame, textCol: String, k: Int,
                    path: String, capacity: Option[Int] = None): Artifact =
       ArtifactLock.withWriteLock(path) {
@@ -165,11 +230,11 @@ object VocabIndex {
     val spark = corpus.sparkSession
     // a rebuild over an existing artifact writes the NEXT generation's
     // data dirs (never truncating what a racing reader resolved)
-    val newGen: Long = currentDataGen(spark, path).map(_ + 1L).getOrElse(0L)
+    val newGen = ArtifactStore.nextGen(spark, path)
     val inObs = org.apache.spark.sql.Observation()
     val obsExprs = corpusObs(textCol)
     val observedCorpus = corpus.observe(inObs, obsExprs.head, obsExprs.tail: _*)
-    val (extras: Seq[(String, Any)], nTokens: Long) = capacity match {
+    val (sketch, nTokens) = capacity match {
       case Some(c) =>
         // mergeable-summary build: ONE corpus-consuming action (the
         // staged raw-aggregate write — the same bounded relation
@@ -181,33 +246,14 @@ object VocabIndex {
         // from the artifact's own data instead of a second corpus
         // consumer (the x63b stage-reuse lesson applied to artifact
         // builds).
-        val thetaObs = org.apache.spark.sql.Observation()
-        val stagePath = new org.apache.hadoop.fs.Path(path, "summary.stage")
-        TextOps.tokenSummaryAgg(observedCorpus, textCol, c)
-          .observe(thetaObs, coalesce(sum(when(col("token").isNull,
-            col("rho"))), lit(0L)).as("theta"))
-          .write.mode(SaveMode.Overwrite).parquet(stagePath.toString)
-        val bigTheta = obsLong(thetaObs.get, "theta")
-        val staged = spark.read.parquet(stagePath.toString)
-        val norm = staged.filter(col("token").isNotNull)
-          .select(col("token"), col("n").as("lo"),
-            (col("nhi") + lit(bigTheta) - col("rho")).as("hi"))
+        val stage = new Path(path, "summary.stage")
+        val (bigTheta, norm) = stageSummary(spark, observedCorpus, textCol, c, stage)
         val (theta, nSummary, nVocab) =
-          writeSummary(spark, path, norm, math.max(c, k), k, bigTheta,
-            newGen)
-        // the staged raw summary BECOMES slab 0 (a filesystem move, no
-        // job): the per-ingest state [[removeSlab]] re-merges from
-        val fs = stagePath.getFileSystem(spark.sessionState.newHadoopConf())
-        val slab0 = new org.apache.hadoop.fs.Path(path, "slabs/0")
-        fs.delete(slab0, true)
-        fs.mkdirs(slab0.getParent)
-        if (!fs.rename(stagePath, slab0))
-          throw new IllegalStateException(s"could not move $stagePath to $slab0")
+          writeSummary(spark, path, norm, math.max(c, k), k, bigTheta, newGen)
+        promoteSlab(spark, stage, path, 0L)
         val m = inObs.get
-        (Seq("capacity" -> c.toLong, "theta" -> theta,
-          "summary_rows" -> nSummary,
-          "slabs" -> List(slabEntry(SlabMeta(0L, bigTheta,
-            obsLong(m, "n"), fpOf(m).toString)))), nVocab)
+        (Some(SketchState(c, theta, nSummary,
+          Seq(SlabMeta(0L, bigTheta, obsLong(m, "n"), fpOf(m).toString)))), nVocab)
       case None =>
         val top = TextOps.topTokens(observedCorpus, textCol, k)
         // rank over exactly k rows (post-limit): one task, never
@@ -221,22 +267,12 @@ object VocabIndex {
         top.withColumn("rank", row_number().over(w))
           .observe(vObs, count(lit(1)).as("n"))
           .write.mode(SaveMode.Overwrite)
-          .parquet(s"$path/${genDir("vocabulary", newGen)}")
-        (Seq.empty, obsLong(vObs.get, "n"))
+          .parquet(s"$path/${ArtifactStore.genDirName("vocabulary", newGen)}")
+        (None, obsLong(vObs.get, "n"))
     }
     val inM = inObs.get
-    val (fp, nDocs) = (fpOf(inM).toString, obsLong(inM, "n"))
-    val manifest = mutable.LinkedHashMap[String, Any](
-      "version" -> FormatVersion,
-      "kind" -> "vocabulary",
-      "k" -> k.toLong,
-      "text_col" -> textCol,
-      "n_docs" -> nDocs,
-      "n_tokens" -> nTokens,
-      "fingerprint" -> fp,
-      "data_gen" -> newGen) ++ extras
-    writeManifest(spark, path, graft.engine.QueryJson.write(manifest))
-    pruneDataGenerations(spark, path, newGen)
+    publish(spark, path, newGen, k, textCol, obsLong(inM, "n"), nTokens,
+      fpOf(inM).toString, sketch)
     load(spark, path)
   }
 
@@ -299,95 +335,54 @@ object VocabIndex {
     require(maxSlabs >= 0, "maxSlabs must be >= 0 (0 disables auto-compaction)")
     val art = load(spark, path)
     val what = s"vocabulary at $path"
-    art.textCol.foreach { rec =>
-      if (rec != textCol) throw new IllegalArgumentException(
-        s"$what was built over column '$rec', not '$textCol'")
-    }
-    val cap = art.capacity.getOrElse(throw new IllegalArgumentException(
-      s"$what was built exact (no capacity) and stores no mergeable summary — " +
-        "rebuild with a capacity to enable incremental update"))
-    val oldSummary = art.summary.getOrElse(throw new IllegalArgumentException(
-      s"$what predates mergeable summaries (no summary relation) — " +
-        "rebuild it once with buildAndSave"))
-    val theta1 = art.theta.getOrElse(throw new IllegalArgumentException(
-      s"$what records no theta — rebuild it to enable incremental update"))
-    val oldFp = art.contentFingerprint.getOrElse(
-      throw new IllegalArgumentException(
-        s"$what records no content fingerprint — rebuild it to enable incremental update"))
-    val oldN = art.nDocs.getOrElse(throw new IllegalArgumentException(
-      s"$what records no n_docs — rebuild it to enable incremental update"))
+    if (art.textCol != textCol) throw new IllegalArgumentException(
+      s"$what was built over column '${art.textCol}', not '$textCol'")
+    val (sk, oldSummary) = sketchOf(art, what, "incremental update")
     // summarize the delta at the artifact's own capacity; the staged
     // write is the only delta-corpus-consuming action (same
     // single-consumer discipline as the build path), and the delta's
     // doc count, fingerprint and θ₂ ride it as observed metrics — the
     // x78 job trim: they used to cost two more aggregate jobs
     val inObs = org.apache.spark.sql.Observation()
-    val thetaObs = org.apache.spark.sql.Observation()
-    val stagePath = new org.apache.hadoop.fs.Path(path, "summary.stage")
+    val stage = new Path(path, "summary.stage")
     val obsExprs = corpusObs(textCol)
-    TextOps.tokenSummaryAgg(
-        added.observe(inObs, obsExprs.head, obsExprs.tail: _*), textCol, cap)
-      .observe(thetaObs, coalesce(sum(when(col("token").isNull,
-        col("rho"))), lit(0L)).as("theta"))
-      .write.mode(SaveMode.Overwrite).parquet(stagePath.toString)
-    val fs = stagePath.getFileSystem(spark.sessionState.newHadoopConf())
+    val (theta2, deltaNorm) = stageSummary(spark,
+      added.observe(inObs, obsExprs.head, obsExprs.tail: _*), textCol,
+      sk.capacity, stage)
     val inM = inObs.get
     val nAdded = obsLong(inM, "n")
-    if (nAdded == 0L) { fs.delete(stagePath, true); return art }
+    if (nAdded == 0L) {
+      stage.getFileSystem(spark.sessionState.newHadoopConf()).delete(stage, true)
+      return art
+    }
     val fpDelta = fpOf(inM)
-    val theta2 = obsLong(thetaObs.get, "theta")
-    val staged = spark.read.parquet(stagePath.toString)
-    val deltaNorm = staged.filter(col("token").isNotNull)
-      .select(col("token").as("__t2"), col("n").as("__lo2"),
-        (col("nhi") + lit(theta2) - col("rho")).as("__hi2"))
     val merged = oldSummary
       .select(col("token").as("__t1"), col("lo").as("__lo1"), col("hi").as("__hi1"))
-      .join(deltaNorm, col("__t1") === col("__t2"), "full_outer")
+      .join(deltaNorm.select(col("token").as("__t2"), col("lo").as("__lo2"),
+        col("hi").as("__hi2")), col("__t1") === col("__t2"), "full_outer")
       .select(coalesce(col("__t1"), col("__t2")).as("token"),
         (coalesce(col("__lo1"), lit(0L)) + coalesce(col("__lo2"), lit(0L))).as("lo"),
-        (coalesce(col("__hi1"), lit(theta1)) + coalesce(col("__hi2"), lit(theta2))).as("hi"))
+        (coalesce(col("__hi1"), lit(sk.theta)) + coalesce(col("__hi2"), lit(theta2))).as("hi"))
     val newGen = art.dataGen + 1L
     val (thetaStored, nSummary, nTokens) =
-      writeSummary(spark, path, merged, math.max(cap, art.k), art.k,
-        baseTheta = theta1 + theta2, newGen = newGen)
-    // slab-registry artifacts keep the delta's raw summary as a new
-    // slab (a filesystem move of the already-written stage, no job) so
-    // [[removeSlab]] can later subtract this ingest; legacy artifacts
-    // (no registry) just drop the stage as before
-    val newSlabs: Option[Seq[SlabMeta]] = art.slabs match {
-      case Some(existing) =>
-        val id = existing.map(_.id).maxOption.getOrElse(-1L) + 1
-        val dst = new org.apache.hadoop.fs.Path(path, s"slabs/$id")
-        fs.delete(dst, true)
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(stagePath, dst))
-          throw new IllegalStateException(s"could not move $stagePath to $dst")
-        Some(existing :+ SlabMeta(id, theta2, nAdded, fpDelta.toString))
-      case None => fs.delete(stagePath, true); None
-    }
-    val manifest = mutable.LinkedHashMap[String, Any](
-      "version" -> FormatVersion,
-      "kind" -> "vocabulary",
-      "k" -> art.k.toLong,
-      "text_col" -> textCol,
-      "n_docs" -> (oldN + nAdded),
-      "n_tokens" -> nTokens,
-      "fingerprint" -> (BigInt(oldFp) + fpDelta).toString,
-      "capacity" -> cap.toLong,
-      "theta" -> thetaStored,
-      "summary_rows" -> nSummary,
-      "data_gen" -> newGen) ++
-      newSlabs.map(sl => "slabs" -> sl.map(slabEntry).toList) ++
-      newSlabs.filter(_ => maxSlabs > 0)
-        .map(_ => "auto_compact_keep" -> maxSlabs.toLong)
-    writeManifest(spark, path, graft.engine.QueryJson.write(manifest))
-    pruneDataGenerations(spark, path, newGen)
+      writeSummary(spark, path, merged, math.max(sk.capacity, art.k), art.k,
+        baseTheta = sk.theta + theta2, newGen = newGen)
+    // the delta's raw summary becomes a new slab so [[removeSlab]] can
+    // later subtract this ingest
+    val id = sk.slabs.map(_.id).maxOption.getOrElse(-1L) + 1
+    promoteSlab(spark, stage, path, id)
+    val slabs = sk.slabs :+ SlabMeta(id, theta2, nAdded, fpDelta.toString)
+    publish(spark, path, newGen, art.k, textCol, art.nDocs + nAdded, nTokens,
+      (BigInt(art.contentFingerprint) + fpDelta).toString,
+      Some(SketchState(sk.capacity, thetaStored, nSummary, slabs)),
+      if (maxSlabs > 0) Seq("auto_compact_keep" -> maxSlabs.toLong) else Nil)
     // the self-maintenance trigger: fold history beyond the newest
     // maxSlabs ingests into one epoch slab (registry stays <= maxSlabs+1)
-    if (maxSlabs > 0 && newSlabs.exists(_.length > maxSlabs))
+    if (maxSlabs > 0 && slabs.length > maxSlabs)
       compactSlabs(spark, path, keepLast = maxSlabs)
     else load(spark, path)
   }
+
 
   /** Remove one ingest slab from a slab-registry artifact and rebuild
     * the summary/vocabulary by re-merging the SURVIVING slabs — the
@@ -397,14 +392,10 @@ object VocabIndex {
     * partitions×capacity rows) and the work is one union + one
     * token-keyed aggregate + the shared truncation writer.
     *
-    * The n-way mergeable-summaries algebra (the pairwise [[update]]
-    * rule generalized): a token's lo = Σ lo over slabs that track it;
-    * its hi = Σ (nhi + θᵢ − rho) over tracking slabs, plus θⱼ for
-    * every slab that does not track it — computed as
-    * Σ_present hi + (Σ_all θ − Σ_present θ) in a single aggregate.
-    * The merged untracked bound is Σ_all θ. With ample capacity every
-    * bound is exact and removing a slab yields an artifact IDENTICAL
-    * to one built without that slab (pinned in VocabIndexSpec).
+    * The survivors merge by the n-way mergeable-summaries algebra
+    * ([[mergeSlabs]]). With ample capacity every bound is exact and
+    * removing a slab yields an artifact IDENTICAL to one built without
+    * that slab (pinned in VocabIndexSpec).
     *
     * Manifest totals (doc count, decimal-sum fingerprint) subtract the
     * victim's recorded contribution, so [[verifyContent]] against the
@@ -414,69 +405,37 @@ object VocabIndex {
       ArtifactLock.withWriteLock(path) {
     val art = load(spark, path)
     val what = s"vocabulary at $path"
-    val cap = art.capacity.getOrElse(throw new IllegalArgumentException(
-      s"$what was built exact (no capacity) and stores no slabs — " +
-        "rebuild with a capacity to enable slab removal"))
-    val registry = art.slabs.getOrElse(throw new IllegalArgumentException(
-      s"$what predates slab summaries — rebuild it once with buildAndSave " +
-        "to enable slab removal"))
-    if (!registry.exists(_.id == slabId)) {
+    val (sk, _) = sketchOf(art, what, "slab removal")
+    if (!sk.slabs.exists(_.id == slabId)) {
       // compacted history is named in the rejection: the pre-slab
       // contract (arbitrary removals need a rebuild) is back in force
       // for ingests folded into an epoch slab
-      registry.find(_.covers.contains(slabId)).foreach { epoch =>
+      sk.slabs.find(_.covers.contains(slabId)).foreach { epoch =>
         throw new IllegalArgumentException(
           s"$what: slab $slabId was compacted into epoch slab ${epoch.id} — " +
             "compacted history can no longer be removed at slab granularity; " +
             "rebuild the artifact from the surviving corpus")
       }
       throw new IllegalArgumentException(
-        s"$what has no slab $slabId (stored: ${registry.map(_.id).mkString(", ")})")
+        s"$what has no slab $slabId (stored: ${sk.slabs.map(_.id).mkString(", ")})")
     }
-    val survivors = registry.filterNot(_.id == slabId)
-    val totTheta = survivors.map(_.theta).sum
-    val norm = survivors.map { s =>
-      spark.read.parquet(s"$path/slabs/${s.id}")
-        .filter(col("token").isNotNull)
-        .select(col("token"), col("n").as("__lo"),
-          (col("nhi") + lit(s.theta) - col("rho")).as("__hi"),
-          lit(s.theta).as("__th"))
-    } match {
-      case Nil =>
-        import spark.implicits._
-        Seq.empty[(String, Long, Long)].toDF("token", "lo", "hi")
-      case head +: tail =>
-        tail.foldLeft(head)(_ unionByName _)
-          .groupBy(col("token"))
-          .agg(sum(col("__lo")).as("lo"),
-            (sum(col("__hi")) + lit(totTheta) - sum(col("__th"))).as("hi"))
-    }
+    val survivors = sk.slabs.filterNot(_.id == slabId)
     val newGen = art.dataGen + 1L
-    val (theta, nSummary, nTokens) = writeSummary(spark, path, norm,
-      math.max(cap, art.k), art.k, baseTheta = totTheta, newGen = newGen)
-    val manifest = mutable.LinkedHashMap[String, Any](
-      "version" -> FormatVersion,
-      "kind" -> "vocabulary",
-      "k" -> art.k.toLong,
-      "text_col" -> art.textCol.getOrElse("text"),
-      "n_docs" -> survivors.map(_.nDocs).sum,
-      "n_tokens" -> nTokens,
-      "fingerprint" -> survivors.map(s => BigInt(s.fingerprint)).sum.toString,
-      "capacity" -> cap.toLong,
-      "theta" -> theta,
-      "summary_rows" -> nSummary,
-      "data_gen" -> newGen,
-      "slabs" -> survivors.map(slabEntry).toList)
-    writeManifest(spark, path, graft.engine.QueryJson.write(manifest))
-    pruneDataGenerations(spark, path, newGen)
+    val (theta, nSummary, nTokens) = writeSummary(spark, path,
+      mergeSlabs(spark, path, survivors), math.max(sk.capacity, art.k), art.k,
+      baseTheta = survivors.map(_.theta).sum, newGen = newGen)
+    publish(spark, path, newGen, art.k, art.textCol, survivors.map(_.nDocs).sum,
+      nTokens, survivors.map(s => BigInt(s.fingerprint)).sum.toString,
+      Some(SketchState(sk.capacity, theta, nSummary, survivors)))
     // delete the victim dir only once the manifest stops referencing it:
     // a crash between the two leaves an orphaned dir, never a registry
     // entry that dangles into missing parquet
-    val victimPath = new org.apache.hadoop.fs.Path(path, s"slabs/$slabId")
+    val victimPath = new Path(path, s"slabs/$slabId")
     victimPath.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(victimPath, true)
     load(spark, path)
   }
+
 
   /** Compact the slab registry: fold every slab EXCEPT the newest
     * `keepLast` into one EPOCH slab, bounding [[removeSlab]]'s re-merge
@@ -485,8 +444,8 @@ object VocabIndex {
     * and manifest totals are untouched — compaction reorganizes HISTORY,
     * not state; the only writes are the epoch slab dir and the manifest.
     *
-    * The epoch slab is the victims' n-way merge (the [[removeSlab]]
-    * algebra), truncated to the artifact's own capacity with the shared
+    * The epoch slab is the victims' n-way merge ([[mergeSlabs]]),
+    * truncated to the artifact's own capacity with the shared
     * eviction rule (evicted `hi` folds into the epoch theta), and stored
     * in the raw slab shape via the identity encoding
     * `(n, nhi, rho) = (lo, hi, theta_epoch)` — normalizing it with the
@@ -508,26 +467,12 @@ object VocabIndex {
     require(keepLast >= 0, "keepLast must be >= 0")
     val art = load(spark, path)
     val what = s"vocabulary at $path"
-    val cap = art.capacity.getOrElse(throw new IllegalArgumentException(
-      s"$what was built exact (no capacity) and stores no slabs — " +
-        "rebuild with a capacity to enable slab compaction"))
-    val registry = art.slabs.getOrElse(throw new IllegalArgumentException(
-      s"$what predates slab summaries — rebuild it once with buildAndSave " +
-        "to enable slab compaction"))
-    val ordered = registry.sortBy(_.id)
+    val (sk, _) = sketchOf(art, what, "slab compaction")
+    val ordered = sk.slabs.sortBy(_.id)
     val (victims, kept) = ordered.splitAt(math.max(0, ordered.length - keepLast))
     if (victims.length <= 1) return art
     val thetaSum = victims.map(_.theta).sum
-    val merged = victims.map { s =>
-      spark.read.parquet(s"$path/slabs/${s.id}")
-        .filter(col("token").isNotNull)
-        .select(col("token"), col("n").as("__lo"),
-          (col("nhi") + lit(s.theta) - col("rho")).as("__hi"),
-          lit(s.theta).as("__th"))
-    }.reduce(_ unionByName _)
-      .groupBy(col("token"))
-      .agg(sum(col("__lo")).as("lo"),
-        (sum(col("__hi")) + lit(thetaSum) - sum(col("__th"))).as("hi"))
+    val merged = mergeSlabs(spark, path, victims)
     // shared truncation rule, against the artifact's own capacity: keep
     // the top rows by certified lo, fold every evicted hi into the
     // epoch's theta (certification survives compaction). The truncation
@@ -538,10 +483,9 @@ object VocabIndex {
     // (the round-20 action trim). Only an actual eviction (pre/post
     // truncation counts differ, both observed on the write itself) pays
     // the anti-join and a bounded rewrite with the corrected theta.
-    val sumCap = math.max(cap, art.k)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val mergeTmp = new org.apache.hadoop.fs.Path(path, "slabs/.compact.tmp")
+    val sumCap = math.max(sk.capacity, art.k)
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val mergeTmp = new Path(path, "slabs/.compact.tmp")
     // a crash between the staged truncation write and the epoch
     // promotion leaves .compact.tmp behind (it is not a manifest-adjacent
     // temp file, so pruneGenerations' stale-tmp sweep never touches it);
@@ -568,7 +512,7 @@ object VocabIndex {
         math.max(thetaSum, evictedMax)
       }
     val epochId = ordered.map(_.id).max + 1
-    val epochDir = new org.apache.hadoop.fs.Path(path, s"slabs/$epochId")
+    val epochDir = new Path(path, s"slabs/$epochId")
     fs.delete(epochDir, true)
     if (thetaEpoch == thetaSum) {
       // the staged truncation already carries the right rho: promote it
@@ -586,23 +530,20 @@ object VocabIndex {
       victims.map(_.nDocs).sum,
       victims.map(s => BigInt(s.fingerprint)).sum.toString,
       victims.flatMap(v => v.id +: v.covers).sorted)
-    // every OTHER manifest entry is untouched state — re-read the live
-    // manifest and replace only the registry (compaction must not
-    // reconstruct totals it did not recompute)
-    val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val in = fs.open(mPath)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val manifest = graft.engine.QueryJson.parse(text)
-      .asInstanceOf[mutable.LinkedHashMap[String, Any]]
-    manifest.put("slabs", (epoch +: kept).map(slabEntry).toList)
-    writeManifest(spark, path, graft.engine.QueryJson.write(manifest))
+    // every OTHER manifest entry is untouched state — republish the
+    // live manifest with only the registry replaced (compaction must
+    // not reconstruct totals it did not recompute)
+    val m = ArtifactStore.read(spark, path, Kind, FormatVersion, "vocabulary")
+    ArtifactStore.publish(spark, path, Kind, FormatVersion, m.dataGen,
+      m.fields.toSeq.collect {
+        case ("slabs", _) => "slabs" -> (epoch +: kept).map(slabEntry).toList
+        case kv @ (f, _) if !Set("version", "kind", "data_gen")(f) => kv
+      }, Nil)
     // victim dirs go LAST, after the manifest stops referencing them: a
     // crash in this window leaves orphaned garbage dirs, not a registry
     // that dangles into missing parquet (the removeSlab ordering rule)
     for (v <- victims)
-      fs.delete(new org.apache.hadoop.fs.Path(path, s"slabs/${v.id}"), true)
+      fs.delete(new Path(path, s"slabs/${v.id}"), true)
     load(spark, path)
   }
 
@@ -629,7 +570,7 @@ object VocabIndex {
     * anti-join against the capacity-sized kept set. Only the KEPT
     * relations (≤ sumCap rows — the artifact's own size) ever flow
     * through a single task. Writes land directly in the NEXT
-    * generation's dirs ([[genDir]] with `newGen`) — fresh paths, so
+    * generation's dirs (`newGen`) — fresh paths, so
     * `norm` may lazily read the artifact's own CURRENT relations (the
     * update path does) and an unlocked reader of the current
     * generation never sees a file vanish; the caller repoints the
@@ -638,7 +579,7 @@ object VocabIndex {
                            norm: DataFrame, sumCap: Int, k: Int,
                            baseTheta: Long,
                            newGen: Long): (Long, Long, Long) = {
-    val sNext = new org.apache.hadoop.fs.Path(path, genDir("summary", newGen))
+    val sNext = new Path(path, ArtifactStore.genDirName("summary", newGen))
     // row counts ride the write as observed metrics — the manifest's
     // summary_rows/n_tokens used to cost two post-swap parquet counts
     // (the x78 job trim)
@@ -677,9 +618,6 @@ object VocabIndex {
       .withColumn("rank", row_number().over(w))
   }
 
-  private def writeManifest(spark: SparkSession, path: String, json: String): Unit =
-    ArtifactLock.publishManifest(spark, path, json) // temp + atomic rename
-
   /** Load a persisted vocabulary. Runs no Spark job — the relation is
     * returned lazy; schema and manifest coherence are checked, every
     * failure mode surfacing as IllegalArgumentException (the artifacts'
@@ -688,143 +626,51 @@ object VocabIndex {
     * manifest on a pruned-generation read failure); the relation handed
     * back stays lazy, so an action racing a LATER save is the consumer's
     * (or the HTTP server's re-plan retry's) window, bounded by the
-    * [[ArtifactLock.KeepGenerations]] generations every prune keeps. */
+    * [[ArtifactStore.KeepGenerations]] generations every prune keeps. */
   def load(spark: SparkSession, path: String): Artifact =
     ArtifactLock.retryingLoad(loadOnce(spark, path))
 
   private def loadOnce(spark: SparkSession, path: String): Artifact = {
-    val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mPath))
-      throw new IllegalArgumentException(
-        s"no vocabulary artifact at $path (missing manifest.json)")
-    val in = fs.open(mPath)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val parsed =
-      try graft.engine.QueryJson.parse(text)
-      catch { case e: Exception => throw new IllegalArgumentException(
-        s"malformed vocabulary manifest at $path: ${e.getMessage}") }
-    val manifest = parsed match {
-      case m: scala.collection.Map[String @unchecked, Any @unchecked] => m
-      case _ => throw new IllegalArgumentException(
-        s"malformed vocabulary manifest at $path")
-    }
-    if (!manifest.get("kind").contains("vocabulary"))
-      throw new IllegalArgumentException(
-        s"artifact at $path is not a vocabulary (kind=${manifest.get("kind")})")
-    if (!manifest.get("version").contains(FormatVersion.toLong))
-      throw new IllegalArgumentException(
-        s"unsupported vocabulary version ${manifest.get("version")} at $path")
-    val k = manifest.get("k") match {
-      case Some(l: Long) if l > 0 && l <= Int.MaxValue => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"vocabulary at $path is corrupt: bad k $other")
-    }
-    val capacity = manifest.get("capacity") match {
-      case None => None
-      case Some(l: Long) if l > 0 && l <= Int.MaxValue => Some(l.toInt)
-      case other => throw new IllegalArgumentException(
-        s"vocabulary at $path is corrupt: bad capacity $other")
-    }
-    val dataGen: Long = manifest.get("data_gen") match {
-      case None => 0L
-      case Some(l: Long) if l >= 0 => l
-      case other => throw new IllegalArgumentException(
-        s"vocabulary at $path is corrupt: bad data_gen $other")
-    }
+    val m = ArtifactStore.read(spark, path, Kind, FormatVersion, "vocabulary")
+    val k = m.posInt("k")
+    val capacity = m.optPosInt("capacity")
     import org.apache.spark.sql.types._
-    val theta = manifest.get("theta") match {
-      case None => None
-      case Some(l: Long) if l >= 0 => Some(l)
-      case other => throw new IllegalArgumentException(
-        s"vocabulary at $path is corrupt: bad theta $other")
-    }
-    val summary = theta.map { _ =>
-      // a theta-recording manifest promises the mergeable summary
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path,
-          genDir("summary", dataGen))))
-        throw new IllegalArgumentException(
-          s"vocabulary at $path is corrupt: manifest records theta but " +
-            "the summary relation is missing")
-      val s =
-        try spark.read.parquet(s"$path/${genDir("summary", dataGen)}")
-        catch { case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalArgumentException(
-            s"vocabulary at $path is corrupt: unreadable summary: ${e.getMessage}", e) }
-      def sType(n: String): Option[DataType] =
-        s.schema.fields.find(_.name == n).map(_.dataType)
-      if (!sType("token").contains(StringType) ||
-          !sType("lo").contains(LongType) || !sType("hi").contains(LongType))
-        throw new IllegalArgumentException(
-          s"vocabulary at $path is corrupt: summary must be " +
-            s"(token STRING, lo BIGINT, hi BIGINT), got ${s.schema.catalogString}")
+    def colTypes(df: DataFrame): Map[String, DataType] =
+      df.schema.fields.map(f => f.name -> f.dataType).toMap
+    // capacity-built artifacts store the mergeable summary and derive
+    // the vocabulary from it (its top-k rows — see [[writeSummary]]);
+    // exact builds store the vocabulary relation itself
+    val summary = capacity.map { _ =>
+      val s = ArtifactStore.readRelation(spark, m,
+        ArtifactStore.genDirName("summary", m.dataGen), "summary")
+      val t = colTypes(s)
+      if (!t.get("token").contains(StringType) ||
+          !t.get("lo").contains(LongType) || !t.get("hi").contains(LongType))
+        m.corrupt("summary must be (token STRING, lo BIGINT, hi BIGINT), got " +
+          s.schema.catalogString)
       s
     }
-    // capacity artifacts derive the vocabulary lazily from the summary
-    // (its top-k rows — see [[writeSummary]]); schema is then by
-    // construction. Exact artifacts read the stored relation. Artifacts
-    // written before the round-20 trim carry BOTH; the derived form is
-    // byte-identical, so deriving is always right when a summary exists.
     val vocab = summary match {
       case Some(s) => deriveVocab(s, k)
       case None =>
-        val v =
-          try spark.read.parquet(s"$path/${genDir("vocabulary", dataGen)}")
-          catch { case e: org.apache.spark.sql.AnalysisException =>
-            // cause attached: retryingLoad's classifier walks the chain to
-            // tell a maintenance race (PATH_NOT_FOUND) from real corruption.
-            // Note for readers of FOREIGN artifacts: capacity-built
-            // artifacts (manifest records `theta`) store only the summary
-            // and never reach this branch — a missing vocabulary/ here
-            // with a theta-less manifest is real corruption, not the
-            // round-20 layout change.
-            throw new IllegalArgumentException(
-              s"vocabulary at $path is corrupt: unreadable relation " +
-                "(note: capacity-built artifacts store a summary instead " +
-                s"of vocabulary/): ${e.getMessage}", e) }
-        def colType(n: String): Option[DataType] =
-          v.schema.fields.find(_.name == n).map(_.dataType)
-        if (!colType("token").contains(StringType) ||
-            !colType("n").contains(LongType) ||
-            !colType("rank").contains(IntegerType))
-          throw new IllegalArgumentException(
-            s"vocabulary at $path is corrupt: relation must be " +
-              s"(token STRING, n BIGINT, rank INT), got ${v.schema.catalogString}")
+        val v = ArtifactStore.readRelation(spark, m,
+          ArtifactStore.genDirName("vocabulary", m.dataGen), "relation")
+        val t = colTypes(v)
+        if (!t.get("token").contains(StringType) ||
+            !t.get("n").contains(LongType) || !t.get("rank").contains(IntegerType))
+          m.corrupt("relation must be (token STRING, n BIGINT, rank INT), got " +
+            v.schema.catalogString)
         v
     }
-    val slabs: Option[Seq[SlabMeta]] = manifest.get("slabs") match {
-      case None => None
-      case Some(l: List[_]) => Some(l.map {
-        case m: scala.collection.Map[String @unchecked, Any @unchecked] =>
-          (m.get("id"), m.get("theta"), m.get("n_docs"), m.get("fingerprint")) match {
-            case (Some(i: Long), Some(t: Long), Some(n: Long), Some(f: String)) =>
-              val covers = m.get("covers") match {
-                case None => Nil
-                case Some(l: List[_]) if l.forall(_.isInstanceOf[Long]) =>
-                  l.asInstanceOf[List[Long]]
-                case other => throw new IllegalArgumentException(
-                  s"vocabulary at $path is corrupt: bad slab covers $other")
-              }
-              SlabMeta(i, t, n, f, covers)
-            case _ => throw new IllegalArgumentException(
-              s"vocabulary at $path is corrupt: malformed slab entry $m")
-          }
-        case other => throw new IllegalArgumentException(
-          s"vocabulary at $path is corrupt: malformed slab entry $other")
-      })
-      case other => throw new IllegalArgumentException(
-        s"vocabulary at $path is corrupt: bad slabs $other")
-    }
-    Artifact(vocab, k, capacity,
-      manifest.get("text_col").collect { case s: String => s },
-      manifest.get("n_docs").collect { case l: Long => l },
-      manifest.get("n_tokens").collect { case l: Long => l },
-      manifest.get("fingerprint").collect { case s: String => s },
-      summary, theta, slabs, dataGen,
-      manifest.get("summary_rows").collect { case l: Long => l })
+    val slabs = capacity.map(_ => m.entries("slabs").map(e =>
+      SlabMeta(e.long("id"), e.long("theta"), e.long("n_docs"),
+        e.string("fingerprint"), e.optLongs("covers").getOrElse(Nil))))
+    Artifact(vocab, k, capacity, m.string("text_col"), m.long("n_docs"),
+      m.long("n_tokens"), m.string("fingerprint"), summary,
+      capacity.map(_ => m.long("theta")), slabs, m.dataGen,
+      capacity.map(_ => m.long("summary_rows")))
   }
+
 
   /** The token set for a requested vocabulary size: `rank <= size` over
     * the stored relation (one artifact at a generous k serves every
@@ -852,11 +698,9 @@ object VocabIndex {
     if (row.getInt(1).toLong != actual)
       throw new IllegalArgumentException(
         s"$what is corrupt: max rank ${row.getInt(1)} != row count $actual")
-    art.nTokens.foreach { recorded =>
-      if (actual != recorded)
-        throw new IllegalArgumentException(
-          s"$what is corrupt: manifest claims $recorded tokens, parquet holds $actual")
-    }
+    if (actual != art.nTokens)
+      throw new IllegalArgumentException(
+        s"$what is corrupt: manifest claims ${art.nTokens} tokens, parquet holds $actual")
     // capacity artifacts derive the vocabulary from the summary, which
     // makes the count/rank check above true BY CONSTRUCTION (count ==
     // maxRank == min(k, summary rows)) — the real data plane is the
@@ -884,14 +728,10 @@ object VocabIndex {
   /** [[verifyContent]] against an ALREADY-loaded artifact. */
   def verifyContent(art: Artifact, what: String, corpus: DataFrame,
                     textCol: String): Unit = {
-    val recorded = art.contentFingerprint.getOrElse(
-      throw new IllegalArgumentException(
-        s"$what records no content fingerprint " +
-          "(pre-fingerprint artifact) — rebuild it to enable verification"))
     val (current, n) = fingerprintAndCount(corpus, textCol)
-    if (art.nDocs.exists(_ != n) || current != recorded)
+    if (art.nDocs != n || current != art.contentFingerprint)
       throw new IllegalArgumentException(
         s"$what is stale: corpus fingerprint $current (n=$n) does not match " +
-          s"the recorded $recorded (n=${art.nDocs.getOrElse("?")}) — rebuild the artifact")
+          s"the recorded ${art.contentFingerprint} (n=${art.nDocs}) — rebuild the artifact")
   }
 }

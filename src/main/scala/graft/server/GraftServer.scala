@@ -11,6 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
 
 import graft.engine._
+import graft.ops.ArtifactLock
 import graft.sources.{Ingest, Serialize}
 
 /** HTTP front replicating the reference's API surface
@@ -360,19 +361,6 @@ final class GraftServer(spark: SparkSession, port: Int,
   private def errorJson(msg: String): String =
     s"""{"error": ${graft.engine.QueryJson.write(msg)}}"""
 
-  /** TRUE iff a query failure bottoms out in a MISSING INPUT FILE — the
-    * signature of an artifact maintenance swap (a MinHash shard
-    * delete+rename, an IVF/Bloom/Vocab generation prune) racing a read
-    * whose plan captured the pre-swap file listing. Those reads are
-    * correct against the post-swap artifact; the server retries them
-    * once or twice against a freshly-built plan (see the query attempt
-    * loop). Delegates to the shared tightened classifier
-    * ([[graft.ops.ArtifactLock.isMissingInputFile]]) — file-read
-    * signatures only, so a genuinely-missing dataset path is NOT
-    * misclassified as retryable churn. */
-  private def isMissingInputFile(e: Throwable): Boolean =
-    graft.ops.ArtifactLock.isMissingInputFile(e)
-
   private def query(exchange: HttpExchange, key: String, qJson: String): Unit = {
     val t0 = clock()
     val accept = acceptType(exchange)
@@ -477,16 +465,21 @@ final class GraftServer(spark: SparkSession, port: Int,
           // can
           (text, result.unslicedLength(rowCount))
         }
-        // READ-ONLY retries: a maintenance clause that failed mid-write
-        // must surface, never silently re-apply (a second vocab_update
-        // would double its delta)
+        // a failure that bottoms out in a MISSING INPUT FILE is an
+        // artifact maintenance swap (a MinHash shard delete+rename, a
+        // generation prune) racing a plan that captured the pre-swap file
+        // listing: re-plan once or twice. The shared classifier matches
+        // file-read signatures only, so a genuinely missing dataset path
+        // is not retried. READ-ONLY retries: a maintenance clause that
+        // failed mid-write must surface, never silently re-apply (a
+        // second vocab_update would double its delta)
         val retryable = !forced && !XopEngine.hasMaintenance(q)
         val (text, unsliced) =
           try attempt()
-          catch { case e: Throwable if retryable && isMissingInputFile(e) =>
+          catch { case e: Throwable if retryable && ArtifactLock.isMissingInputFile(e) =>
             item.invalidateMemo(memoKey) // the rebuilt plan re-memoizes
             try attempt()
-            catch { case e2: Throwable if isMissingInputFile(e2) =>
+            catch { case e2: Throwable if ArtifactLock.isMissingInputFile(e2) =>
               Thread.sleep(50)
               item.invalidateMemo(memoKey)
               attempt()
@@ -578,9 +571,15 @@ final class GraftServer(spark: SparkSession, port: Int,
   * README.
   *
   * `--index-root` (graft extension, default off) names the directory
-  * under which `ann_ivf`/`emb_cluster` xop queries may reference
-  * persisted quantizer artifacts via their `index` argument (relative
-  * paths only — without the flag the argument is rejected).
+  * under which xop queries may reference persisted index artifacts —
+  * all five families (IVF quantizers for `ann_ivf`/`emb_cluster`/
+  * `semantic_dedup`/`ivf_refine`, Bloom sketches for
+  * `exclude_ids`/`bloom_update`, MinHash signatures for
+  * `minhash_against`/`dedup_sweep`/`index_update`, decontamination
+  * grams for `decontaminate`, vocabularies for `oov_rate`/
+  * `vocab_update`/`vocab_remove_slab`/`vocab_compact`) — via their
+  * `index` argument (relative paths only — without the flag the
+  * argument is rejected).
   *
   * A bare leading number is accepted as the port (back-compat). TLS comes
   * from a PEM bundle (key + cert); `--ca-file` additionally requires and

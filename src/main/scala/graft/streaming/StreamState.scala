@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-import graft.ops.ArtifactLock
+import graft.ops.{ArtifactLock, ArtifactStore}
 
 /** Durable snapshots of a streaming twin's driver-held accumulator, so
   * `rateAnomalyStream` / `retentionStream` can RESUME from an existing
@@ -16,10 +16,10 @@ import graft.ops.ArtifactLock
   *
   * Layout mirrors the artifact kinds (same torn-read posture):
   * `<dir>/manifest.json` published atomically
-  * ([[ArtifactLock.publishManifest]]) carrying `epoch` + `data_gen`,
+  * ([[ArtifactStore.publishManifest]]) carrying `epoch` + `data_gen`,
   * each relation in a generationed directory
-  * ([[ArtifactLock.genDirName]]), the previous
-  * [[ArtifactLock.KeepGenerations]] generations kept for any lagging
+  * ([[ArtifactStore.genDirName]]), the previous
+  * [[ArtifactStore.KeepGenerations]] generations kept for any lagging
   * reader, loads retried through [[ArtifactLock.retryingLoad]].
   *
   * Exactness across the crash window (foreachBatch is at-least-once:
@@ -78,11 +78,10 @@ private[graft] object StreamState {
               relations: Seq[(String, DataFrame)],
               extraMeta: Seq[(String, Any)] = Nil): Unit =
     ArtifactLock.withWriteLock(dir) {
-      val newGen: Long =
-        ArtifactLock.currentDataGen(spark, dir).map(_ + 1L).getOrElse(0L)
+      val newGen = ArtifactStore.nextGen(spark, dir)
       relations.foreach { case (base, df) =>
         df.write.mode(SaveMode.Overwrite)
-          .parquet(s"$dir/${ArtifactLock.genDirName(base, newGen)}")
+          .parquet(s"$dir/${ArtifactStore.genDirName(base, newGen)}")
       }
       val manifest = scala.collection.mutable.LinkedHashMap[String, Any](
         "version" -> FormatVersion,
@@ -91,7 +90,7 @@ private[graft] object StreamState {
         "epoch" -> epoch)
       currentQueryId(spark).foreach(id => manifest("query_id") = id)
       extraMeta.foreach { case (k, v) => manifest(k) = v }
-      ArtifactLock.publishManifest(spark, dir,
+      ArtifactStore.publishManifest(spark, dir,
         graft.engine.QueryJson.write(manifest))
       // keep=1: unlike the shared index artifacts (unlocked readers
       // that can lag several saves while holding a captured file
@@ -101,7 +100,7 @@ private[graft] object StreamState {
       // whole. One prior generation covers that window without
       // retaining a third state-sized copy (the users relation is
       // user-count-shaped at every epoch).
-      ArtifactLock.pruneGenerations(spark, dir, relations.map(_._1), newGen,
+      ArtifactStore.pruneGenerations(spark, dir, relations.map(_._1), newGen,
         keep = 1L)
     }
 
@@ -132,7 +131,7 @@ private[graft] object StreamState {
       val next = scala.collection.mutable.LinkedHashMap[String, Any]()
       manifest.foreach { case (k, v) => next(k) = v }
       next("epoch") = epoch
-      ArtifactLock.publishManifest(spark, dir,
+      ArtifactStore.publishManifest(spark, dir,
         graft.engine.QueryJson.write(next))
     }
 
@@ -196,7 +195,7 @@ private[graft] object StreamState {
       // eager materialization INSIDE the retry attempt: the returned
       // frames must not be lazy plans over files a concurrent prune
       // can delete after this call returns
-      b -> spark.read.parquet(s"$dir/${ArtifactLock.genDirName(b, gen)}")
+      b -> spark.read.parquet(s"$dir/${ArtifactStore.genDirName(b, gen)}")
         .localCheckpoint()
     }.toMap
     Some(Snapshot(epoch, rels, manifest))

@@ -34,7 +34,7 @@ object BuildMinhashIndex {
     val corpus = spark.read.parquet(src)
     val art = graft.ops.MinHashIndex.buildAndSave(corpus, idCol, textCol,
       numHashes = nhS.toInt, shingleSize = shS.toInt, path = out)
-    println(s"built minhash index (${art.nDocs.getOrElse(-1L)} docs, " +
+    println(s"built minhash index (${art.nDocs} docs, " +
       s"num_hashes=${art.numHashes}, shingle_size=${art.shingleSize}) -> $out")
     spark.stop()
   }

@@ -34,7 +34,7 @@ object BuildVocabIndex {
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(src)
     val art = graft.ops.VocabIndex.buildAndSave(docs, textCol, k, out, capacity)
-    println(s"built top-${art.k} vocabulary (${art.nTokens.getOrElse(-1L)} tokens, " +
+    println(s"built top-${art.k} vocabulary (${art.nTokens} tokens, " +
       s"capacity=${art.capacity.getOrElse(0)}, " +
       s"slabs=${art.slabs.map(_.length).getOrElse(0)}) -> $out")
     spark.stop()

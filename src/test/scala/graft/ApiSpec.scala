@@ -319,7 +319,7 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.graft.index.root", root)
     try {
       def nDocs: Long =
-        graft.ops.VocabIndex.load(spark, s"$root/fv").nDocs.get
+        graft.ops.VocabIndex.load(spark, s"$root/fv").nDocs
       assert(nDocs == 1L)
       // a schema unique to this test so ShapeWarmer state is isolated
       assert(storeCsv("fmaint", "vtext\ngamma delta\ngamma\n").statusCode() == 201)

@@ -11,7 +11,7 @@ import graft.ops.VocabIndex
   * new, never a truncated one. The previous create-overwrite truncated
   * manifest.json in place (a real torn-read window on every
   * maintenance write); publishes now go through
-  * [[graft.ops.ArtifactLock.publishManifest]] (hidden temp + atomic
+  * [[graft.ops.ArtifactStore.publishManifest]] (hidden temp + atomic
   * rename-with-OVERWRITE). This spec hammers that window: a reader
   * thread loads the artifact in a tight loop while the main thread
   * drives updates and multi-dir slab compactions. */

@@ -68,7 +68,7 @@ class CrossProcessLeaseSpec extends AnyFunSuite {
 
     // every one-doc cycle from BOTH processes must be in the manifest
     val art = VocabIndex.load(spark, path)
-    assert(art.nDocs.contains(2L + 2 * n),
+    assert(art.nDocs == 2L + 2 * n,
       s"lost update: expected ${2 + 2 * n} docs, manifest has ${art.nDocs}")
     // and the lease is released once all maintenance is done
     val lease = ArtifactLock.leasePathOf(path)
@@ -105,7 +105,7 @@ class CrossProcessLeaseSpec extends AnyFunSuite {
     assert(deletedAt > 0 && updateDoneAt >= deletedAt,
       s"update completed ${deletedAt - updateDoneAt} ms BEFORE the live " +
         "foreign lease was released — the wait is broken")
-    assert(VocabIndex.load(spark, path).nDocs.contains(2L))
+    assert(VocabIndex.load(spark, path).nDocs == 2L)
 
     // plant a STALE foreign lease (mtime pushed past the threshold):
     // the next maintenance takes it over instead of waiting forever
@@ -116,7 +116,7 @@ class CrossProcessLeaseSpec extends AnyFunSuite {
         System.currentTimeMillis() - staleMs - 5000))
     VocabIndex.update(spark, path,
       Seq((11L, "delta")).toDF("doc_id", "text"), "text", maxSlabs = 0)
-    assert(VocabIndex.load(spark, path).nDocs.contains(3L))
+    assert(VocabIndex.load(spark, path).nDocs == 3L)
     assert(!java.nio.file.Files.exists(leaseFile),
       "lease not released after the takeover's maintenance finished")
   }
@@ -166,7 +166,7 @@ class CrossProcessLeaseSpec extends AnyFunSuite {
       Seq((12L, "epsilon")).toDF("doc_id", "text"), "text", maxSlabs = 0)
     val waited = System.currentTimeMillis() - t0
     assert(waited < 60000, s"dead-pid lease not fast-tracked (waited $waited ms)")
-    assert(VocabIndex.load(spark, path).nDocs.contains(2L))
+    assert(VocabIndex.load(spark, path).nDocs == 2L)
     assert(!java.nio.file.Files.exists(leaseFile))
 
     // negative control: a LIVE same-host pid with the same old mtime is
@@ -194,6 +194,6 @@ class CrossProcessLeaseSpec extends AnyFunSuite {
     assert(deletedAt2 > 0 && updateDoneAt2 >= deletedAt2,
       s"update completed ${deletedAt2 - updateDoneAt2} ms BEFORE the live " +
         "same-host lease was released — the dead-pid fast path stole it")
-    assert(VocabIndex.load(spark, path).nDocs.contains(3L))
+    assert(VocabIndex.load(spark, path).nDocs == 3L)
   }
 }

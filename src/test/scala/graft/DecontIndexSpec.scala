@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Decontaminate, DecontIndex}
+import graft.ops.{ArtifactLock, Decontaminate, DecontIndex}
 
 /** The persisted decontamination artifact: the index-served operator
   * must be indistinguishable from the inline derivation, suite refresh
@@ -43,24 +43,6 @@ class DecontIndexSpec extends AnyFunSuite {
     Decontaminate.contaminated(train, evalDf, "doc_id", "text", n = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
 
-  test("pre-raw-format artifacts (parquet sketch) still load and probe") {
-    // the round-21 trim stores the sketch as bloom[-g]/sketch.bin; an
-    // artifact written before it (1-row parquet sketch) must keep
-    // loading — rewrite a fresh artifact's sketch into the legacy
-    // layout and load through it
-    val path = tmp("dc_legacy")
-    val art = DecontIndex.buildAndSave(eval, "text", path, n = 4)
-    val genDir = new org.apache.hadoop.fs.Path(path,
-      graft.ops.ArtifactLock.genDirName("bloom", art.dataGen))
-    val fs = genDir.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(genDir, true)
-    Seq(Tuple1(art.bloomBytes)).toDF("bloom").coalesce(1)
-      .write.parquet(genDir.toString)
-    val legacy = DecontIndex.load(spark, path)
-    assert(java.util.Arrays.equals(legacy.bloomBytes, art.bloomBytes))
-    assert(probe(legacy) == inline(eval))
-  }
-
   test("index-served contamination equals the inline operator exactly") {
     val path = tmp("dc_basic")
     val art = DecontIndex.buildAndSave(eval, "text", path, n = 4)
@@ -76,6 +58,23 @@ class DecontIndexSpec extends AnyFunSuite {
         Decontaminate.wordNgrams(col("text"), 4, distinct = true)).as("g"))
       .select("g").distinct().count()
     assert(reloaded.nGrams == nDistinct)
+  }
+
+  test("a suite with no n-gram of length n persists an empty artifact that flags nothing") {
+    val path = tmp("dc_empty")
+    // every document is shorter than n = 8 (or null)
+    val short = eval.filter(col("doc_id") =!= 101L && col("doc_id") =!= 102L)
+    val art = DecontIndex.buildAndSave(short, "text", path, n = 8)
+    assert(art.nGrams == 0L)
+    val loaded = DecontIndex.load(spark, path)
+    assert(loaded.nGrams == 0L && loaded.grams.count() == 0L)
+    assert(probe(loaded).isEmpty)
+    DecontIndex.verifyContent(loaded, "decont index", short, "text")
+    // a later delta with real grams updates it like any other artifact
+    val grown = DecontIndex.update(spark, path, "text",
+      added = Some(Seq((9L, "one two three four five six seven eight nine"))
+        .toDF("doc_id", "text")))
+    assert(grown.nGrams == 2L)
   }
 
   test("update folds suite deltas exactly; shared grams survive removal") {
@@ -133,7 +132,7 @@ class DecontIndexSpec extends AnyFunSuite {
     val foreign = intercept[IllegalArgumentException] {
       DecontIndex.load(spark, bloomPath)
     }
-    assert(foreign.getMessage.contains("not a decontamination index"))
+    assert(foreign.getMessage.contains("expected decont_ngram"))
   }
 
   test("verifyContent: green on the built suite, stale after it changes") {
@@ -206,7 +205,7 @@ class DecontIndexSpec extends AnyFunSuite {
       (1 to 20).foreach { _ =>
         // plan AND action inside the retry (the collect is where a
         // captured pruned-generation listing actually fails)
-        val got = DecontIndex.probeRetrying(spark, path) { art =>
+        val got = ArtifactLock.probeRetrying(DecontIndex.load(spark, path)) { art =>
           Decontaminate.contaminatedWith(train, "doc_id", "text", art)
             .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
         }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, MinHashIndex}
+import graft.ops.{ArtifactLock, Dedup, MinHashIndex}
 
 /** Persisted MinHash signature index: the index-served operators must be
   * EXACTLY the inline ones (signatures round-trip parquet bit-exactly),
@@ -94,10 +94,10 @@ class MinHashIndexSpec extends AnyFunSuite {
       numHashes = 32, shingleSize = 2, path = path)
     val art = MinHashIndex.load(spark, path)
     assert(art.numHashes == 32 && art.shingleSize == 2)
-    assert(art.idCol.contains("doc_id"))
-    assert(art.idType.contains("bigint"))
-    assert(art.nDocs.contains(6L))
-    assert(art.contentFingerprint.nonEmpty)
+    assert(art.idCol == "doc_id")
+    assert(art.idType == "bigint")
+    assert(art.nDocs == 6L)
+    assert(art.contentFingerprint == MinHashIndex.fingerprint(corpus, "doc_id", "text"))
     // the signature relation is lazy and corpus-shaped; fp is the
     // per-row fingerprint summand incremental update runs on
     assert(art.sigs.columns.toSeq == Seq("id", "sig", "fp"))
@@ -144,7 +144,7 @@ class MinHashIndexSpec extends AnyFunSuite {
     // delta-updated manifest must carry the same fingerprint and count
     assert(rows(updated) == rows(scratch))
     assert(updated.contentFingerprint == scratch.contentFingerprint)
-    assert(updated.nDocs == scratch.nDocs && updated.nDocs.contains(6L))
+    assert(updated.nDocs == scratch.nDocs && updated.nDocs == 6L)
     MinHashIndex.verifyContent(spark, updPath, v2, "doc_id", "text")
     MinHashIndex.verifyCount(updated, "updated index")
     // probes off the updated artifact equal inline probes of v2
@@ -171,23 +171,6 @@ class MinHashIndexSpec extends AnyFunSuite {
         .toList
     assert(srows(nUpd) == srows(nScratch))
     assert(nUpd.contentFingerprint == nScratch.contentFingerprint)
-
-    // a pre-incremental artifact (no fp column) refuses update with a
-    // rebuild instruction instead of corrupting the fingerprint
-    val bare = s"$root/prefp"
-    val art = MinHashIndex.load(spark, updPath)
-    art.sigs.select("id", "sig").write.parquet(s"$bare/signatures")
-    val p = new org.apache.hadoop.fs.Path(bare, "manifest.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(
-      ("""{"version":1,"kind":"minhash_signatures","num_hashes":64,""" +
-        """"shingle_size":3,"n_docs":6,"fingerprint":"0"}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val e = intercept[IllegalArgumentException] {
-      MinHashIndex.update(spark, bare, v2, "doc_id", "text") }
-    assert(e.getMessage.contains("predates incremental maintenance"))
   }
 
   /** Per-file MD5 of a directory tree (data files only) — the
@@ -340,21 +323,25 @@ class MinHashIndexSpec extends AnyFunSuite {
     graft.ops.BloomIndex.buildAndSave(Seq(1L).toDF("id"), "id", 0.01, s"$root/bl")
     val e2 = intercept[IllegalArgumentException] {
       MinHashIndex.load(spark, s"$root/bl") }
-    assert(e2.getMessage.contains("not a minhash signature index"))
+    assert(e2.getMessage.contains("expected minhash_signatures"))
     // good artifact, then tampered manifests
     val path = s"$root/idx"
     MinHashIndex.buildAndSave(corpus, "doc_id", "text", path = path)
-    writeManifest(path, """{"version":99,"kind":"minhash_signatures","num_hashes":64,"shingle_size":3}""")
+    def manifest(version: Int, fields: String): String =
+      s"""{"version":$version,"kind":"minhash_signatures","data_gen":0,""" +
+        s""""id_col":"doc_id","id_type":"bigint","n_docs":6,""" +
+        s""""fingerprint":"0","shard_span":1048576$fields}"""
+    writeManifest(path, manifest(99, ""","num_hashes":64,"shingle_size":3"""))
     val e3 = intercept[IllegalArgumentException] { MinHashIndex.load(spark, path) }
     assert(e3.getMessage.contains("version"))
-    writeManifest(path, """{"version":1,"kind":"minhash_signatures","shingle_size":3}""")
+    writeManifest(path, manifest(2, ""","shingle_size":3"""))
     val e4 = intercept[IllegalArgumentException] { MinHashIndex.load(spark, path) }
     assert(e4.getMessage.contains("num_hashes"))
     writeManifest(path, "{not json")
     val e5 = intercept[IllegalArgumentException] { MinHashIndex.load(spark, path) }
-    assert(e5.getMessage.contains("malformed minhash manifest"))
+    assert(e5.getMessage.contains("malformed minhash index manifest"))
     // unreadable signatures parquet
-    writeManifest(path, """{"version":1,"kind":"minhash_signatures","num_hashes":64,"shingle_size":3}""")
+    writeManifest(path, manifest(2, ""","num_hashes":64,"shingle_size":3"""))
     val sigDir = new org.apache.hadoop.fs.Path(path, "signatures")
     sigDir.getFileSystem(spark.sessionState.newHadoopConf()).delete(sigDir, true)
     val e6 = intercept[IllegalArgumentException] { MinHashIndex.load(spark, path) }
@@ -391,27 +378,14 @@ class MinHashIndexSpec extends AnyFunSuite {
     val e3 = intercept[IllegalArgumentException] {
       MinHashIndex.verifyContent(spark, path, grown, "doc_id", "text") }
     assert(e3.getMessage.contains("stale"))
-    // a hand-saved pre-fingerprint artifact cannot be verified
-    val bare = tmpDir() + "/bare"
-    val art = MinHashIndex.load(spark, path)
-    art.sigs.write.parquet(s"$bare/signatures")
-    val p = new org.apache.hadoop.fs.Path(bare, "manifest.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(
-      """{"version":1,"kind":"minhash_signatures","num_hashes":64,"shingle_size":3}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val e4 = intercept[IllegalArgumentException] {
-      MinHashIndex.verifyContent(spark, bare, corpus, "doc_id", "text") }
-    assert(e4.getMessage.contains("no content fingerprint"))
   }
 
   test("probeRetrying serves library-level probes through update churn") {
     // the sharded layout swaps shard files IN PLACE (no generations —
     // the relation is corpus-sized), so a direct library consumer whose
     // plan captured a pre-swap file listing races every update. The
-    // HTTP server absorbs that with its re-plan retry; probeRetrying is
+    // HTTP server absorbs that with its re-plan retry;
+    // ArtifactLock.probeRetrying is
     // the same retry for library callers — this churn test is an update
     // thread against a repeated plan-and-act probe, zero failures.
     val path = tmpDir() + "/idx"
@@ -441,7 +415,7 @@ class MinHashIndexSpec extends AnyFunSuite {
       (1 to 40).foreach { _ =>
         // plan AND action inside the retry — the count() is where a
         // captured pre-swap listing actually fails
-        val n = MinHashIndex.probeRetrying(spark, path) { art =>
+        val n = ArtifactLock.probeRetrying(MinHashIndex.load(spark, path)) { art =>
           Dedup.minhashPairsAgainstIndex(batch, "doc_id", "text", art).count()
         }
         // the updated row 5 never matches the batch, so the pair count

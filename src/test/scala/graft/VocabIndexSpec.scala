@@ -31,9 +31,9 @@ class VocabIndexSpec extends AnyFunSuite {
     val path = tmpDir() + "/v"
     val art = VocabIndex.buildAndSave(corpus, "text", k = 5, path = path)
     assert(art.k == 5 && art.capacity.isEmpty)
-    assert(art.textCol.contains("text"))
-    assert(art.nDocs.contains(5L) && art.nTokens.contains(5L))
-    assert(art.contentFingerprint.nonEmpty)
+    assert(art.textCol == "text")
+    assert(art.nDocs == 5L && art.nTokens == 5L)
+    assert(art.contentFingerprint == VocabIndex.fingerprint(corpus, "text"))
     val stored = art.vocab.orderBy("rank").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq
     val inline = TextOps.topTokens(corpus, "text", 5).collect()
@@ -145,9 +145,9 @@ class VocabIndexSpec extends AnyFunSuite {
       onlyB.contentFingerprint == bOnly.contentFingerprint)
     // removing the last slab leaves a legal empty vocabulary
     val empty = VocabIndex.removeSlab(spark, path, 1L)
-    assert(empty.nDocs.contains(0L) && empty.nTokens.contains(0L))
+    assert(empty.nDocs == 0L && empty.nTokens == 0L)
     assert(empty.vocab.count() == 0L)
-    // guards: unknown slab, exact-built artifact, legacy artifact
+    // guards: unknown slab, exact-built artifact
     val eU = intercept[IllegalArgumentException] {
       VocabIndex.removeSlab(spark, path, 99L) }
     assert(eU.getMessage.contains("no slab"))
@@ -339,20 +339,23 @@ class VocabIndexSpec extends AnyFunSuite {
     graft.ops.BloomIndex.buildAndSave(Seq(1L).toDF("id"), "id", 0.01, s"$root/bl")
     val e2 = intercept[IllegalArgumentException] {
       VocabIndex.load(spark, s"$root/bl") }
-    assert(e2.getMessage.contains("not a vocabulary"))
+    assert(e2.getMessage.contains("expected vocabulary"))
     val path = s"$root/v"
     VocabIndex.buildAndSave(corpus, "text", k = 3, path = path)
-    writeManifest(path, """{"version":99,"kind":"vocabulary","k":3}""")
+    def manifest(version: Int, k: String): String =
+      s"""{"version":$version,"kind":"vocabulary","data_gen":0,$k""" +
+        """"text_col":"text","n_docs":5,"n_tokens":3,"fingerprint":"0"}"""
+    writeManifest(path, manifest(99, """"k":3,"""))
     assert(intercept[IllegalArgumentException] {
       VocabIndex.load(spark, path) }.getMessage.contains("version"))
-    writeManifest(path, """{"version":1,"kind":"vocabulary"}""")
+    writeManifest(path, manifest(2, ""))
     assert(intercept[IllegalArgumentException] {
       VocabIndex.load(spark, path) }.getMessage.contains("bad k"))
     writeManifest(path, "{not json")
     assert(intercept[IllegalArgumentException] {
       VocabIndex.load(spark, path) }.getMessage.contains("malformed"))
     // wrong relation schema
-    writeManifest(path, """{"version":1,"kind":"vocabulary","k":3}""")
+    writeManifest(path, manifest(2, """"k":3,"""))
     val vDir = new org.apache.hadoop.fs.Path(path, "vocabulary")
     vDir.getFileSystem(spark.sessionState.newHadoopConf()).delete(vDir, true)
     Seq(("a", 1L)).toDF("token", "nope").write.parquet(s"$path/vocabulary")
@@ -418,7 +421,7 @@ class VocabIndexSpec extends AnyFunSuite {
       VocabIndex.update(spark, path, d, "text", maxSlabs = 0) })
     Await.result(Future.sequence(fs), 120.seconds)
     val art = VocabIndex.load(spark, path)
-    assert(art.nDocs.contains(5L + 4L),
+    assert(art.nDocs == 5L + 4L,
       s"lost update: n_docs=${art.nDocs}")
     assert(art.slabs.exists(_.length == 5), // base slab + one per update
       s"lost registry entry: ${art.slabs.map(_.length)}")

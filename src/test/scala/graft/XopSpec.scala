@@ -492,6 +492,31 @@ class XopSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.index.root")
   }
 
+  test("an 'index' naming an older-format (v1) artifact is a 400 that says rebuild") {
+    val root = java.nio.file.Files.createTempDirectory("xop_index_v1").toString
+    graft.ops.IvfIndex.save(spark, s"$root/q", Seq(Seq(2.0, 0.0), Seq(0.0, 0.5)),
+      nCells = 2, kmeansIters = 0)
+    // the same quantizer as written by a version-1 build
+    val mp = new org.apache.hadoop.fs.Path(s"$root/q", "manifest.json")
+    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
+    val out = fs.create(mp, true)
+    try out.write(("""{"version":1,"kind":"ivf_coarse_quantizer","n_cells":2,""" +
+      """"n_centroids":2,"dim":2,"kmeans_iters":0}""").getBytes("UTF-8"))
+    finally out.close()
+    spark.conf.set("spark.graft.index.root", root)
+    try {
+      val e = intercept[MalformedQueryException] { runV(
+        """{"xop": {"name": "emb_cluster", "args": {"column": "vec", "index": "q"}}}""") }
+      assert(e.getMessage.contains("older format (version 1)") &&
+        e.getMessage.contains("rebuild"), e.getMessage)
+      // maintenance clauses refuse it the same way, before any write
+      val e2 = intercept[MalformedQueryException] { runV(
+        """{"xop": {"name": "ivf_refine",
+                    "args": {"column": "vec", "index": "q", "iters": 1}}}""") }
+      assert(e2.getMessage.contains("older format (version 1)"), e2.getMessage)
+    } finally spark.conf.unset("spark.graft.index.root")
+  }
+
   test("cluster-balanced sampling: emb_cluster nests into sample_stratified") {
     // the semantic-balancing chain: assign clusters, then keep k per
     // cluster — one nested-from query, strata = the derived column
