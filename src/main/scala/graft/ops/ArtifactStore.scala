@@ -151,43 +151,60 @@ object ArtifactStore {
       m.corrupt(s"unreadable $name: ${e.getMessage}", e) }
 
   /** Atomically publish `json` as `<path>/manifest.json`: write to a
-    * hidden sibling temp file, then rename over the target with
-    * OVERWRITE via FileContext — the one rename Hadoop guarantees
-    * atomic on local POSIX filesystems and HDFS alike. Readers racing
-    * the publish see complete old bytes or complete new bytes; there is
-    * no moment where the manifest is missing or truncated. */
+    * hidden sibling temp file, then rename over the target — a POSIX
+    * rename on local filesystems, FileContext's rename with OVERWRITE
+    * elsewhere, each the rename its filesystem guarantees atomic.
+    * Readers racing the publish see complete old bytes or complete new
+    * bytes; there is no moment where the manifest is missing or
+    * truncated. */
   def publishManifest(spark: SparkSession, path: String, json: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path, "manifest.json")
     val tmp = new Path(path,
       s".manifest.json.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val bytes = json.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val fs = p.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
     val scheme = Option(fs.getUri.getScheme).getOrElse("file")
-    try {
-      if (scheme == "file" || scheme == "local") {
-        // POSIX rename: the only rename that is truly atomic-with-replace
-        // on a local filesystem. Hadoop's local FileContext rename with
-        // OVERWRITE deletes the destination FIRST (a missing-manifest
-        // window the ArtifactRaceSpec hammer actually caught under load).
-        val dir = java.nio.file.Paths.get(new Path(path).toUri.getPath)
-        java.nio.file.Files.move(dir.resolve(tmp.getName), dir.resolve(p.getName),
+    if (scheme == "file" || scheme == "local") {
+      // Hadoop's local FileContext rename with OVERWRITE deletes the
+      // destination FIRST (a missing-manifest window the ArtifactRaceSpec
+      // hammer actually caught under load), so the temp is written and
+      // moved with java.nio. Hadoop's checksummed create would leave a
+      // `.crc` sidecar the move cannot carry, and a `.manifest.json.crc`
+      // from a manifest once written through Hadoop would no longer match:
+      // it goes before the move, so a reader in between reads the old
+      // manifest unchecked rather than the new one against a stale sum.
+      val dir = java.nio.file.Paths.get(new Path(path).toUri.getPath)
+      val tmpFile = dir.resolve(tmp.getName)
+      try {
+        java.nio.file.Files.write(tmpFile, bytes)
+        java.nio.file.Files.deleteIfExists(dir.resolve(".manifest.json.crc"))
+        java.nio.file.Files.move(tmpFile, dir.resolve(p.getName),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } else {
-        // HDFS-class filesystems implement rename-with-OVERWRITE
-        // atomically at the namenode
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-        fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      } catch { case e: Throwable =>
+        // a failed publish must not leak the hidden temp (nothing else
+        // ever cleans a live-JVM failure; crash leftovers are swept by
+        // pruneGenerations). The publish itself still failed — rethrow.
+        try java.nio.file.Files.deleteIfExists(tmpFile) catch { case _: Exception => () }
+        throw e
       }
-    } catch { case e: Throwable =>
-      // a failed rename must not leak the hidden temp (nothing else ever
-      // cleans a live-JVM failure; crash leftovers are swept by
-      // pruneGenerations). The publish itself still failed — rethrow.
-      try fs.delete(tmp, false) catch { case _: Exception => () }
-      throw e
+      // best effort: the sidecars temps once written through Hadoop left
+      try {
+        val orphans = java.nio.file.Files.newDirectoryStream(dir, "..manifest.json.*.tmp.crc")
+        try orphans.forEach(f => java.nio.file.Files.deleteIfExists(f)) finally orphans.close()
+      } catch { case _: java.io.IOException => () }
+    } else {
+      val out = fs.create(tmp, true)
+      try out.write(bytes) finally out.close()
+      // HDFS-class filesystems implement rename-with-OVERWRITE
+      // atomically at the namenode
+      try org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
+        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      catch { case e: Throwable =>
+        try fs.delete(tmp, false) catch { case _: Exception => () }
+        throw e
+      }
     }
   }
 

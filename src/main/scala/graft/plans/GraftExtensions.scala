@@ -29,8 +29,10 @@ import graft.functions._
   * alias constants out of generated code, so queries that differ only in
   * such constants share compiled classes, and [[RemoveCachedOrderSorts]],
   * which drops the row-order sort a single-partition cache already
-  * satisfies, so a limited read stops after the rows it returns. Every
-  * graft session carries these extensions (see graft.engine.SessionTuning).
+  * satisfies, so a limited read stops after the rows it returns, and the
+  * planner strategy for [[OrderedLayout]], the server's cache layout.
+  * Every graft session carries these extensions (see
+  * graft.engine.SessionTuning).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -46,6 +48,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectColumnar(_ => ParameterizeLiterals.columnarRule)
     ext.injectOptimizerRule(_ => RemoveCachedOrderSorts)
+    ext.injectPlannerStrategy(_ => OrderedLayoutStrategy)
     ext.injectFunction((FunctionIdentifier("graft_dot"),
       info("graft_dot", "_FUNC_(a, b) - fused dot product of two array<double>"),
       (args: Seq[Expression]) => {

@@ -62,6 +62,21 @@ object CacheItem {
   val MaxMemoizedPlans = 64
 }
 
+object DatasetCache {
+  /** Persist `df` and build its cache with ONE Spark job, which also
+    * returns the row count. `df.count()` would plan an aggregate over the
+    * cache, two jobs under AQE; counting the rows of `df`'s own plan, a
+    * scan of the cache, is one. It runs as an SQL execution, as an action
+    * would, so its tasks see the session's SQL conf. Call it before
+    * anything plans `df`, so that plan reads the cache it builds. */
+  def materialize(df: DataFrame): Long = {
+    df.persist(StorageLevel.MEMORY_ONLY)
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("materialize"))(
+      qe.toRdd.count())
+  }
+}
+
 /** Byte-budget LRU + TTL cache of DataFrames, replicating the reference's
   * eviction rules (reference: qcache/dataset_cache.py):
   *   - eviction order = least-recently-ACCESSED first
@@ -110,8 +125,7 @@ final class DatasetCache(val maxSize: Long, val maxAge: Long,
     * materializes OUTSIDE the lock — a Spark job must never run while
     * holding the cache mutex — and only the pointer swap synchronizes. */
   def replaceFrame(key: String, df: DataFrame): Unit = {
-    df.persist(StorageLevel.MEMORY_ONLY)
-    val rowCount = df.count() // materialize before exposing the swapped frame
+    val rowCount = DatasetCache.materialize(df) // before exposing the swapped frame
     val swapped = lock.synchronized {
       items.get(key) match {
         case Some(old) =>

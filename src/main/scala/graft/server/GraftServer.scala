@@ -8,7 +8,6 @@ import scala.util.matching.Regex
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer, HttpsConfigurator, HttpsServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.lit
 
 import graft.engine._
 import graft.ops.ArtifactLock
@@ -280,18 +279,6 @@ final class GraftServer(spark: SparkSession, port: Int,
 
   // --- operations -------------------------------------------------------
 
-  /** In-memory byte size of a cached frame: the materialized
-    * InMemoryRelation's accumulated stats — the analog of the reference's
-    * deep memory_usage (reference: qframe/__init__.py:98-100). Falls back
-    * to plan stats if the cache lookup misses. */
-  private def inMemorySize(df: DataFrame): Long = {
-    val size = org.apache.spark.sql.GraftSqlShims.cachedSizeOf(df).getOrElse {
-      val s = df.filter(lit(true)).queryExecution.optimizedPlan.stats.sizeInBytes
-      if (s.isValidLong) s.toLong else 0L
-    }
-    100L + size
-  }
-
   private def store(exchange: HttpExchange, key: String, t0: Long): Unit = {
     // content-type and body-size rejections happen BEFORE the replace
     // bookkeeping: a 413/415 must leave an existing dataset untouched
@@ -317,35 +304,27 @@ final class GraftServer(spark: SparkSession, port: Int,
       } catch {
         case e: MalformedQueryException => throw new HttpFail(400, errorJson(e.getMessage))
       }
-    // Cache layout: range-partitioned on the hidden ingest-order column and
-    // sorted within partitions. Tables estimated at up to 100k rows are ONE
-    // partition. The cached scan reports that layout (range or single
-    // partition) and [__row_id__ ASC] ordering, so the physical planner
-    // drops the pandas-order sort every unordered query issues, and
-    // collect() preserves partition order. Under a limit the planner never
-    // sees that ordering (it plans a heap over every row); for one-partition
-    // tables graft.plans.RemoveCachedOrderSorts removes the sort before
-    // that, so a limited read stops after its rows. Larger tables keep it.
-    // The range shuffle is a one-off at store time; partition count is
-    // sized from a driver-side newline count, not an extra Spark job. The
-    // parse output is persisted FIRST so the range partitioner's
-    // bounds-sampling job and the shuffle read the parsed cache instead of
-    // each re-running the body parse lineage. The row count that
-    // materializes the cache is kept: it is the unsliced length of every
-    // query that keeps all rows.
-    val estRows =
-      (if (ct == "application/json") text.count(_ == '{')
-       else text.count(_ == '\n')).toLong max 1L
-    val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-      (estRows / 50000L).toInt))
-    parsed.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    val df = parsed
-      .repartitionByRange(parts, parsed(graft.engine.ExprCompiler.RowId))
-      .sortWithinPartitions(graft.engine.ExprCompiler.RowId)
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    val rowCount = df.count()
-    parsed.unpersist()
-    cache.put(key, df, inMemorySize(df), rowCount)
+    // Cache layout: the parse's own partitions, each one contiguous chunk
+    // of the body, so ONE partition up to ~100k rows
+    // (Ingest.layoutPartitions), already in the hidden ingest-order
+    // column's order. The cached scan reports that layout (range or single
+    // partition, graft.plans.OrderedLayout) and [__row_id__ ASC] ordering,
+    // so the physical planner drops the pandas-order sort every unordered
+    // query issues, and collect() preserves partition order. Under a limit
+    // the planner never sees that ordering (it plans a heap over every
+    // row); for one-partition tables graft.plans.RemoveCachedOrderSorts
+    // removes the sort before that, so a limited read stops after its
+    // rows. Larger tables keep it. One job builds the cache and counts its
+    // rows: the count is the unsliced length of every query that keeps all
+    // rows.
+    val df = org.apache.spark.sql.GraftSqlShims.rangeOrderedScan(parsed,
+      graft.engine.ExprCompiler.RowId)
+    val rowCount = DatasetCache.materialize(df)
+    // the materialized cache's own byte size: the analog of the
+    // reference's deep memory_usage (reference: qframe/__init__.py:98-100)
+    val size = org.apache.spark.sql.GraftSqlShims.cachedSizeOf(df)
+      .getOrElse(throw new IllegalStateException("a stored frame is not cached"))
+    cache.put(key, df, 100L + size, rowCount)
     stats.inc("size_evict_count", durations.length)
     stats.inc("store_count")
     stats.append("store_row_counts", rowCount.toDouble)

@@ -1,10 +1,19 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import com.fasterxml.jackson.core.{JacksonException, JsonFactory, JsonToken}
+import com.univocity.parsers.csv.CsvParser
+import org.apache.spark.SparkEnv
+import org.apache.spark.io.LZ4CompressionCodec
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.catalyst.json.{DriverJsonInference, JSONOptions}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.engine.{Errors, ExprCompiler}
+import graft.engine.{Errors, ExprCompiler, QueryJson}
 
 /** CSV / JSON ingest into DataFrames, replicating the reference's parsing
   * rules (reference: qcache/qframe/__init__.py:51-69, app.py:150-171):
@@ -16,37 +25,34 @@ import graft.engine.{Errors, ExprCompiler}
   *   - stand-in columns: absent column synthesized from a constant or
   *     another column (reference: __init__.py:26-38)
   *
+  * Like qcache, which infers types in the same pandas parse that reads
+  * the body, ingest runs no Spark job. The schema is inferred on the
+  * driver with Spark's own inference code (`CSVInferSchema`,
+  * `JsonInferSchema`), from the same records and options the reader
+  * then parses, and the reader gets that schema. The returned frame is
+  * lazy: its first action is its only job.
+  *
   * Every ingested frame carries a hidden `__row_id__` ingest-order column:
   * pandas row order is part of the reference's observable semantics
   * (pagination, distinct-keeps-first, serialization order) while Spark has
-  * no implicit order — see SURVEY.md §7.4. Bodies are split driver-side
-  * (CSV lines / lexed JSON records) and parallelized in contiguous slices,
-  * so `monotonically_increasing_id` stays order-isomorphic to ingest order
-  * while inference and parsing use every core.
+  * no implicit order — see SURVEY.md §7.4. The body is split on the driver
+  * into [[layoutPartitions]] contiguous chunks, chunk p parsed by
+  * partition p, so `monotonically_increasing_id` is already in ingest
+  * order and the frame's partitions are the server's cache layout.
   */
 object Ingest {
   import ExprCompiler.RowId
 
-  /** Marker raised inside the NDJSON line split when a line is not a
-    * JSON object — surfaces through Spark's task-failure wrapping and is
-    * unwrapped by [[badLineOf]] into the client's 400. Message = the
-    * offending line's first 80 chars. */
-  private[sources] final class BadNdjsonLine(line: String)
-    extends RuntimeException(line)
+  /** Rows per partition of a multi-partition layout. */
+  private val RowsPerPartition = 50000L
 
-  /** First [[BadNdjsonLine]] in `e`'s cause chain (Spark wraps executor
-    * exceptions in SparkException layers), or None. */
-  private[sources] def badLineOf(e: Throwable): Option[String] = {
-    var cur = e
-    var hops = 0
-    while (cur != null && hops < 20) {
-      cur match {
-        case b: BadNdjsonLine => return Some(b.getMessage)
-        case _ => cur = cur.getCause; hops += 1
-      }
-    }
-    None
-  }
+  /** The layout's partition count for a body of about `estRows` rows:
+    * one below ~100k rows, else one per 50k rows, capped at the cores.
+    * One partition keeps a cached table row-ordered end to end, which
+    * `graft.plans.RemoveCachedOrderSorts` relies on. */
+  def layoutPartitions(spark: SparkSession, estRows: Long): Int =
+    math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
+      estRows / RowsPerPartition)).toInt
 
   private def withRowId(df: DataFrame): DataFrame =
     df.withColumn(RowId, monotonically_increasing_id())
@@ -91,20 +97,18 @@ object Ingest {
       else acc.withColumn(name, standInValue(acc, value))
     }
 
-  /** Split `body` into at most `parts` CONTIGUOUS chunks on '\n'
-    * boundaries. The driver then does P substring copies instead of
-    * materializing millions of per-line String objects (and parallelize
-    * ships P strings instead of slicing a multi-million-element seq) —
-    * the big-body store's driver-side cost drops from O(lines)
-    * allocations to O(parts). Line order is preserved: chunk p holds
-    * lines [a_p, b_p) and partition order follows chunk order. */
-  private def lineChunks(body: String, parts: Int): Seq[String] = {
+  /** Split `body` from offset `from` into at most `parts` CONTIGUOUS
+    * chunks on '\n' boundaries, at least one. The driver makes P
+    * substring copies instead of one object per line, and chunk p holds
+    * lines [a_p, b_p) of the body, so chunk order is line order. */
+  private def lineChunks(body: String, from: Int, parts: Int): Array[String] = {
     val n = body.length
-    val out = Seq.newBuilder[String]
-    var start = 0
+    val out = Array.newBuilder[String]
+    var start = from
     var p = 1
     while (p <= parts && start < n) {
-      var end = if (p == parts) n else math.max(start, (n.toLong * p / parts).toInt)
+      var end = if (p == parts) n
+        else math.max(start, from + ((n - from).toLong * p / parts).toInt)
       if (end < n) {
         val nl = body.indexOf('\n', end)
         end = if (nl < 0) n else nl + 1
@@ -113,192 +117,244 @@ object Ingest {
       start = end
       p += 1
     }
-    if (start < n) out += body.substring(start)
-    out.result()
+    val chunks = out.result()
+    if (chunks.isEmpty) Array("") else chunks
+  }
+
+  /** The records of `chunks` as a Dataset, chunk p in partition p, in body
+    * order. The chunks reach the tasks through a broadcast, and a root
+    * partition holds only its index: every task over a cached frame
+    * serializes its partition, so chunk text inside `parallelize`
+    * partitions would be shipped again by every query over the cache.
+    * The frame's lineage holds the broadcast, and Spark's ContextCleaner
+    * frees it with the frame. The broadcast keeps its value and its
+    * serialized pieces; with the chunks LZ4-compressed the two copies
+    * take about twice the compressed size, near the size of the text. */
+  private def chunkRecords(spark: SparkSession, chunks: Array[String],
+                           records: String => Iterator[String]): Dataset[String] = {
+    val sc = spark.sparkContext
+    val codec = new LZ4CompressionCodec(sc.getConf)
+    val held = sc.broadcast(chunks.map { chunk =>
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = codec.compressedOutputStream(bytes)
+      try out.write(chunk.getBytes(UTF_8)) finally out.close()
+      bytes.toByteArray
+    })
+    spark.createDataset(sc.parallelize(chunks.indices, chunks.length).mapPartitions { ps =>
+      val codec = new LZ4CompressionCodec(SparkEnv.get.conf)
+      ps.flatMap { p =>
+        val in = codec.compressedInputStream(new java.io.ByteArrayInputStream(held.value(p)))
+        records(try new String(in.readAllBytes(), UTF_8) finally in.close())
+      }
+    })(Encoders.STRING)
+  }
+
+  private val csvLines: String => Iterator[String] = _.linesIterator
+  private val ndjsonLines: String => Iterator[String] =
+    _.linesIterator.map(_.trim).filter(_.nonEmpty)
+
+  /** Separates JSON records inside a chunk. A raw NUL cannot occur in
+    * strictly valid JSON text, inside strings or out. */
+  private val RecordSep = '\u0000'
+  private val jsonRecords: String => Iterator[String] = chunk =>
+    Iterator.unfold(0) { from =>
+      if (from >= chunk.length) None
+      else {
+        val sep = chunk.indexOf(RecordSep, from)
+        val end = if (sep < 0) chunk.length else sep
+        Some((chunk.substring(from, end), end + 1))
+      }
+    }
+
+  /** Reader options, shared by the driver's inference and the parse. The
+    * reference trims nothing, but its test fixtures carry leading spaces
+    * pandas' numeric parser tolerates, so we ignore them around values
+    * too. */
+  private[graft] val CsvOptions = Map(
+    "nullValue" -> "",
+    "emptyValue" -> "",
+    // pandas keep_default_na=False: these spellings must NOT become null/NaN
+    "nanValue" -> "\u0000never\u0000",
+    "positiveInf" -> "\u0000never\u0000",
+    "negativeInf" -> "\u0000never\u0000",
+    "ignoreLeadingWhiteSpace" -> "true",
+    "ignoreTrailingWhiteSpace" -> "true",
+    "timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss[.SSS][XXX]")
+
+  /** The first non-blank line of `body` and the offset just past its line
+    * terminator (\n, \r\n or \r, as `linesIterator` splits). */
+  private def headerLine(body: String): Option[(String, Int)] = {
+    val n = body.length
+    var i = 0
+    while (i < n) {
+      var j = i
+      while (j < n && body.charAt(j) != '\n' && body.charAt(j) != '\r') j += 1
+      val next = if (j + 1 < n && body.charAt(j) == '\r' && body.charAt(j + 1) == '\n') j + 2
+        else j + 1
+      val line = body.substring(i, j)
+      if (line.trim.nonEmpty) return Some((line, math.min(next, n)))
+      i = next
+    }
+    None
   }
 
   def fromCsv(spark: SparkSession, body: String,
               types: Map[String, String] = Map.empty,
               standIns: Seq[(String, String)] = Nil,
               extendedTypes: Boolean = true): DataFrame = {
-    // Lines are parallelized in CONTIGUOUS slices — chunk p holds lines
-    // [a_p, b_p), and within a partition the per-chunk linesIterator
-    // preserves body order — so monotonically_increasing_id
-    // (partition << 33 | offset) stays order-isomorphic to ingest order,
-    // the only property __row_id__ consumers rely on. This makes schema
-    // inference AND the data parse multi-core where a coalesce(1) layout
-    // would serialize the body onto one thread, and the chunked split
-    // keeps the DRIVER's share at O(parts) substring copies (a 6M-line
-    // body previously materialized 6M line objects on the driver and
-    // shipped them through parallelize's seq slicing). The reference
-    // trims nothing, but its test fixtures carry leading spaces pandas'
-    // numeric parser tolerates, so we ignore them around values too.
-    val nLines = body.count(_ == '\n') + 1
-    val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-      nLines / 20000))
-    val chunks = lineChunks(body, parts)
-    val lines = spark.createDataset(
-      spark.sparkContext.parallelize(chunks, math.max(1, chunks.length))
-        .flatMap(_.linesIterator.filter(_.nonEmpty)))(
-      org.apache.spark.sql.Encoders.STRING)
-    val raw = spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .option("nullValue", "")
-      .option("emptyValue", "")
-      // pandas keep_default_na=False: these spellings must NOT become null/NaN
-      .option("nanValue", "\u0000never\u0000")
-      .option("positiveInf", "\u0000never\u0000")
-      .option("negativeInf", "\u0000never\u0000")
-      .option("ignoreLeadingWhiteSpace", "true")
-      .option("ignoreTrailingWhiteSpace", "true")
-      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss[.SSS][XXX]")
-      .csv(lines)
+    // Spark's own CSV inference, from the reader's options. The header is
+    // read here, with Spark's safe-name rules for empty and duplicate
+    // names, so the reader gets header=false and skips the header job.
+    val conf = spark.sessionState.conf
+    val options = new CSVOptions(CsvOptions + ("header" -> "true"),
+      conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    val header = headerLine(body)
+    val chunks = lineChunks(body, header.fold(body.length)(_._2),
+      layoutPartitions(spark, body.count(_ == '\n').toLong))
+    val schema = header.flatMap { case (line, _) =>
+      val parser = new CsvParser(options.asParserSettings)
+      Option(parser.parseLine(line)).map { first =>
+        val names = CSVUtils.makeSafeHeader(first, conf.caseSensitiveAnalysis, options)
+        val infer = new CSVInferSchema(options)
+        var rowType: Array[DataType] = Array.fill(names.length)(NullType)
+        // the reader drops blank lines the same way (no comment char set)
+        chunks.iterator.flatMap(csvLines).filter(_.trim.nonEmpty).foreach { l =>
+          val tokens = parser.parseLine(l)
+          if (tokens != null) rowType = infer.inferRowType(rowType, tokens)
+        }
+        StructType(infer.toStructFields(rowType, names))
+      }
+    }.getOrElse(StructType(Nil))
+    val raw = spark.read.options(CsvOptions + ("header" -> "false")).schema(schema)
+      .csv(chunkRecords(spark, chunks, csvLines))
     withRowId(addStandInColumns(applyTypeHints(raw, types, extendedTypes),
       standIns))
   }
 
-  /** Split a top-level JSON array body into its record substrings — a
-    * single quote/escape-aware, depth-tracked lexical pass. Purely
-    * syntactic: semantic validation stays with QueryJson.parse. Returns
-    * None when the body is not a flat array of objects. */
-  private[graft] def splitTopLevelRecords(body: String): Option[Seq[String]] = {
-    val out = Seq.newBuilder[String]
-    var i = 0; val n = body.length
-    var depth = 0; var inStr = false; var esc = false
-    var start = -1; var sawArray = false
-    while (i < n) {
-      val c = body.charAt(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '[' => depth += 1; if (depth == 1) sawArray = true
-        case ']' => depth -= 1
-        case '{' =>
-          depth += 1
-          if (depth == 2 && sawArray && start < 0) start = i
-        case '}' =>
-          depth -= 1
-          if (depth == 1 && start >= 0) { out += body.substring(start, i + 1); start = -1 }
-        case _ => ()
-      }
-      i += 1
-    }
-    if (sawArray && depth == 0) Some(out.result()) else None
+  private def jsonOptions(spark: SparkSession): JSONOptions = {
+    val conf = spark.sessionState.conf
+    new JSONOptions(Map.empty[String, String], conf.sessionLocalTimeZone,
+      conf.columnNameOfCorruptRecord)
+  }
+
+  /** Default Jackson features: the strictness of [[QueryJson.parse]], which
+    * validates query bodies the same way. */
+  private val StrictJson = new JsonFactory()
+
+  /** Top-level keys of a JSON object in written order (Spark infers an
+    * alphabetical schema; serialization parity with pandas from_records
+    * needs insertion order), or None when `json` is not an object. */
+  private def objectKeys(json: String): Option[Seq[String]] = QueryJson.parse(json) match {
+    case m: scala.collection.Map[_, _] => Some(m.keys.map(String.valueOf).toSeq)
+    case _ => None
+  }
+
+  /** `raw`'s columns with `keys` first, in that order. */
+  private def keysFirst(raw: DataFrame, keys: Seq[String]): DataFrame = {
+    val present = keys.filter(raw.columns.contains)
+    raw.select((present ++ raw.columns.filterNot(present.contains)).map(col): _*)
   }
 
   def fromJsonRecords(spark: SparkSession, body: String,
                       types: Map[String, String] = Map.empty,
                       standIns: Seq[(String, String)] = Nil): DataFrame = {
-    import graft.engine.QueryJson
-    // One driver-side parse validates the body and pins the first record's
-    // key order (Spark infers an alphabetical schema; serialization parity
-    // with pandas from_records needs insertion order).
-    val parsed = QueryJson.parse(body)
-    // Parallel parse path: lex the array into record strings and spread
-    // them in CONTIGUOUS slices (same order-isomorphism argument as
-    // fromCsv) so Spark's schema inference AND data parse run multi-core
-    // instead of single-partition on the whole body string.
-    // Guard: the lexer only captures OBJECT elements, so a mixed array
-    // ([{...}, 5, {...}]) would silently drop rows — require the lexed
-    // record count to match the parsed element count, else fall back to
-    // the single-string path whose row semantics are unchanged.
-    val parsedLen = parsed match { case l: List[_] => l.length; case _ => -1 }
-    val ds = splitTopLevelRecords(body) match {
-      case Some(records) if records.nonEmpty && records.length == parsedLen =>
-        val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-          records.length / 20000))
-        spark.createDataset(spark.sparkContext.parallelize(records, parts))(
-          org.apache.spark.sql.Encoders.STRING)
-      case _ =>
-        spark.createDataset(Seq(body))(
-          org.apache.spark.sql.Encoders.STRING).coalesce(1)
-    }
-    val raw = spark.read.json(ds)
-    val ordered = parsed match {
-      case (first: scala.collection.Map[_, _]) :: _ =>
-        val keys = first.keys.map(String.valueOf).toSeq
-          .filter(raw.columns.contains)
-        val rest = raw.columns.filterNot(keys.contains)
-        raw.select((keys ++ rest).map(col): _*)
-      case _ => raw
-    }
+    // One strict streaming pass validates the body, infers each object
+    // element as its own document and records where it lies.
+    val options = jsonOptions(spark)
+    val inference = new DriverJsonInference(options)
+    val bounds = Array.newBuilder[Int]
+    var flat = true // an array whose elements are all objects
+    var firstIsObject = false
+    val p = StrictJson.createParser(body)
+    try {
+      p.nextToken() match {
+        case null => Errors.malformed("Invalid query JSON: No content to map due to end-of-input")
+        case JsonToken.START_ARRAY =>
+          var t = p.nextToken()
+          firstIsObject = t == JsonToken.START_OBJECT
+          while (t != null && t != JsonToken.END_ARRAY) {
+            if (t == JsonToken.START_OBJECT) {
+              bounds += p.currentTokenLocation().getCharOffset.toInt
+              inference.add(p)
+              bounds += p.currentLocation().getCharOffset.toInt
+            } else { flat = false; p.skipChildren() }
+            t = p.nextToken()
+          }
+        case _ => flat = false; p.skipChildren()
+      }
+    } catch { case e: JacksonException =>
+      Errors.malformed(s"Invalid query JSON: ${e.getOriginalMessage}")
+    } finally p.close()
+    val at = bounds.result()
+    val (chunks, schema) =
+      if (flat) {
+        // each chunk holds its records, in order, NUL-separated
+        val n = at.length / 2
+        val parts = layoutPartitions(spark, n.toLong)
+        (Array.tabulate(parts) { c =>
+          val sb = new java.lang.StringBuilder
+          for (r <- (n.toLong * c / parts).toInt until (n.toLong * (c + 1) / parts).toInt) {
+            if (sb.length > 0) sb.append(RecordSep)
+            sb.append(body, at(2 * r), at(2 * r + 1))
+          }
+          sb.toString
+        }, inference.schema)
+      } else {
+        // Anything but an array of objects reads as one document, as
+        // Spark reads a whole body: a mixed array is one corrupt-record
+        // row (the reference's pandas from_records errors on such bodies
+        // entirely), a lone object one row.
+        val whole = new DriverJsonInference(options)
+        val q = options.buildJsonFactory().createParser(body)
+        try { q.nextToken(); whole.add(q) } finally q.close()
+        (Array(body), whole.schema)
+      }
+    val raw = spark.read.schema(schema).json(chunkRecords(spark, chunks, jsonRecords))
+    val ordered =
+      if (firstIsObject) keysFirst(raw, objectKeys(body.substring(at(0), at(1))).get)
+      else raw
     withRowId(addStandInColumns(applyTypeHints(ordered, types, extendedTypes = true), standIns))
   }
 
   /** Newline-delimited JSON (NDJSON / JSONL) — the de-facto LLM corpus
     * interchange format; an extension beyond the reference's CSV +
     * JSON-array surface. One JSON object per non-blank line (CRLF
-    * tolerated). The line split IS the record lexer, so the parallel
-    * parse needs no array scanning: lines spread in contiguous slices
-    * (the fromCsv order-isomorphism argument) and Spark's JSON reader
-    * infers + parses multi-core. Column order pins to the FIRST line's
-    * key order like fromJsonRecords; unparseable lines are a 400, not
-    * silent nulls. */
+    * tolerated); each line is one document for inference and parse.
+    * Column order pins to the FIRST line's key order like
+    * fromJsonRecords; a line that is not an object, or does not parse,
+    * is a 400, not silent nulls. */
   def fromJsonLines(spark: SparkSession, body: String,
                     types: Map[String, String] = Map.empty,
                     standIns: Seq[(String, String)] = Nil): DataFrame = {
-    import graft.engine.QueryJson
-    // first non-empty line, driver-side without splitting the whole body
-    // (the split is chunked and distributed below, like fromCsv)
-    def firstNonEmptyLine(s: String): Option[String] = {
-      var i = 0; val n = s.length
-      while (i < n) {
-        var j = s.indexOf('\n', i); if (j < 0) j = n
-        val line = s.substring(i, j).trim
-        if (line.nonEmpty) return Some(line)
-        i = j + 1
+    val options = jsonOptions(spark)
+    val json = options.buildJsonFactory()
+    val inference = new DriverJsonInference(options)
+    val chunks = lineChunks(body, 0, layoutPartitions(spark, body.count(_ == '\n').toLong))
+    def notAnObject(line: String): Nothing =
+      Errors.malformed("NDJSON lines must be JSON objects", line.take(80))
+    var firstKeys: Option[Seq[String]] = None
+    var unparseable = false
+    chunks.iterator.flatMap(ndjsonLines).foreach { line =>
+      if (firstKeys.isEmpty)
+        firstKeys = Some(
+          try objectKeys(line).getOrElse(notAnObject(line))
+          catch { case _: graft.engine.MalformedQueryException => notAnObject(line) })
+      // a line holding an array is valid JSON that the reader would
+      // EXPLODE into several rows, breaking one record per line
+      if (!line.startsWith("{")) notAnObject(line)
+      // a line Spark cannot parse would become a corrupt record: the
+      // whole body is refused, after every line passed the object check
+      if (!unparseable) {
+        val p = json.createParser(line)
+        try { p.nextToken(); inference.add(p) }
+        catch { case _: JacksonException => unparseable = true }
+        finally p.close()
       }
-      None
     }
-    val firstKeys: Seq[String] = firstNonEmptyLine(body) match {
-      case None => Seq.empty
-      case Some(l) =>
-        val parsed = try QueryJson.parse(l) catch {
-          case _: Exception =>
-            Errors.malformed("NDJSON lines must be JSON objects", l.take(80))
-        }
-        parsed match {
-          case m: scala.collection.Map[_, _] => m.keys.map(String.valueOf).toSeq
-          case _ =>
-            Errors.malformed("NDJSON lines must be JSON objects", l.take(80))
-        }
-    }
-    val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-      (body.count(_ == '\n') + 1) / 20000))
-    val chunks = lineChunks(body, parts)
-    // every line must be an OBJECT: a line holding a JSON array is valid
-    // JSON (no corrupt-record flag) but spark.read.json would explode it
-    // into several rows, silently breaking the one-record-per-line
-    // contract (fromJsonRecords guards the same hazard via lexer counts).
-    // The guard rides INSIDE the line split — a violation aborts the
-    // inference job already scanning every line, so the happy path pays
-    // no extra pass and the driver's share stays O(parts). Inference
-    // reads the full dataset (default samplingRatio 1.0), so once it
-    // succeeds no later pass over the same lineage can trip the guard.
-    val ds = spark.createDataset(
-      spark.sparkContext.parallelize(chunks, math.max(1, chunks.length))
-        .flatMap(_.linesIterator.map(_.trim).filter(_.nonEmpty).map { l =>
-          if (!l.startsWith("{")) throw new Ingest.BadNdjsonLine(l.take(80))
-          l
-        }))(org.apache.spark.sql.Encoders.STRING)
-    val raw =
-      try spark.read.json(ds)
-      catch {
-        case e: Throwable if Ingest.badLineOf(e).isDefined =>
-          Errors.malformed("NDJSON lines must be JSON objects",
-            Ingest.badLineOf(e).get)
-      }
-    // a failed line surfaces as the corrupt-record column at inference
-    // time — reject the whole body (the reference 400s malformed bodies)
-    if (raw.columns.contains("_corrupt_record"))
-      Errors.malformed("NDJSON body contains unparseable lines")
-    val keys = firstKeys.filter(raw.columns.contains)
-    val ordered = raw.select(
-      (keys ++ raw.columns.filterNot(keys.contains)).map(col): _*)
-    withRowId(addStandInColumns(applyTypeHints(ordered, types, extendedTypes = true), standIns))
+    if (unparseable) Errors.malformed("NDJSON body contains unparseable lines")
+    val raw = spark.read.schema(inference.schema)
+      .json(chunkRecords(spark, chunks, ndjsonLines))
+    withRowId(addStandInColumns(applyTypeHints(
+      keysFirst(raw, firstKeys.getOrElse(Nil)), types, extendedTypes = true), standIns))
   }
 }

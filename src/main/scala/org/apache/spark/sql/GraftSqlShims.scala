@@ -14,15 +14,30 @@ object GraftSqlShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `df` as a scan of its own partitions, declared range-partitioned
+    * and sorted on `colName`, ascending ([[graft.plans.OrderedLayout]]).
+    * Planning it runs no job. The caller guarantees the claim: ingest's
+    * contiguous body chunks give each partition ascending ids above those
+    * of the partition before. */
+  def rangeOrderedScan(df: DataFrame, colName: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val rdd = ds.queryExecution.toRdd
+    val output = ds.queryExecution.analyzed.output
+    val scan = org.apache.spark.sql.execution.LogicalRDD(output, rdd,
+      org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(rdd.getNumPartitions),
+      Nil, isStreaming = false)(ds.sparkSession)
+    classic.Dataset.ofRows(ds.sparkSession, graft.plans.OrderedLayout(
+      output.filter(_.name == colName).map(SortOrder(_, Ascending)), scan))
+  }
+
   /** Materialized in-memory byte size of a cached DataFrame, from the
     * InMemoryRelation's accumulated stats — the honest analog of the
     * reference's deep `memory_usage` (only meaningful after the cache has
     * been built by an action). None if the frame isn't cached. */
   def cachedSizeOf(df: DataFrame): Option[Long] = {
     val ds = df.asInstanceOf[classic.Dataset[_]]
-    val session = ds.sparkSession
-    session.sharedState.cacheManager
-      .lookupCachedData(session, ds.queryExecution.logical)
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
       .map(_.cachedRepresentation.computeStats().sizeInBytes.toLong)
   }
 
@@ -41,9 +56,7 @@ object GraftSqlShims {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
         Some(l.data.length.toLong)
       case _ =>
-        val session = ds.sparkSession
-        session.sharedState.cacheManager
-          .lookupCachedData(session, ds.queryExecution.logical)
+        ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
           .flatMap { cd =>
             val rel = cd.cachedRepresentation
             if (rel.cacheBuilder.isCachedColumnBuffersLoaded)

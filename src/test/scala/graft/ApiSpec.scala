@@ -617,6 +617,22 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       """[{"a":11,"b":4},{"a":12,"b":5}]""")
   }
 
+  test("a one-partition cache serves group_by, distinct and order_by without a shuffle") {
+    val csv = "a,b\n" + (1 to 1000).map(i => s"$i,${i % 7}").mkString("\n") + "\n"
+    assert(storeCsv("ord3", csv).statusCode() == 201)
+    for (q <- Seq("""{"select": ["b", ["max", "a"]], "group_by": ["b"]}""",
+                  """{"distinct": ["b"]}""", """{"order_by": ["-b", "a"]}""")) {
+      val (_, _, nodes) = Plans.run("ord3", q)
+      assert(!nodes.contains("Exchange"), s"$q: $nodes")
+    }
+    // a second instance of the table in one query reads the cache too
+    val (rows, _, nodes) = Plans.run("ord3",
+      """{"where": ["in", "b", {"select": ["b"], "where": ["<", "a", 3]}], "limit": 3}""")
+    assert(rows == Seq(1L, 2L, 8L))
+    assert(nodes.count(_ == "InMemoryTableScan") == 2 && !nodes.exists(_.startsWith("Scan")),
+      nodes)
+  }
+
   test("limited reads of a multi-partition cache keep their sort and ingest order") {
     val n = 120000 // over the store's 50k rows per partition: two partitions
     val csv = (1 to n).map(i => s"$i,${i % 7}").mkString("a,b\n", "\n", "\n")
@@ -631,6 +647,88 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       ((edge - 1) to (edge + 2)))
     assert(Plans.sorted("ord2", s"""{"from": {"offset": ${edge - 1}, "limit": 3}}""") ==
       (edge to (edge + 2)))
+  }
+
+  test("a store and an update each run one Spark job, whatever the body format") {
+    graft.server.ShapeWarmer.clear()
+    graft.server.ShapeWarmer.drain()
+    def store(key: String, contentType: String, body: String): Int = {
+      val (r, jobs) = TestSpark.jobsDuring(send(req(s"/dataset/$key")
+        .POST(BodyPublishers.ofString(body)).header("Content-Type", contentType).build()))
+      assert(r.statusCode() == 201, r.body())
+      jobs
+    }
+    val rows = 1 to 300
+    assert(store("job_csv", "text/csv",
+      rows.map(i => s"$i,v$i,${i * 0.5}").mkString("j1,j2,j3\n", "\n", "\n")) == 1)
+    assert(store("job_json", "application/json",
+      rows.map(i => s"""{"j1": $i, "j2": "v$i"}""").mkString("[", ",", "]")) == 1)
+    assert(store("job_ndjson", "application/x-ndjson",
+      rows.map(i => s"""{"j1": $i, "j2": "v$i"}""").mkString("\n")) == 1)
+    val (u, updateJobs) = TestSpark.jobsDuring(send(req("/dataset/job_csv/q").POST(
+      BodyPublishers.ofString("""{"update": [["j2", "'w'"]], "where": ["<", "j1", 3]}""")).build()))
+    assert(u.statusCode() == 200 && updateJobs == 1)
+    assert(query("job_csv", """{"select": ["j2"], "limit": 3}""").body() ==
+      """[{"j2":"w"},{"j2":"w"},{"j2":"v3"}]""")
+  }
+
+  test("stored and updated frames report their cached byte size and exact row count") {
+    import org.apache.spark.sql.GraftSqlShims.{cachedSizeOf, exactRowCountOf}
+    assert(storeCsv("sized", (1 to 1000).map(i => s"$i,${i % 5}").mkString("a,b\n", "\n", "\n"))
+      .statusCode() == 201)
+    val item = server.cache.peek("sized").get
+    assert(item.rowCount == 1000L && exactRowCountOf(item.df).contains(1000L))
+    assert(cachedSizeOf(item.df).exists(s => s > 0 && item.size == 100L + s))
+    assert(send(req("/dataset/sized/q").POST(BodyPublishers.ofString(
+      """{"update": [["b", 9]], "where": ["==", "a", 1]}""")).build()).statusCode() == 200)
+    val updated = server.cache.peek("sized").get
+    assert(updated.rowCount == 1000L && exactRowCountOf(updated.df).contains(1000L))
+  }
+
+  test("a cached frame's root partitions hold no body text") {
+    // every task over the cache serializes its partition's lineage, down
+    // to the root partitions of the ingest parse
+    def rootPartitionBytes(key: String): Seq[Int] = {
+      val rel = server.cache.peek(key).get.df.queryExecution.withCachedData.collectFirst {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }.get
+      def roots(rdd: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+        if (rdd.dependencies.isEmpty) Seq(rdd) else rdd.dependencies.flatMap(d => roots(d.rdd))
+      val ser = new org.apache.spark.serializer.JavaSerializer(spark.sparkContext.getConf)
+        .newInstance()
+      roots(rel.cacheBuilder.cachedColumnBuffers).flatMap(_.partitions)
+        .map(p => ser.serialize(p).limit())
+    }
+    val rows = 1 to 40000
+    assert(storeCsv("lean_csv", rows.map(i => s"$i,text of row $i").mkString("a,b\n", "\n", "\n"))
+      .statusCode() == 201)
+    assert(send(req("/dataset/lean_json").POST(BodyPublishers.ofString(
+      rows.map(i => s"""{"a": $i, "b": "text of row $i"}""").mkString("[", ",", "]")))
+      .header("Content-Type", "application/json").build()).statusCode() == 201)
+    for (key <- Seq("lean_csv", "lean_json")) {
+      val sizes = rootPartitionBytes(key)
+      assert(sizes.nonEmpty && sizes.forall(_ < 4096), s"$key: $sizes")
+    }
+  }
+
+  test("a grown cached exclude list trips the bloom index's staleness 400") {
+    val root = java.nio.file.Files.createTempDirectory("api_bloom_stale").toString
+    assert(storeCsv("bl_docs", "id,t\n1,a\n2,b\n3,c\n4,d\n").statusCode() == 201)
+    assert(storeCsv("bl_x", "id\n2\n4\n").statusCode() == 201)
+    graft.ops.BloomIndex.buildAndSave(server.cache.peek("bl_x").get.df, "id", 0.01, s"$root/bl")
+    spark.conf.set("spark.graft.index.root", root)
+    try {
+      val q = """{"xop": {"name": "exclude_ids",
+                          "args": {"id": "id", "exclude": "bl_x", "index": "bl"}},
+                  "order_by": ["id"]}"""
+      val fresh = query("bl_docs", q)
+      assert(fresh.statusCode() == 200 && aValues(fresh.body().replace("\"id\"", "\"a\"")) == Seq(1, 3),
+        fresh.body())
+      assert(storeCsv("bl_x", "id\n2\n4\n6\n").statusCode() == 201)
+      val stale = query("bl_docs", q)
+      assert(stale.statusCode() == 400 && stale.body().contains("bloom index is stale"),
+        stale.body())
+    } finally spark.conf.unset("spark.graft.index.root")
   }
 
   test("small responses are not held back by delayed ACKs") {

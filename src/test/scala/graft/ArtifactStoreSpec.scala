@@ -188,4 +188,27 @@ class ArtifactStoreSpec extends AnyFunSuite {
     assert(manifestOf(path)("data_gen") == v1("data_gen").asInstanceOf[Long] + 1L)
     assert(BloomIndex.loadWithMeta(spark, path).nIds == 30L)
   }
+
+  test("manifest publishes leave no checksum sidecar and replace a Hadoop-written manifest") {
+    val path = tmpDir() + "/sidecar"
+    val dir = java.nio.file.Paths.get(path)
+    def sidecars: Seq[String] = {
+      val s = java.nio.file.Files.list(dir)
+      try s.toArray.map(_.toString).filter(_.endsWith(".crc")).toSeq.map(
+        n => java.nio.file.Paths.get(n).getFileName.toString) finally s.close()
+    }
+    val ids = (1L to 30L).map(Tuple1(_)).toDF("xid")
+    for (_ <- 1 to 3) BloomIndex.buildAndSave(ids, "xid", 0.01, path)
+    assert(sidecars.isEmpty, sidecars)
+    // the same manifest rewritten through Hadoop's checksummed local
+    // filesystem, which writes a `.manifest.json.crc` beside it
+    val text = graft.engine.QueryJson.write(manifestOf(path))
+    val p = new org.apache.hadoop.fs.Path(path, "manifest.json")
+    val out = p.getFileSystem(spark.sessionState.newHadoopConf()).create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    assert(sidecars.contains(".manifest.json.crc"))
+    BloomIndex.buildAndSave(ids, "xid", 0.01, path)
+    assert(sidecars.isEmpty, sidecars)
+    assert(BloomIndex.loadWithMeta(spark, path).nIds == 30L)
+  }
 }

@@ -224,15 +224,11 @@ class EngineFilterSpec extends AnyFunSuite {
     assertRows(runQ(f, """{"where": ["==", "bar", "'räksmörgås'"]}"""), Seq("bbb"))
   }
 
-  test("json record splitter handles nesting, braces in strings, escapes") {
-    import graft.sources.Ingest.splitTopLevelRecords
-    assert(splitTopLevelRecords("""[{"a": 1}, {"a": 2}]""") ==
-      Some(Seq("""{"a": 1}""", """{"a": 2}""")))
-    // braces and quotes inside string values must not confuse the lexer
-    assert(splitTopLevelRecords("""[{"a": "x}{\"y"}, {"a": {"n": [1, 2]}}]""") ==
-      Some(Seq("""{"a": "x}{\"y"}""", """{"a": {"n": [1, 2]}}""")))
-    assert(splitTopLevelRecords("""{"not": "array"}""").isEmpty)
-    assert(splitTopLevelRecords("""[]""") == Some(Nil))
+  test("json records with nesting, braces in strings and escapes are one row each") {
+    val f = Ingest.fromJsonRecords(spark,
+      """[{"a": "x}{\"y", "n": {"m": [1, 2]}}, {"a": "]", "n": {"m": []}}]""")
+    val got = runQ(f, "{}").collect().map(r => (r.getString(0), r.getStruct(1).getSeq[Long](0)))
+    assert(got.toSeq == Seq(("x}{\"y", Seq(1L, 2L)), ("]", Seq.empty[Long])))
   }
 
   test("json array with non-object elements falls back to whole-body semantics") {
