@@ -29,8 +29,10 @@ import graft.functions._
   * alias constants out of generated code, so queries that differ only in
   * such constants share compiled classes, and [[RemoveCachedOrderSorts]],
   * which drops the row-order sort a single-partition cache already
-  * satisfies, so a limited read stops after the rows it returns, and the
-  * planner strategy for [[OrderedLayout]], the server's cache layout.
+  * satisfies, so a limited read stops after the rows it returns, the
+  * planner strategy for [[OrderedLayout]], the server's cache layout, and
+  * [[CachedOffsetStrategy]], which drops a page's offset rows inside the
+  * task that reads such a cache.
   * Every graft session carries these extensions (see
   * graft.engine.SessionTuning).
   */
@@ -49,6 +51,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectColumnar(_ => ParameterizeLiterals.columnarRule)
     ext.injectOptimizerRule(_ => RemoveCachedOrderSorts)
     ext.injectPlannerStrategy(_ => OrderedLayoutStrategy)
+    ext.injectPlannerStrategy(_ => CachedOffsetStrategy)
     ext.injectFunction((FunctionIdentifier("graft_dot"),
       info("graft_dot", "_FUNC_(a, b) - fused dot product of two array<double>"),
       (args: Seq[Expression]) => {

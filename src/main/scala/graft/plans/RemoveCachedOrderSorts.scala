@@ -36,7 +36,10 @@ object RemoveCachedOrderSorts extends Rule[LogicalPlan] {
             SortOrder.orderingSatisfies(child.outputOrdering, order) => child
     }
 
-  private def onOrderedPartition(plan: LogicalPlan): Boolean = plan match {
+  /** Whether `plan` is a chain of deterministic `Filter`/`Project` nodes
+    * ending in a materialized `InMemoryRelation` of one partition, so its
+    * rows come from one task in the cache's order. */
+  def onOrderedPartition(plan: LogicalPlan): Boolean = plan match {
     case f: Filter => f.condition.deterministic && onOrderedPartition(f.child)
     case p: Project => p.projectList.forall(_.deterministic) && onOrderedPartition(p.child)
     case r: InMemoryRelation =>

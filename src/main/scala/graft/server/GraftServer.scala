@@ -403,7 +403,7 @@ final class GraftServer(spark: SparkSession, port: Int,
         // retries with a short backoff: swap windows are per-shard
         // renames, milliseconds in practice. Every other failure
         // propagates unchanged on the first attempt.
-        def attempt(): (String, Long) = {
+        def attempt(): (Array[Byte], Long) = {
           def plan = QueryEngine.run(withStandIns, q, resolver, Some(item.rowCount))
           val result = if (crossDataset || forced) plan else item.memoizedPlan(memoKey)(plan)
           // Response-size guard (OFF by default — full dumps are the
@@ -420,16 +420,17 @@ final class GraftServer(spark: SparkSession, port: Int,
             if (maxResultRows > 0) result.df.limit(
               math.min(maxResultRows + 1, Int.MaxValue.toLong).toInt)
             else result.df
-          // The byte guard aborts INSIDE the serializer (per appended row),
+          // The byte guard aborts INSIDE the serializer (per written row),
           // so a 1M-row × wide-strings result that would pass a row guard
-          // never finishes building its response string on the driver.
-          val (text, rowCount) =
-            try {
-              if (accept == "text/csv") Serialize.toCsvCounted(bounded, maxResultBytes)
-              else if (accept == "application/x-ndjson")
-                Serialize.toJsonLinesCounted(bounded, maxResultBytes)
-              else Serialize.toJsonCounted(bounded, maxResultBytes)
-            } catch {
+          // never finishes building its response on the driver. It counts
+          // the UTF-8 bytes written, so the bound is exact.
+          val format =
+            if (accept == "text/csv") Serialize.Format.Csv
+            else if (accept == "application/x-ndjson") Serialize.Format.JsonLines
+            else Serialize.Format.Json
+          val (bytes, rowCount) =
+            try Serialize.render(bounded, format, maxResultBytes)
+            catch {
               case _: Serialize.ByteBudgetExceeded =>
                 throw new HttpFail(413, errorJson(
                   s"result exceeds max-result-bytes=$maxResultBytes; " +
@@ -442,7 +443,7 @@ final class GraftServer(spark: SparkSession, port: Int,
           // the served rows or the stored row count usually give the
           // unsliced length; the separate count job runs only when neither
           // can
-          (text, result.unslicedLength(rowCount))
+          (bytes, result.unslicedLength(rowCount))
         }
         // a failure that bottoms out in a MISSING INPUT FILE is an
         // artifact maintenance swap (a MinHash shard delete+rename, a
@@ -453,7 +454,7 @@ final class GraftServer(spark: SparkSession, port: Int,
         // failed mid-write must surface, never silently re-apply (a
         // second vocab_update would double its delta)
         val retryable = !forced && !XopEngine.hasMaintenance(q)
-        val (text, unsliced) =
+        val (bytes, unsliced) =
           try attempt()
           catch { case e: Throwable if retryable && ArtifactLock.isMissingInputFile(e) =>
             item.invalidateMemo(memoKey) // the rebuilt plan re-memoizes
@@ -464,14 +465,6 @@ final class GraftServer(spark: SparkSession, port: Int,
               attempt()
             }
           }
-        val bytes = text.getBytes(UTF_8)
-        // multibyte tail case: the serializer aborts on CHAR count (a
-        // lower bound on UTF-8 bytes); the encoded length is the real
-        // budget check
-        if (maxResultBytes > 0 && bytes.length > maxResultBytes)
-          throw new HttpFail(413, errorJson(
-            s"result exceeds max-result-bytes=$maxResultBytes; " +
-              "add offset/limit to page the result"))
         val headers = Map(
           "Content-Type" -> s"$accept; charset=utf-8",
           "X-QCache-unsliced-length" -> unsliced.toString)

@@ -41,6 +41,19 @@ object GraftSqlShims {
       .map(_.cachedRepresentation.computeStats().sizeInBytes.toLong)
   }
 
+  /** `df`'s rows as Spark's internal rows, collected the way
+    * `Dataset.collect` collects them (one SQL execution, the same
+    * internal-error wrapping), without converting them to `Row`s. */
+  def collectInternal(df: DataFrame): Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      execution.QueryExecution.withInternalError("""The "collect" action failed.""") {
+        qe.executedPlan.resetMetrics()
+        qe.executedPlan.executeCollect()
+      }
+    }
+  }
+
   /** Row count known EXACT at plan level, without running a job: a
     * LocalRelation's literal length, or a cache-MATERIALIZED
     * InMemoryRelation's accumulated count (the post-load branch of its

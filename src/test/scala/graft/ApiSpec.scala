@@ -165,6 +165,39 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally guarded.stop()
   }
 
+  test("max-result-bytes counts UTF-8 bytes exactly, on every format") {
+    val budget = 200
+    val guarded = new graft.server.GraftServer(spark, 0, maxResultBytes = budget.toLong)
+    guarded.start()
+    try {
+      // fixed bytes around the one value of a one-row, one-column `v` table
+      val overhead = Map("application/json" -> """[{"v":""}]""".length,
+        "text/csv" -> "v\n\n".length, "application/x-ndjson" -> """{"v":""}""".length)
+      for ((accept, fixed) <- overhead) {
+        // 50 two-byte chars: the value's bytes exceed its chars by 50
+        def stored(extra: Int): String = {
+          val key = s"mb${fixed}_$extra"
+          val value = "é" * 50 + "x" * (budget - fixed - 100 + extra)
+          assert(send(req(s"/dataset/$key", guarded).POST(BodyPublishers.ofString(s"v\n$value\n"))
+            .header("Content-Type", "text/csv").build()).statusCode() == 201)
+          key
+        }
+        def get(key: String) = send(req(s"/dataset/$key?q=" +
+            java.net.URLEncoder.encode("{}", UTF_8), guarded).GET()
+          .header("Accept", accept).build())
+        // exactly the budget in bytes: served
+        val exact = get(stored(0))
+        assert(exact.statusCode() == 200, accept)
+        assert(exact.body().getBytes(UTF_8).length == budget, accept)
+        // one byte over, though ~50 chars under: 413
+        val over = get(stored(1))
+        assert(over.body().length < budget - 40, accept)
+        assert(over.statusCode() == 413, accept)
+        assert(over.body().contains(s"max-result-bytes=$budget"), accept)
+      }
+    } finally guarded.stop()
+  }
+
   test("max-body-bytes guard: oversized uploads 413 before parsing, existing data untouched") {
     // the REQUEST-side mirror of the result guards: declared, streamed,
     // and post-decompression oversize all 413 without touching the cache
@@ -596,7 +629,10 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("limited reads of a one-partition cache skip the row-order sort and keep ingest order") {
     val csv = "a,b\n" + (1 to 1000).map(i => s"$i,${i % 7}").mkString("\n") + "\n"
     assert(storeCsv("ord1", csv).statusCode() == 201)
-    assert(Plans.unsorted("ord1", """{"offset": 10, "limit": 5}""") == (11L to 15L))
+    // an offset page drops its offset rows in the task: CachedSlice, not
+    // CollectLimit (graft.plans.CachedOffsetStrategy)
+    assert(Plans.unsorted("ord1", """{"offset": 10, "limit": 5}""", limitNode = "CachedSlice") ==
+      (11L to 15L))
     assert(Plans.unsorted("ord1", """{"where": [">", "a", 500], "limit": 3}""") ==
       Seq(501L, 502L, 503L))
     assert(Plans.unsorted("ord1", """{"select": ["a"], "limit": 3}""") == Seq(1L, 2L, 3L))
@@ -647,6 +683,67 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       ((edge - 1) to (edge + 2)))
     assert(Plans.sorted("ord2", s"""{"from": {"offset": ${edge - 1}, "limit": 3}}""") ==
       (edge to (edge + 2)))
+  }
+
+  test("deep pages: past the first cached batch, every format and encoding, exact rows") {
+    val n = 40000 // one partition, four cached batches of 10k rows
+    val csv = (1 to n).map(i => s"$i,w$i,${i % 3 == 0}").mkString("a,s,t\n", "\n", "\n")
+    assert(storeCsv("deep1", csv).statusCode() == 201)
+    assert(server.cache.peek("deep1").get.df.rdd.getNumPartitions == 1)
+    if (server.cache.peek("ord2").isEmpty)
+      assert(storeCsv("ord2", (1 to 120000).map(i => s"$i,${i % 7}")
+        .mkString("a,b\n", "\n", "\n")).statusCode() == 201)
+    /** The `a` values of a page, decoded from `accept` and `encoding`. */
+    def page(key: String, q: String, accept: String, encoding: String): (Seq[Long], String) = {
+      var b = req(s"/dataset/$key?q=" + java.net.URLEncoder.encode(q, UTF_8)).GET()
+        .header("Accept", accept)
+      if (encoding != "none") b = b.header("Accept-Encoding", encoding)
+      val r = sendBytes(b.build())
+      assert(r.statusCode() == 200, s"$key $q $accept $encoding")
+      val enc = r.headers().firstValue("Content-Encoding")
+      assert(enc.orElse("none") == encoding, s"$key $q $accept $encoding")
+      val text = new String(Codec.decodeBody(r.body(),
+        if (enc.isPresent) Some(enc.get) else None), UTF_8)
+      val values = accept match {
+        case "text/csv" => text.split('\n').toSeq.drop(1).filter(_.nonEmpty)
+          .map(_.split(',').head.toLong)
+        case _ => "\"a\":(\\d+)".r.findAllMatchIn(text).map(_.group(1).toLong).toSeq
+      }
+      (values, r.headers().firstValue("X-QCache-unsliced-length").orElse(""))
+    }
+    val pages = Seq(
+      ("""{"offset": 30000, "limit": 2000}""", 30001L to 32000L),
+      ("""{"offset": 10000, "limit": 5000}""", 10001L to 15000L),
+      ("""{"offset": 9999, "limit": 3}""", 10000L to 10002L),
+      ("""{"offset": 35000, "limit": 10000}""", 35001L to 40000L),
+      ("""{"offset": 39990}""", 39991L to 40000L),
+      ("""{"offset": -4}""", 39997L to 40000L),
+      ("""{"offset": 40000, "limit": 5}""", Seq.empty[Long]),
+      ("""{"offset": 50000}""", Seq.empty[Long]))
+    for ((q, expected) <- pages; accept <- Seq("application/json", "text/csv",
+           "application/x-ndjson"); encoding <- Seq("none", "lz4", "gzip")) {
+      val (rows, unsliced) = page("deep1", q, accept, encoding)
+      assert(rows == expected, s"$q $accept $encoding")
+      assert(unsliced == n.toString, s"$q $accept $encoding")
+    }
+    // the multi-partition cache keeps its sort, and pages the same way
+    for ((q, expected) <- Seq(
+           ("""{"offset": 60000, "limit": 2000}""", 60001L to 62000L),
+           ("""{"offset": 119995}""", 119996L to 120000L));
+         accept <- Seq("application/json", "text/csv"); encoding <- Seq("none", "gzip"))
+      assert(page("ord2", q, accept, encoding) == ((expected, "120000")), s"$q $accept")
+    // the one-partition page plans the offset inside its task, which ships
+    // exactly the page's rows
+    val df = graft.engine.QueryEngine.run(server.cache.peek("deep1").get.df,
+      """{"offset": 30000, "limit": 2000}""").df
+    assert(df.count() == 2000)
+    val plan = df.queryExecution.executedPlan
+    val slices = Plans.collect(plan) { case c: graft.plans.CachedSliceExec => c }
+    assert(slices.map(c => (c.limit, c.offset)) == Seq((32000, 30000)), plan)
+    assert(!plan.isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec] &&
+      Plans.collect(plan) { case c: org.apache.spark.sql.execution.CollectLimitExec => c }.isEmpty,
+      plan)
+    assert(slices.head.executeCollect().length == 2000)
   }
 
   test("a store and an update each run one Spark job, whatever the body format") {
@@ -920,6 +1017,28 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("status endpoint") {
     val r = send(req("/status").GET().build())
     assert(r.statusCode() == 200 && r.body() == "OK")
+  }
+
+  test("gzip bodies deflate at speed level and read back with the JDK's stream") {
+    val rnd = new scala.util.Random(7)
+    val text = (1 to 20000).map(i => s"""{"a":$i,"s":"w${i % 97}"}""").mkString("[", ",", "]")
+      .getBytes(UTF_8)
+    val noise = Array.fill(300000)(rnd.nextInt().toByte) // incompressible: stored blocks
+    for (data <- Seq(text, noise, Array.emptyByteArray, "x".getBytes(UTF_8))) {
+      val gz = Codec.gzipCompress(data)
+      assert(gz.take(3).sameElements(Array[Byte](0x1f, 0x8b.toByte, 8)))
+      val back = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(gz))
+        .readAllBytes()
+      assert(back.sameElements(data))
+      assert(Codec.gzipDecompress(gz).sameElements(data))
+      // the body is one BEST_SPEED deflate stream between header and trailer
+      val d = new java.util.zip.Deflater(java.util.zip.Deflater.BEST_SPEED, true)
+      d.setInput(data); d.finish()
+      val raw = new Array[Byte](data.length + 1024)
+      val n = d.deflate(raw)
+      d.end()
+      assert(gz.length == 10 + n + 8)
+    }
   }
 
   test("gzip request and response bodies") {

@@ -4,7 +4,7 @@ import java.sql.{Date, Timestamp}
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.execution.{FilterExec, ProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -12,6 +12,8 @@ import org.apache.spark.sql.types._
 
 import graft.engine.{ExprCompiler, QueryEngine}
 import graft.plans.ParamLiteral
+import graft.server.DatasetCache
+import graft.sources.Ingest
 
 /** Differential check of the constant-free codegen rule
   * (graft.plans.ParameterizeLiterals): the same dialect queries run in the
@@ -39,7 +41,7 @@ class ParamLiteralSpec extends AnyFunSuite with BeforeAndAfterAll {
     SparkSession.setDefaultSession(withRule)
     SparkSession.setActiveSession(withRule)
   }
-  override def afterAll(): Unit = tables.values.foreach(_.unpersist())
+  override def afterAll(): Unit = Layouts.foreach(parts => tables((withRule, parts)).unpersist())
 
   private val schema = StructType(Seq(
     StructField("k", StringType),
@@ -47,40 +49,61 @@ class ParamLiteralSpec extends AnyFunSuite with BeforeAndAfterAll {
     StructField("d", DoubleType),
     StructField("b", BooleanType),
     StructField("dt", DateType),
-    StructField("ts", TimestampType),
-    StructField(ExprCompiler.RowId, LongType, nullable = false)))
+    StructField("ts", TimestampType)))
 
-  private val data: Seq[Row] = Seq(
-    Row("a", 0L, 0.0, true, Date.valueOf("2024-01-01"), Timestamp.valueOf("2024-01-01 00:00:00"), 0L),
-    Row("b", Long.MinValue, -0.0, false, Date.valueOf("2024-02-29"), Timestamp.valueOf("2024-02-29 12:30:00"), 1L),
-    Row("a", Long.MaxValue, Double.NaN, null, null, null, 2L),
-    Row("c", 7L, 1.5, true, Date.valueOf("2023-12-31"), Timestamp.valueOf("2023-12-31 23:59:59.5"), 3L),
-    Row("b", -5L, Double.NegativeInfinity, false, Date.valueOf("2024-03-01"), Timestamp.valueOf("2024-03-01 00:00:00"), 4L),
-    Row("c", null, null, true, Date.valueOf("2024-01-15"), Timestamp.valueOf("2024-01-15 08:00:00"), 5L),
-    Row("a", 12L, -2.25, false, Date.valueOf("2024-01-01"), Timestamp.valueOf("2024-01-01 00:00:00.000001"), 6L),
-    Row("c", 3L, Double.PositiveInfinity, true, Date.valueOf("2024-06-30"), Timestamp.valueOf("2024-06-30 18:00:00"), 7L))
+  private val data: Seq[Seq[Any]] = Seq(
+    Seq("a", 0L, 0.0, true, "2024-01-01", "2024-01-01 00:00:00"),
+    Seq("b", Long.MinValue, -0.0, false, "2024-02-29", "2024-02-29 12:30:00"),
+    Seq("a", Long.MaxValue, Double.NaN, null, null, null),
+    Seq("c", 7L, 1.5, true, "2023-12-31", "2023-12-31 23:59:59.5"),
+    Seq("b", -5L, Double.NegativeInfinity, false, "2024-03-01", "2024-03-01 00:00:00"),
+    Seq("c", null, null, true, "2024-01-15", "2024-01-15 08:00:00"),
+    Seq("a", 12L, -2.25, false, "2024-01-01", "2024-01-01 00:00:00.000001"),
+    Seq("c", 3L, Double.PositiveInfinity, true, "2024-06-30", "2024-06-30 18:00:00"))
 
-  /** The server's cache layout: range-partitioned and sorted on the row id,
-    * persisted. */
-  private def table(s: SparkSession): DataFrame = {
-    val df = s.createDataFrame(s.sparkContext.parallelize(data, 2), schema)
-      .repartitionByRange(2, org.apache.spark.sql.functions.col(ExprCompiler.RowId))
-      .sortWithinPartitions(ExprCompiler.RowId)
-      .persist()
-    df.count()
+  /** Rows of all nulls but `k`: they drop out of every comparison, and fill
+    * a body to the size the store splits into two partitions. */
+  private val FillerRows = 100000
+
+  /** The table as the server stores it, in the session with the rule: a
+    * CSV body through `Ingest`, the row-ordered scan, and the one-job cache
+    * build. With `filler`, half the rows above sit before the filler and
+    * half after it, which makes two partitions that both hold data rows.
+    * The session without extensions cannot plan the ordered scan, so it
+    * reads the same cache (org.apache.spark.sql.GraftSqlTestShims). */
+  private def table(filler: Boolean): DataFrame = {
+    def line(r: Seq[Any]): String = r.map(v => if (v == null) "" else v.toString).mkString(",")
+    val (head, tail) = data.splitAt(data.length / 2)
+    val lines = if (!filler) data.map(line)
+      else head.map(line) ++ Iterator.fill(FillerRows)("f,,,,,") ++ tail.map(line)
+    val parsed = Ingest.fromCsv(withRule, lines.mkString("k,i,d,b,dt,ts\n", "\n", "\n"),
+      Map("ts" -> "timestamp"))
+    val df = org.apache.spark.sql.GraftSqlShims.rangeOrderedScan(parsed, ExprCompiler.RowId)
+    DatasetCache.materialize(df)
+    assert(df.schema.fields.filterNot(_.name == ExprCompiler.RowId).toSeq ==
+      schema.fields.toSeq, df.schema)
     df
   }
 
-  private lazy val tables = Map(withRule -> table(withRule), plain -> table(plain))
+  /** Layouts: one partition, and two. */
+  private val Layouts = Seq(1, 2)
+
+  private lazy val tables: Map[(SparkSession, Int), DataFrame] =
+    Layouts.flatMap { parts =>
+      val df = table(filler = parts > 1)
+      assert(df.rdd.getNumPartitions == parts)
+      Seq((withRule, parts) -> df,
+        (plain, parts) -> org.apache.spark.sql.GraftSqlTestShims.sameCacheIn(plain, df))
+    }.toMap
 
   /** Rows rendered as strings, so -0.0 vs 0.0 and NaN compare exactly. */
-  private def rows(s: SparkSession, json: String): Either[String, Seq[String]] =
-    try Right(QueryEngine.run(tables(s), json).df.collect().toSeq.map(_.toString))
+  private def rows(s: SparkSession, parts: Int, json: String): Either[String, Seq[String]] =
+    try Right(QueryEngine.run(tables((s, parts)), json).df.collect().toSeq.map(_.toString))
     catch { case e: Exception => Left(e.getClass.getName) }
 
-  private def assertSame(json: String): Unit = {
-    val (a, b) = (rows(withRule, json), rows(plain, json))
-    assert(a == b, s"$json: with rule $a, without $b")
+  private def assertSame(json: String): Unit = Layouts.foreach { parts =>
+    val (a, b) = (rows(withRule, parts, json), rows(plain, parts, json))
+    assert(a == b, s"$json over $parts partition(s): with rule $a, without $b")
   }
 
   private val queries = Seq(
@@ -140,8 +163,8 @@ class ParamLiteralSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("NaN and signed-zero constants through the column API") {
     import org.apache.spark.sql.functions._
-    def run(s: SparkSession, c: org.apache.spark.sql.Column) =
-      tables(s).filter(c).select("k", ExprCompiler.RowId).collect().toSeq.map(_.toString)
+    def run(s: SparkSession, c: org.apache.spark.sql.Column) = Layouts.map(parts =>
+      tables((s, parts)).filter(c).select("k", ExprCompiler.RowId).collect().toSeq.map(_.toString))
     Seq(col("d") === lit(Double.NaN), col("d") < lit(Double.NaN),
         col("d") === lit(-0.0), (col("d") * lit(Double.NaN)).isNaN,
         col("d").isin(lit(Double.NaN), lit(1.5)), col("i") =!= lit(Long.MinValue),
@@ -153,7 +176,7 @@ class ParamLiteralSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Whole-stage generated sources of an executed query, in stage order. */
   private def generated(s: SparkSession, json: String): Seq[String] = {
-    val df = QueryEngine.run(tables(s), json).df
+    val df = QueryEngine.run(tables((s, 1)), json).df
     df.collect()
     org.apache.spark.sql.execution.debug.codegenStringSeq(df.queryExecution.executedPlan)
       .map(_._2)
@@ -175,7 +198,7 @@ class ParamLiteralSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("only operands of comparisons, arithmetic and in lists are rewritten") {
     import org.apache.spark.sql.functions._
-    val df = tables(withRule)
+    val df = tables((withRule, 1))
       .filter(col("i") > 2 && col("k").isin("a", "c") && rand(42) < 0.9)
       .select(round(col("d") + 1.0, 2).as("r"), (col("d") * 3.0).as("x"))
     df.collect()
