@@ -37,12 +37,7 @@ def connect(data_dir):
     con.execute(f"SET temp_directory = '{tmp}'")
     for t in TABLES:
         p = f"{data_dir}/{t}.parquet"
-        # make_scale.py writes large tables as a DIRECTORY of chunk
-        # files (Spark reads either layout transparently; DuckDB needs
-        # the glob spelled out)
-        if os.path.isdir(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}/*.parquet'")
-        elif os.path.exists(p):
+        if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     return con
 

@@ -122,10 +122,8 @@ object Bench {
       // per-task overhead it saves is smaller than the parallelism it
       // costs at this scale. At fleet scale the guide's 100 MB-1 GB
       // partition sizing comes from advisoryPartitionSizeInBytes
-      // (deployment conf), not from flipping this policy. Env knob kept
-      // so the A/B stays reproducible.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
+      // (deployment conf), not from flipping this policy.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     // committer v2 + codegen cache sizing moved to the shared library
     // tuning (graft.engine.SessionTuning) so Bench, Verify and the HTTP
     // server run the same write path — a conf that lived only here

@@ -1185,7 +1185,7 @@ object XopEngine {
             Errors.malformed(s"xop '$name': 'ts' must be numeric or timestamp", other)
         }
         // optional segment width in seconds (see sessionizeBatch: any
-        // value is correct, absent = auto-derived, gap-floored)
+        // value is correct, absent = derived from the span, gap-floored)
         val sessGranule = args.get("granule").map { _ =>
           val w = intArg(args, "granule", 0, name)
           if (w <= 0)
@@ -1194,15 +1194,14 @@ object XopEngine {
         }
         val sessGap = intArg(args, "gap_seconds", 1800, name)
         args.get("strategy") match {
-          // absent = AUTO, evidence-tiered (sessionizeBatch): native
-          // when footers prove a time-clustered layout, windowed when a
-          // measured key sample proves uniformity, segmented otherwise;
-          // 'segmented' pins the layout-robust carry unconditionally
+          // absent = AUTO (Joins.carryGranule, shared with asof):
+          // segmented with a granule, or above the row gate unless a key
+          // sample proves the user ids uniform; otherwise the one-window
+          // carry. 'segmented' segments at every size
           case None =>
             EventStreams.sessionizeBatch(df, sessGap, sessGranule)
           case Some("segmented") =>
-            EventStreams.sessionizeBatch(df, sessGap, sessGranule,
-              autoNative = false)
+            EventStreams.sessionizeBatch(df, sessGap, sessGranule, "segmented")
           case Some("native") =>
             // the native session_window strategy has no granule knob
             // (its map-side merge is layout-driven, not time-bucketed)
@@ -1226,10 +1225,9 @@ object XopEngine {
             EventStreams.sessionizeNative(df, sessGap)
           case Some("window") =>
             // the classic one-window-per-user form: one exchange, no
-            // carry machinery — the fast choice for UNIFORM session
-            // keys (2-3x the segmented carry at the billion-row rung);
-            // opt-in only, because a hot key funnels its whole history
-            // through one partition (see sessionizeWindowed)
+            // carry machinery — the cheaper plan for UNIFORM session
+            // keys; a hot key funnels its whole history through one
+            // partition (see sessionizeWindowed)
             if (sessGranule.isDefined)
               Errors.malformed(
                 s"xop '$name': 'granule' is invalid with strategy 'window'")
@@ -1453,10 +1451,11 @@ object XopEngine {
             Errors.malformed(s"xop '$name': 'granule' must be a positive integer")
           w
         }
-        // the sessionize-style strategy override: "segmented" always
-        // segments, "window" pins the one-window carry (rejected with a
-        // granule — the two contradict), default "auto" = row gate +
-        // measured key-skew tier
+        // the strategy rule shared with sessionize (Joins.carryGranule):
+        // "segmented" always segments, "window" pins the one-window carry
+        // (rejected with a granule — the two contradict), default "auto"
+        // segments with a granule, or above the row gate unless a key
+        // sample proves the keys uniform
         val asofStrategy = args.get("strategy") match {
           case None => "auto"
           case Some(s: String) if Set("auto", "window", "segmented")(s) =>

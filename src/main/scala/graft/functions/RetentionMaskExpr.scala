@@ -15,8 +15,7 @@ import org.apache.spark.sql.types._
   * codegen, and the one exchange carries USER-sized rows (16 bytes of
   * state), never the DISTINCT (user, period) pair relation the naive
   * shape shuffles (513M pairs at 1.28B events, the measured wall of
-  * [[graft.streaming.EventStreams.retention]]'s previous form —
-  * tools/ProfileRetentionStages).
+  * [[graft.streaming.EventStreams.retention]]'s previous form).
   *
   * Fold semantics: the buffer mask is always RELATIVE to the buffer's
   * current min. Updating with an earlier period (or merging a partial

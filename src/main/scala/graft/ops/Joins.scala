@@ -8,36 +8,62 @@ import org.apache.spark.sql.functions._
   * enrichment equi-join the JSON dialect exposes. */
 object Joins {
 
-  /** Row-estimate gate for the auto-granule segmented carries (as-of
-    * join here, batch sessionization in EventStreams): below this, even
-    * a maximally-skewed key — every row on ONE key — sorts in a single
-    * sub-second task, and segmentation's fixed costs (min/max pre-pass
-    * job, granule exchange, broadcast join back) dominate; above it the
-    * single-task worst case is a real straggler and the carry segments.
-    * An explicit granule always segments regardless of size. */
+  /** Row-estimate gate of the auto strategy both segmented carries share
+    * (the as-of join here, batch sessionization in EventStreams): below
+    * this, even a maximally-skewed key — every row on ONE key — sorts in
+    * a single sub-second task, and segmentation's fixed costs (min/max
+    * pre-pass job, granule exchange, broadcast join back) dominate; above
+    * it the single-task worst case is a real straggler and the carry
+    * segments. */
   private[graft] val SegmentedCarryMinRows: Long = 2L << 20
+
+  /** The one strategy rule of both segmented carries: the granule width
+    * the carry segments at, or None for the one-window carry. "window"
+    * never segments; "segmented" always does, at any size; "auto" (the
+    * default) segments when a granule is given, and otherwise only when
+    * `df`'s row estimate reaches [[SegmentedCarryMinRows]] (rowBytes=64
+    * deliberately overestimates rows from the byte stats, erring toward
+    * segmentation — the safe direction) AND [[measuredUniformKeys]]
+    * finds a hot key, a thin sample or no stats on (`keyCol`, `tCol`):
+    * on measured-uniform keys the one-window carry's single exchange is
+    * the cheaper plan (12.8M sf1 events on 4 cores, median of 5 runs:
+    * x15 sessionize 6.2 s vs 14.7 s and x31 as-of 1.3 s vs 7.2 s
+    * against the segmented carry, sample included), while a
+    * hot key keeps the skew-robust segmented default. A width that is
+    * not given comes from `autoWidth`, run only when the carry segments:
+    * the callers pass [[spanGranule]], one eager column-pruned min/max
+    * job — pass an explicit granule to skip it. Every strategy's output
+    * is row-identical, so the rule trades only wall time. */
+  private[graft] def carryGranule(df: DataFrame, keyCol: String, tCol: String,
+      granule: Option[Long], strategy: String, what: String,
+      autoWidth: => Long): Option[Long] = strategy match {
+    case "window"    => None
+    case "segmented" => Some(granule.getOrElse(autoWidth))
+    case _ => granule.orElse {
+      val est = Similarity.approxRows(df, rowBytes = 64L, unknownAs = Long.MaxValue)
+      if (est < SegmentedCarryMinRows ||
+          measuredUniformKeys(df, keyCol, tCol, est, what = what)) None
+      else Some(autoWidth)
+    }
+  }
 
   private lazy val skewLog = org.slf4j.LoggerFactory.getLogger("graft.skewmeasure")
 
-  /** MEASURED key-skew verdict shared by the segmented-carry auto
-    * strategies (batch sessionize's middle tier; the as-of join's tier
-    * between the row gate and the granule derivation). Samples
+  /** MEASURED key-skew verdict of [[carryGranule]]'s auto rule. Samples
     * ~`sampleTarget` rows content-deterministically (xxhash64 of
     * (key, time) mod a stats-sized divisor — same rows on any
     * partitioning, replay-stable) and measures the hottest key's row
-    * share. Returns true — the one-exchange windowed/one-window carry is
-    * safe — only when the sample is large enough to trust
-    * (max(65536, 100·shufflePartitions) rows, so a hot key at the
-    * decision boundary is sampled ~100+ times) AND the hottest key keeps
-    * its single reduce partition within ~2× an average partition's row
-    * load (share · shufflePartitions ≤ 2 — the straggler bound a per-key
-    * window partition is subject to). Unknown sizes, thin samples, and
-    * hot keys all fall back false: the skew-robust segmented carry stays
-    * the default in every unproven direction. Cost: one column-pruned
-    * scan and a map-combining (key → count) aggregate over ~0.1% of
-    * rows — paid only above the row gate, where choosing right is worth
-    * a 2-3× wall multiple. The verdict is logged with the measured
-    * numbers so the strategy choice is auditable. */
+    * share. Returns true — the one-window carry is safe — only when the
+    * sample is large enough to trust (max(65536, 100·shufflePartitions)
+    * rows, so a hot key at the decision boundary is sampled ~100+ times)
+    * AND the hottest key keeps its single reduce partition within ~2× an
+    * average partition's row load (share · shufflePartitions ≤ 2 — the
+    * straggler bound a per-key window partition is subject to). Unknown
+    * sizes, thin samples and hot keys all give false. Cost: one
+    * column-pruned scan and a map-combining (key → count) aggregate over
+    * ~`sampleTarget` rows, paid only above the row gate. The verdict is
+    * logged (`graft.skewmeasure`) with the measured numbers so the
+    * strategy choice is auditable. */
   private[graft] def measuredUniformKeys(df: DataFrame, keyCol: String,
       tsCol: String, estRows: Long, sampleTarget: Long = 1000000L,
       minSampleOverride: Long = -1L, what: String = "asof"): Boolean = {
@@ -59,6 +85,18 @@ object Joins {
     skewLog.info(s"$what auto skew measure: sample=$n hottest=$mx " +
       s"shufflePartitions=$p verdict=${if (uniform) "windowed" else "segmented"}")
     uniform
+  }
+
+  /** Granule width targeting ~4096 segments over `t`'s observed span in
+    * `df`, at least `minWidth` — one eager column-pruned min/max job
+    * (`t` must be long-typed). BigInt keeps the span subtraction exact
+    * when double times saturated the long embedding at its extremes. An
+    * empty or all-null `t` gives width 1. */
+  private[graft] def spanGranule(df: DataFrame, t: Column, minWidth: Long = 1L): Long = {
+    val row = df.agg(min(t).as("lo"), max(t).as("hi")).head()
+    if (row.isNullAt(0)) 1L
+    else ((BigInt(row.getLong(1)) - BigInt(row.getLong(0))) / 4096 + 1)
+      .min(BigInt(Long.MaxValue)).toLong.max(minWidth)
   }
 
   /** floor(t / width) in EXACT arithmetic, shared by every granule
@@ -284,48 +322,36 @@ object Joins {
     *      `coalesce(local, carryIn)` — AQE broadcasts the carry when it
     *      is small.
     *
-    * Regime note (measured, tools/ProfileAsofStages at 1.28B events):
-    * the boundary relation is granule-BOUNDED per key, so on SKEWED
-    * corpora — the regime this decomposition exists for — it is small.
-    * On provably-UNIFORM keys it approaches one row per input row
-    * (506M of 508M at the probe) and its aggregate re-exchanges the
-    * union (107 s of the segmented form's 284.6 s vs 103.5 s for the
-    * one-window carry, outputs fingerprint-identical) — which is why
-    * the auto strategy MEASURES key skew and keeps the one-window carry
-    * there. A sessionize-style per-row carry does not exist for as-of:
-    * session partials collapse (gap-bounded per granule) before the
-    * per-key pass, while every as-of left row is an output row — a
-    * per-key pass over per-row carries IS the one-window strategy.
+    * Regime note: the boundary relation is granule-BOUNDED per key, so
+    * on SKEWED corpora — the regime this decomposition exists for — it
+    * is small; on uniform keys it approaches one row per input row and
+    * its aggregate re-exchanges the union, where the one-window carry
+    * is the cheaper plan — which is why the auto rule measures key skew
+    * above the row gate. A sessionize-style
+    * per-row carry does not exist for as-of: session partials collapse
+    * (gap-bounded per granule) before the per-key pass, while every
+    * as-of left row is an output row — a per-key pass over per-row
+    * carries IS the one-window strategy.
     *
     * `granule` is a width in the time column's EMBEDDED units (see
     * [[Joins.timeEmbedding]]: integers in their own units, timestamps as
-    * epoch micros, dates as epoch days). Any value is CORRECT;
-    * only task granularity varies. An explicit granule always segments.
-    * When absent, the choice is STATS-GATED (the same principle as
-    * `Dedup.spread`'s byte budget): if the union's row estimate is below
-    * [[Joins.SegmentedCarryMinRows]], even a maximally-skewed key — ALL
-    * rows on one key — sorts in a single sub-second task, and the
-    * segmentation overhead (a min/max pre-pass job, a granule-level
-    * exchange, a broadcast join back) is the larger cost, so the plan
-    * keeps the one-window carry; above the gate a MEASURED key-skew
-    * tier decides (the sessionize auto playbook):
-    * [[Joins.measuredUniformKeys]] hash-samples the union and a
-    * provably-uniform key distribution keeps the cheaper one-window
-    * carry, while any measured hot key, thin sample, or missing stats
-    * segments, with the width auto-derived from parquet footer min/max
-    * or one column-pruned min/max pass over both sides, targeting
-    * ~4096 segments across the observed span (an eager job at
-    * plan-build time — pass an explicit granule near the typical query
-    * horizon to skip it). `strategy` overrides the whole derivation in
-    * either direction: "segmented" always segments (auto width when no
-    * granule is given), "window" pins the one-window carry (for callers
-    * who know their key distribution). At cluster scale the stats
-    * estimate is always far above the gate, so the unproven-key 100-TB
-    * plan is the segmented one. Time
-    * types with no integral order embedding (strings, wide decimals)
-    * fall back to the single-window carry, which is correct but funnels
-    * each key into one task — as-of semantics are inherently temporal,
-    * so this path is for small orderable oddities.
+    * epoch micros, dates as epoch days). Any value is CORRECT; only task
+    * granularity varies. The strategy is [[Joins.carryGranule]]'s rule,
+    * shared with batch sessionization: "window" pins the one-window
+    * carry; "segmented" always segments; "auto" segments when a granule
+    * is given, or when the union's row estimate reaches
+    * [[Joins.SegmentedCarryMinRows]] and a hash sample of its keys finds
+    * a hot key ([[Joins.measuredUniformKeys]]); otherwise it keeps the
+    * one-window carry (below the gate even a maximally-skewed key sorts
+    * in one sub-second task, and segmentation's min/max pre-pass,
+    * granule exchange and join back are the larger cost). A width that is not
+    * given targets ~4096 segments over the union's observed span, from
+    * one column-pruned min/max job at plan-build time (pass an explicit
+    * granule near the typical query horizon to skip it). Time types with
+    * no integral order embedding (strings, wide decimals) fall back to
+    * the single-window carry, which is correct but funnels each key into
+    * one task — as-of semantics are inherently temporal, so this path is
+    * for small orderable oddities.
     *
     * Right-side (key, time) pairs should be unique (pre-aggregate if
     * not); among exact duplicates the carried payload is the sort-order
@@ -372,37 +398,9 @@ object Joins {
     val leftCols: Seq[Column] = left.columns.toSeq.map(c => col(s"__row.$c").as(c))
     val payloadOut: Seq[Column] = payloadCols.map(c => col(s"__carried.$c").as(c))
 
-    // explicit granule or strategy=segmented → segment; strategy=window
-    // → one-window carry; otherwise (auto) segment only past the row
-    // gate (rowBytes=64 deliberately overestimates rows from the byte
-    // stats, erring toward segmentation — the safe direction), and above
-    // the gate a MEASURED key-skew tier runs first (the sessionize
-    // playbook, r17): a content-deterministic hash sample bounds the
-    // hottest key's row share over the union, and a provably-uniform
-    // key distribution takes the one-window carry — it skips the
-    // boundary aggregate, the carry-in window, and the join back
-    // entirely, for one exchange total. Any measured hot key, thin
-    // sample, or missing stats keeps the skew-robust segmented default
-    // (the conservative direction in every unproven case); every path's
-    // output is pinned row-identical, so the tiers trade only wall
-    // time, never results. The auto width derives from parquet FOOTER
-    // min/max when both sides' time columns trace to plain parquet leaf
-    // scans (metadata-only, no job); the eager min/max pre-pass is the
-    // fallback.
-    val effectiveGranule: Option[Long] = toLong match {
-      case None => None
-      case Some(_) if strategy == "window" => None
-      case Some(fn) if strategy == "segmented" =>
-        granule.orElse(Some(autoGranuleFor(left, right, timeCol, u, fn)))
-      case Some(fn) => granule.orElse {
-        val est = Similarity.approxRows(u, rowBytes = 64L,
-          unknownAs = Long.MaxValue)
-        if (est < Joins.SegmentedCarryMinRows) None
-        else if (Joins.measuredUniformKeys(u, "__k", "__t", est,
-            what = "asof")) None
-        else Some(autoGranuleFor(left, right, timeCol, u, fn))
-      }
-    }
+    val effectiveGranule: Option[Long] = toLong.flatMap(fn =>
+      carryGranule(u, "__k", "__t", granule, strategy, "asof",
+        spanGranule(u, fn(col("__t")))))
 
     (toLong, effectiveGranule) match {
       case (None, _) | (_, None) =>
@@ -457,47 +455,5 @@ object Joins {
           .withColumn("__carried", coalesce(col("__local"), col("__cin")))
           .select(leftCols ++ payloadOut: _*)
     }
-  }
-
-  /** Auto-granule width targeting ~4096 segments over the observed time
-    * span. Preferred source: parquet FOOTER min/max
-    * (GraftSqlShims.parquetFooterBounds) — row-group metadata only, no
-    * data pass, valid when each side's time column traces through
-    * value-preserving nodes to a parquet leaf scan. Footer bounds can be
-    * WIDER than the post-filter span (filters narrow, footers don't
-    * know), which only coarsens segmentation — any width is correct.
-    * The sides must agree with the union's coerced time type exactly:
-    * a coercion (e.g. date → timestamp) changes embedded units and
-    * would misread raw footer days as micros. Fallback: the eager
-    * column-pruned min/max job over the tagged union. */
-  private def autoGranuleFor(left: DataFrame, right: DataFrame, timeCol: String,
-                             u: DataFrame, toLong: Column => Column): Long = {
-    val coerced = u.schema("__t").dataType
-    val footer: Option[(Long, Long)] =
-      if (left.schema(timeCol).dataType == coerced &&
-          right.schema(timeCol).dataType == coerced)
-        for {
-          (lLo, lHi) <- org.apache.spark.sql.GraftSqlShims.parquetFooterBounds(left, timeCol)
-          (rLo, rHi) <- org.apache.spark.sql.GraftSqlShims.parquetFooterBounds(right, timeCol)
-        } yield (math.min(lLo, rLo), math.max(lHi, rHi))
-      else None
-    footer match {
-      case Some((lo, hi)) => widthFor(BigInt(hi) - BigInt(lo))
-      case None           => autoGranule(u, toLong)
-    }
-  }
-
-  private def widthFor(span: BigInt): Long =
-    (span / 4096 + 1).min(BigInt(Long.MaxValue)).toLong.max(1L)
-
-  /** Granule width targeting ~4096 segments over the observed time span —
-    * one eager column-pruned min/max job over the tagged union. BigInt
-    * keeps the span subtraction exact when double times saturated the
-    * long embedding at its extremes. */
-  private def autoGranule(u: DataFrame, toLong: Column => Column): Long = {
-    val row = u.agg(min(toLong(col("__t"))).as("lo"),
-      max(toLong(col("__t"))).as("hi")).head()
-    if (row.isNullAt(0)) 1L
-    else widthFor(BigInt(row.getLong(1)) - BigInt(row.getLong(0)))
   }
 }

@@ -434,8 +434,7 @@ object EventStreams {
     *   1. each event buckets to a time granule `g = floor(sec(ts) /
     *      width)` (`granule` in seconds, or auto-derived targeting
     *      ~4096 segments over the observed span, floored at 4× the gap
-    *      so local breaks can actually fire — parquet footer min/max
-    *      when available, else one column-pruned min/max pre-pass);
+    *      so local breaks can actually fire);
     *   2. LOCAL pass within (user, granule): gap-break flags + running
     *      break count (the local session id) — the hot user's history
     *      spreads over its granules, each an independent task — and the
@@ -462,40 +461,29 @@ object EventStreams {
     * sessions are gap-separated, so a granule holds at most
     * ~`width/gap + 1` local sessions — the per-user partition load is
     * bounded by the user's session count + granule count, never by raw
-    * event count, regardless of how many events the user holds. (The
-    * earlier form carried at granule level — boundary-stats aggregate,
-    * per-user window, join back, then a full (user, sid) exchange of
-    * the partials; the per-row running carry deletes the join and both
-    * post-carry exchanges for a measured ~2× at the billion-event
-    * rung, same bounded-skew class.)
+    * event count, regardless of how many events the user holds.
     *
-    * Like the as-of join, the auto path is STATS-GATED on
-    * `Joins.SegmentedCarryMinRows`: an explicit granule always
-    * segments; with no granule, an input whose row estimate sits below
-    * the gate keeps the classic one-window-per-user carry (a maximally
-    * skewed user still sorts in one sub-second task at that size, and
-    * segmentation's fixed costs dominate), while anything bigger —
-    * always the case at cluster scale — auto-derives ~4096 segments
-    * (floored at a 4-gap width — see the derivation comment) from footer
-    * stats or one column-pruned min/max pre-pass.
-    *
-    * Above the gate the strategy itself is additionally LAYOUT-GATED
-    * (`autoNative`, default on): when the parquet row-group footers
-    * PROVE the input time-clustered ([[timeClusteredLayout]] —
-    * near-disjoint sorted block ranges, metadata-only), the run
-    * delegates to [[sessionizeNative]], whose map-side session merge is
-    * provably in its fast regime there (~3× the segmented carry
-    * single-node) and whose output is oracle-pinned identical. Without
-    * footer evidence — scattered layouts, non-parquet sources,
-    * value-changing read wrappers — the layout-robust segmented carry
-    * stays the choice, so the 100-TB worst case never regresses. Pass
-    * `autoNative = false` to pin the segmented carry regardless (the
-    * xop `strategy: "segmented"`). */
+    * The strategy is [[graft.ops.Joins.carryGranule]]'s rule, shared
+    * with the as-of join: "window" pins the one-window-per-user carry
+    * ([[sessionizeWindowed]]); "segmented" always segments, at any
+    * size; "auto" (the default) segments when a granule is given, or
+    * when the row estimate reaches `Joins.SegmentedCarryMinRows` and a
+    * hash sample of the user ids finds a hot key
+    * ([[graft.ops.Joins.measuredUniformKeys]]); otherwise it keeps the
+    * one-window carry (a maximally skewed user still sorts in one
+    * sub-second task below the gate, and on measured-uniform keys the
+    * carry's second exchange is pure cost). A width that is not given
+    * comes from one column-pruned min/max pre-pass: ~4096 segments over
+    * the observed span, floored at 4× the gap (see the derivation
+    * comment). Every strategy's output is row-identical. */
   def sessionizeBatch(events: DataFrame, gapSeconds: Long,
                       granule: Option[Long] = None,
-                      autoNative: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                      strategy: String = "auto"): DataFrame = {
     granule.foreach(w => require(w > 0, "sessionizeBatch granule must be positive"))
+    require(Set("auto", "window", "segmented")(strategy),
+      s"sessionizeBatch strategy must be auto, window or segmented: $strategy")
+    require(strategy != "window" || granule.isEmpty,
+      "sessionizeBatch: an explicit granule contradicts strategy=window")
     // An NTZ time column unifies on the session-zone timestamp up front
     // (UTC in every graft entry point, so the wall time IS the instant):
     // Spark rejects a direct NTZ→long cast, and every gap/granule
@@ -506,143 +494,43 @@ object EventStreams {
         events.withColumn("ts", col("ts").cast("timestamp"))
       case _ => events
     }
-    val tl = col("ts").cast("long")
-    // Above the row gate with no explicit granule, the auto strategy is
-    // EVIDENCE-TIERED before any width derivation:
-    //   1. layout tier — when the parquet row-group footers PROVE the
-    //      input is time-clustered (near-disjoint sorted block ranges,
-    //      timeClusteredLayout), the native session_window strategy is
-    //      provably in its fast regime (map-side merge collapses each
-    //      split's narrow window; ~3× the segmented carry single-node,
-    //      tools/ProfileSessionize) and runs automatically;
-    //   2. measured-skew tier — otherwise a content-deterministic hash
-    //      sample measures the hottest session key's share
-    //      (measuredUniformKeys); a provably-uniform corpus takes the
-    //      one-exchange windowed strategy (2-3× the carry at 1.28B,
-    //      tools/ProfileSessionizeStages);
-    //   3. default — any measured hot key, thin sample, or missing
-    //      stats keeps the skew-robust segmented carry.
-    // Every tier's output is pinned row-identical, so the gates trade
-    // only wall time, never results. An explicit granule always forces
-    // the segmented carry, and the explicit xop strategy argument
-    // overrides in either direction.
-    val estRows: Long =
-      if (granule.isEmpty)
-        graft.ops.Similarity.approxRows(ev, rowBytes = 64L,
-          unknownAs = Long.MaxValue)
-      else 0L
-    val aboveGate: Boolean = granule.isEmpty &&
-      estRows >= graft.ops.Joins.SegmentedCarryMinRows
-    // ONE footer pass serves both decisions: the per-block bounds feed
-    // the layout gate, and their fold is the global span the granule
-    // derivation needs (re-running the trace would re-open every file's
-    // footer on the gate-rejected path — the common one)
-    val blocks: Option[Seq[(Long, Long)]] =
-      if (!aboveGate) None
-      else org.apache.spark.sql.GraftSqlShims.parquetRowGroupBounds(ev, "ts")
-    val nativeByLayout: Boolean = autoNative && aboveGate &&
-      gapSeconds >= 1 && gapSeconds <= MaxIntervalSeconds &&
-      ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType &&
-      blocks.exists(clusteredBlocks)
-    if (nativeByLayout)
-      return restoreSessionTsType(sessionizeNative(ev, gapSeconds),
-        events.schema("ts").dataType)
-    // Second auto tier — MEASURED key skew. The footers couldn't prove a
-    // time-clustered layout, so before defaulting to the segmented carry,
-    // measure the session-key distribution instead of gambling on it: a
-    // content-deterministic hash sample bounds the hottest user_id's
-    // event share, and a provably-uniform corpus takes the one-exchange
-    // windowed strategy (2-3x the carry at the billion-row rung —
-    // tools/ProfileSessionizeStages: 165 s vs 359-565 s at 1.28B). Any
-    // measured hot key — or a sample too thin to trust — keeps the
-    // skew-robust segmented default. The probe costs one column-pruned
-    // scan + a two-level aggregate, paid only above the row gate where
-    // the strategy delta dwarfs it.
-    if (autoNative && aboveGate && measuredUniformKeys(ev, estRows))
-      return restoreSessionTsType(windowedSessions(ev, gapSeconds),
-        events.schema("ts").dataType)
-    val effectiveGranule: Option[Long] = granule.orElse {
-      if (aboveGate) {
-        // auto-derive: ~4096 segments over the observed span, FLOORED at
-        // 4× the session gap. The floor matters: a granule narrower than
-        // the gap can never fire a local break (two events inside it are
-        // closer than the gap by construction), so every (user, granule)
-        // emits exactly one partial session and ALL session construction
-        // falls to the cross-granule machinery — the granule-level
-        // relations balloon toward one row per event and the local
-        // windows become pure overhead. At ≥4 gaps per granule the local
-        // pass closes most sessions where they happen (measured at sf1:
-        // 6.5 s → ~4.7 s, tools/ProfileSessionize), while the hot-key
-        // spread keeps up to span/(4·gap) independent segments — for
-        // real corpora (span ≫ gap) that still saturates any cluster.
-        // Preferred span source: parquet FOOTER min/max (metadata-only,
-        // traces through eventsFrame's date_trunc/cast wrappers — see
-        // GraftSqlShims.parquetFooterBounds); the granule is in the
-        // cast("long") embedding's units, i.e. epoch SECONDS for
-        // timestamps (footer micros floor-divide down) and own units for
-        // integers. Fallback: the eager column-pruned min/max job.
-        val gapFloor: Long =
-          if (gapSeconds > Long.MaxValue / 4) Long.MaxValue
-          else math.max(4L * gapSeconds, 1L)
-        def widthOf(lo: BigInt, hi: BigInt): Long =
-          ((hi - lo) / 4096 + 1).min(BigInt(Long.MaxValue)).toLong
-            .max(gapFloor)
-        val footer = blocks
-          .collect { case bs if bs.nonEmpty =>
-            (bs.map(_._1).min, bs.map(_._2).max) }
-          .map { case (lo, hi) =>
-            ev.schema("ts").dataType match {
-              case org.apache.spark.sql.types.TimestampType |
-                   org.apache.spark.sql.types.TimestampNTZType =>
-                (Math.floorDiv(lo, 1000000L), Math.floorDiv(hi, 1000000L))
-              case _ => (lo, hi) // integer time: own units
-            }
-          }
-        footer match {
-          case Some((lo, hi)) => Some(widthOf(BigInt(lo), BigInt(hi)))
-          case None =>
-            val row = ev.agg(min(col("ts").cast("long")).as("lo"),
-              max(col("ts").cast("long")).as("hi")).head()
-            if (row.isNullAt(0)) Some(1L)
-            else Some(widthOf(BigInt(row.getLong(0)), BigInt(row.getLong(1))))
-        }
-      } else None
-    }
-    val out = effectiveGranule match {
+    // The derived width is FLOORED at 4× the session gap: a granule
+    // narrower than the gap can never fire a local break (two events
+    // inside it are closer than the gap by construction), so every
+    // (user, granule) would emit exactly one partial session and ALL
+    // session construction would fall to the cross-granule machinery —
+    // the partials relation balloons toward one row per event and the
+    // local windows become pure overhead. At ≥4 gaps per granule the
+    // local pass closes most sessions where they happen, while the
+    // hot-key spread keeps up to span/(4·gap) independent segments.
+    val gapFloor: Long =
+      if (gapSeconds > Long.MaxValue / 4) Long.MaxValue
+      else math.max(4L * gapSeconds, 1L)
+    val width = graft.ops.Joins.carryGranule(ev, "user_id", "ts", granule,
+      strategy, "sessionize",
+      graft.ops.Joins.spanGranule(ev, col("ts").cast("long"), gapFloor))
+    val out = width match {
       case None => windowedSessions(ev, gapSeconds)
-      case Some(width) => segmentedSessions(ev, gapSeconds, width)
+      case Some(w) => segmentedSessions(ev, gapSeconds, w)
     }
     restoreSessionTsType(out, events.schema("ts").dataType)
   }
 
-  /** The classic one-window-per-user sessionization, exposed as an
-    * EXPLICIT strategy (xop `strategy: "window"`): ONE corpus exchange
+  /** The classic one-window-per-user sessionization, the EXPLICIT
+    * strategy "window" (xop `strategy: "window"`): ONE corpus exchange
     * on user_id, the running-break window, and a final aggregate the
     * user hash already satisfies — NO second exchange, no carry
     * machinery. Output ≡ [[sessionizeBatch]]'s other strategies row for
-    * row (pinned in OpsSpec and count-verified at 1.28B events,
-    * tools/ProfileSessionizeStages).
+    * row (pinned in OpsSpec and XopSpec).
     *
-    * When to choose it: corpora whose session key is reasonably UNIFORM
-    * — there, at the billion-row rung, it runs ~2–3× faster than the
-    * segmented carry (165 s vs 359–565 s at 1.28B events / 17M uniform
-    * users, ProfileSessionizeStages: the carry's join + final
-    * (user, sid) aggregate over the ~0.8B-row partials relation
-    * dominates its wall). The AUTO default stays the segmented carry:
-    * this form funnels each user's whole history through one partition,
-    * so a single hot key (the 100M-event bot account every real crawl
-    * has) turns into a straggler sort no AQE setting can split —
-    * robustness the auto path must not gamble away on an unmeasured
-    * key distribution. */
-  def sessionizeWindowed(events: DataFrame, gapSeconds: Long): DataFrame = {
-    val ev = events.schema("ts").dataType match {
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        events.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => events
-    }
-    restoreSessionTsType(windowedSessions(ev, gapSeconds),
-      events.schema("ts").dataType)
-  }
+    * When to choose it: corpora whose session key is reasonably UNIFORM,
+    * where it skips the carry's partials exchange and carry window — the
+    * auto path picks it there itself once the key sample proves
+    * uniformity. It funnels each user's whole history through one
+    * partition, so a single hot key (the bot account every real crawl
+    * has) turns into a straggler sort no AQE setting can split. */
+  def sessionizeWindowed(events: DataFrame, gapSeconds: Long): DataFrame =
+    sessionizeBatch(events, gapSeconds, strategy = "window")
 
   private def windowedSessions(ev: DataFrame, gapSeconds: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -663,46 +551,6 @@ object EventStreams {
       .drop("__sid")
   }
 
-  /** MEASURED session-key skew verdict — [[sessionizeBatch]]'s auto tier
-    * between the footer layout gate and the segmented default. The
-    * machinery (content-deterministic hash sample, hottest-key share vs
-    * partition count, conservative fallbacks) is the shared
-    * [[graft.ops.Joins.measuredUniformKeys]], which the as-of join's
-    * auto tier also uses; this delegate pins the session key columns. */
-  private[graft] def measuredUniformKeys(ev: DataFrame, estRows: Long,
-      sampleTarget: Long = 1000000L, minSampleOverride: Long = -1L): Boolean =
-    graft.ops.Joins.measuredUniformKeys(ev, "user_id", "ts", estRows,
-      sampleTarget, minSampleOverride, what = "sessionize")
-
-  /** TRUE when the parquet layout behind `df`'s `ts` column is PROVABLY
-    * time-clustered: at least 8 row groups of footer evidence whose
-    * (min, max) ranges, sorted by min, overlap on at most 10% of
-    * adjacent pairs. Contiguous byte splits of such files give each
-    * Spark partition (and each cached batch built from it) a narrow
-    * time window — the regime where the native session_window merge
-    * collapses map-side. Row groups span hours of events in practice,
-    * so the ≤1 s date_trunc slack the footer trace adds to low bounds
-    * cannot flip the fraction. Untraceable layouts (non-parquet
-    * sources, value-changing wrappers like the long-nanos floor
-    * arithmetic, missing stats) yield no evidence → false — the
-    * conservative direction, keeping the layout-robust segmented
-    * carry. Metadata-only: driver-side footer reads, no Spark job. */
-  private[graft] def timeClusteredLayout(df: DataFrame): Boolean =
-    org.apache.spark.sql.GraftSqlShims.parquetRowGroupBounds(df, "ts")
-      .exists(clusteredBlocks)
-
-  /** The layout verdict over already-fetched row-group bounds (so one
-    * footer pass can feed both this and the span derivation). */
-  private[graft] def clusteredBlocks(blocks: Seq[(Long, Long)]): Boolean =
-    blocks.size >= 8 && {
-      val sorted = blocks.sortBy(_._1)
-      val overlapping = sorted.zip(sorted.tail).count {
-        case ((_, hi1), (lo2, _)) => hi1 > lo2
-      }
-      // there are size-1 adjacent pairs, so the 10% bound divides by that
-      overlapping * 10 <= sorted.size - 1
-    }
-
   /** Both sessionization strategies unify an NTZ `ts` onto TimestampType
     * for the gap/granule arithmetic; this restores the INPUT's flavor on
     * the session bounds so strategy choice never changes the output
@@ -719,25 +567,20 @@ object EventStreams {
 
   /** Gap sessionization via Spark's NATIVE session_window aggregate —
     * same output as [[sessionizeBatch]] row for row (asserted in
-    * StreamingSpec and bit-equal at sf1, tools/CheckNativeSessions).
-    * Chosen automatically by [[sessionizeBatch]] when parquet row-group
-    * footers prove a time-clustered layout; still available as an
-    * explicit strategy for inputs the footer trace can't see.
+    * StreamingSpec, and oracle-checked as x15b). An explicit strategy
+    * only (xop `strategy: "native"`); the auto path never picks it.
     *
     * The trade against the segmented carry: the native plan partially
     * MERGES sessions map-side before one user_id shuffle, so when event
-    * layout is time-clustered per input split (the common case — log
-    * pipelines write parquet in time order) each mapper collapses a hot
-    * user's slice to a handful of sessions and the reduce side sees
-    * almost nothing: ~3× faster than the segmented carry at sf1
-    * single-node (1.4 s vs 4.3 s, tools/ProfileSessionize). But the
-    * reduction is LAYOUT-DEPENDENT: on a temporally-scattered layout
+    * layout is time-clustered per input split (log pipelines that write
+    * parquet in time order) each mapper collapses a hot user's slice to
+    * a handful of sessions and the reduce side sees almost nothing. But
+    * the reduction is LAYOUT-DEPENDENT: on a temporally-scattered layout
     * (hash-partitioned storage, shuffled inputs) map-side merging
     * degenerates and the hot user's near-raw event stream funnels into
     * one reduce task — the exact straggler the (user, granule)
-    * segmentation bounds BY CONSTRUCTION regardless of layout. Default
-    * stays segmented (robust at 100 TB against any layout); choose this
-    * when the input is known time-clustered. */
+    * segmentation bounds BY CONSTRUCTION regardless of layout. Choose
+    * this when the input is known time-clustered. */
   def sessionizeNative(events: DataFrame, gapSeconds: Long): DataFrame = {
     require(gapSeconds > 0, "sessionizeNative gap must be positive")
     require(gapSeconds <= MaxIntervalSeconds,
@@ -793,9 +636,7 @@ object EventStreams {
     * join eliminated by ordering, and the chain emission replaces the
     * result-sized (user, sid) hash aggregate with streaming prefix
     * arithmetic over the already-sorted partition (1.28B events:
-    * 368.6 → 234.4 s end-to-end, ProfileSessionizeStages round 17;
-    * output pinned identical at ×12800 by ScaleProbe's forced-segmented
-    * invariant). Skew bound: sessions are gap-separated, so a granule
+    * 368.6 → 234.4 s end-to-end, output identical). Skew bound: sessions are gap-separated, so a granule
     * holds ≤ ~width/gap + 1 local sessions — the per-user carry
     * partition is bounded by session count + granule count
     * (time-span-shaped), never by the user's raw event count. */
@@ -837,8 +678,8 @@ object EventStreams {
     // emits the finished session: start from the chain-start marker,
     // end from itself (monotone), counts/sums as prefix differences.
     // The old groupBy(user, sid) built a hash state of one entry per
-    // SESSION — result-sized, 185.7 s of the 368.6 s wall at 1.28B
-    // (ProfileSessionizeStages) — where the chain emission is pure
+    // SESSION — result-sized, 185.7 s of the 368.6 s wall at 1.28B —
+    // where the chain emission is pure
     // streaming work over the already-sorted carry partition: same two
     // exchanges, zero aggregate. Exactness: counts are longs; values
     // accumulate in decimal(38,12) so the prefix DIFFERENCE carries no
@@ -856,7 +697,7 @@ object EventStreams {
     // G ~ 100, a real data-dependent crack). Integer headroom is 26
     // digits (1e26), far past any realistic per-user value sum; the
     // row-identical assertion across all three strategies is on the
-    // ROUNDED 4dp surface, pinned by the ×12800 forced-segmented probe. The chain-start
+    // ROUNDED 4dp surface. The chain-start
     // marker is struct-wrapped so a null-ts session's null bounds
     // survive last(ignoreNulls) — struct(null) is non-null (the
     // exactByText precedent).
@@ -1236,8 +1077,8 @@ object EventStreams {
     * maxOffset+1 (cohort, offset) rows per user, and the cell counts
     * partial-combine. The previous shape (DISTINCT (user, period) +
     * min-over-distinct + user join) shuffled the full pair relation —
-    * 513M pairs at 1.28B events, measured 152-163 s
-    * (tools/ProfileRetentionStages) against ~40 s for this form — and
+    * 513M pairs at 1.28B events, measured 152-163 s against ~40 s for
+    * this form — and
     * scanned the log twice. maxOffset > 62 (beyond one mask word)
     * falls back to that pair shape, window-based: distinct, then
     * cohort = min over a user-partitioned window on the already-small
@@ -1522,9 +1363,7 @@ object EventStreams {
   def eventsFrame(spark: SparkSession, dir: String): DataFrame = {
     // read through the registry (store-once-query-many: the cached
     // columnar relation, not a fresh parquet decode per execution —
-    // every other query path already does; the footer-bounds trace
-    // resolves through InMemoryRelation, so the sessionize auto granule
-    // stays metadata-only)
+    // every other query path already does)
     val raw = graft.sources.TableRegistry.table(spark, dir, "events")
     val sec = raw.schema("ts").dataType match {
       // integer nanos → WHOLE seconds with an exact FLOOR divide

@@ -32,8 +32,8 @@ object DumpPlans {
       ("x28_bloom_exclude", "bloom exclusion — map-only sketch probe over the corpus; only probe-positive rows reach the verifying anti-join"),
       ("x27_token_budget", "token budget — two-level prefix sum: parallel per-(source,shard) windows, tiny offset rollup broadcast back; no single-task source window"),
       ("x31_asof", "as-of join (below the segmentation gate at this SF) — union of both sides, ONE key shuffle, RunningWindowFunction last-non-null carry; no range-join explosion. Past ~2M estimated rows the auto path switches to the segmented plan shown under x31b"),
-      ("x31b_asof_hot", "as-of join, SEGMENTED carry (explicit granule) — (key, granule) window over the union; the per-(key,granule) boundary is an INDEPENDENT narrow aggregate with map-side partial combine (latest right payload — deliberately not a consumer of the window branch, whose per-branch column pruning defeats AQE stage reuse); cross-granule carry window over the BOUNDED granule relation only, broadcast join back; a hot key's history spreads across granule tasks. Above the row gate with NO granule, the r18 auto tier MEASURES key skew and keeps the one-window carry on provably-uniform keys (103.5 s vs 284.6 s at 254M output rows, fingerprint-identical — ProfileAsofStages)"),
-      ("x31c_asof_window", "as-of join, one-window carry FORCED (strategy=window — what the measured tier picks on uniform keys) — union of both sides, ONE key shuffle, RunningWindowFunction last-non-null carry, no boundary aggregate, no carry join; same DuckDB ASOF oracle as x31"),
+      ("x31b_asof_hot", "as-of join, SEGMENTED carry (explicit granule) — (key, granule) window over the union; the per-(key,granule) boundary is an INDEPENDENT narrow aggregate with map-side partial combine (latest right payload — deliberately not a consumer of the window branch, whose per-branch column pruning defeats AQE stage reuse); cross-granule carry window over the BOUNDED granule relation only, broadcast join back; a hot key's history spreads across granule tasks. Above the row gate with NO granule, the auto path plans this same carry with a min/max-derived width"),
+      ("x31c_asof_window", "as-of join, one-window carry FORCED (strategy=window — the cheaper plan on uniform keys) — union of both sides, ONE key shuffle, RunningWindowFunction last-non-null carry, no boundary aggregate, no carry join; same DuckDB ASOF oracle as x31"),
       ("x32_pii", "PII redaction — map-only regex passes inside one WholeStageCodegen span, zero exchanges"),
       ("x33_quality_topk", "quality top-k per source — Partial WindowGroupLimit keeps k rows per group map-side before the one exchange"),
       ("x38_bm25", "BM25 search — fused [dl, tf...] native kernel (one codegen'd token pass, no explode), one-row stats broadcast back, TakeOrderedAndProject top-k; two map-only corpus scans total"),
@@ -64,7 +64,7 @@ object DumpPlans {
       ("x65_repetition", "Gopher repetition signals — entirely MAP-ONLY: line stats and gram char-fractions as array folds over sorted runs inside the scan projection; the only exchange is the output orderBy"),
       ("x66_minhash_index", "index-served incremental MinHash — the corpus side is a bare (id, sig) parquet SCAN banded in place (no shingle/signature lineage, ~numHashes longs per doc read); downstream is the identical single (band, bucket) exchange; the exact-verify joins touch corpus text only for the id-bounded candidates"),
       ("x67_vocab_sketch", "certified vocabulary sketch — ONE narrow mapPartitions summarization (runs once: the Θ sentinel rides the single TakeOrdered instead of a scalar branch, whose pushed-down filters would split the exchange — the x63b stage-reuse lesson), exchange bounded at capacity+1 rows per partition whatever the vocabulary, Window over the limit-bounded k+1 rows only"),
-      ("x69_retention", "cohort retention — ONE user-keyed HashAggregate in bounded state (RetentionMaskExpr: per-user min period + offset bitmask in two fixed-width buffer slots, map-side partial combine), so the single exchange carries 16-byte user states, never the DISTINCT (user, period) pair relation (513M pairs at 1.28B, where the old shape's wall was 152.3 s against 35.7 s for this one — ProfileRetentionStages); the mask explodes to <= maxOffset+1 cells per user and the cell counts partial-combine; no join, no window, no COUNT(DISTINCT)"),
+      ("x69_retention", "cohort retention — ONE user-keyed HashAggregate in bounded state (RetentionMaskExpr: per-user min period + offset bitmask in two fixed-width buffer slots, map-side partial combine), so the single exchange carries 16-byte user states, never the DISTINCT (user, period) pair relation (513M pairs at 1.28B, where the old shape's wall was 152.3 s against 35.7 s for this one); the mask explodes to <= maxOffset+1 cells per user and the cell counts partial-combine; no join, no window, no COUNT(DISTINCT)"),
       ("x69b_retention_wide", "retention past the mask word (maxOffset > 62) — the pair-shape fallback: DISTINCT (user, period) map-side-combined, cohort = min(period) window over the user-partitioned PAIR relation (bounded per-user partitions: at most span/period distinct periods), cell counts partial-combine; one scan, no join (the r18 window rewrite of the old two-scan join form)"),
       ("x70_vocab_by_source", "per-group vocabulary — one (group, token) exchange with partial count combine; the rank<=k filter plans as WindowGroupLimit over the AGGREGATED (vocabulary-bounded) relation, never a window over raw token occurrences"),
       ("x75_common_line_scrub", "corpus-frequency line scrub — document frequency as DISTINCT (line, doc) partial-combining aggregation (a boilerplate line repeated across a mapper's docs collapses pre-exchange), frequent head filtered aggregate-side and anti-joined (AQE-broadcastable: the head is tiny by construction), dedupLines-shaped per-doc rebuild; no COUNT(DISTINCT) Expand anywhere"),

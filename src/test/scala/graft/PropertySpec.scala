@@ -544,32 +544,6 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
-  test("footer bounds contain the actual min/max through random filter/select chains") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("footer_prop").toString
-    val caseGen = for {
-      n <- Gen.chooseNum(1, 20)
-      vals <- Gen.listOfN(n, Gen.chooseNum(-100000L, 100000L))
-      cut <- Gen.chooseNum(-100000L, 100000L)
-      seed <- Gen.chooseNum(0, 1 << 20)
-    } yield (vals, cut, seed)
-    checkProp(Prop.forAll(caseGen) { case (vals, cut, seed) =>
-      val path = s"$dir/t$seed.parquet"
-      vals.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "t")
-        .write.mode("overwrite").parquet(path)
-      val base = spark.read.parquet(path)
-      val derived = base.filter(col("t") >= cut).select(col("t").as("tt"))
-      val bounds = org.apache.spark.sql.GraftSqlShims.parquetFooterBounds(derived, "tt")
-      val actual = derived.collect().map(_.getLong(0))
-      bounds match {
-        case None => false // a plain filtered leaf scan must always resolve
-        case Some((lo, hi)) =>
-          actual.isEmpty || (lo <= actual.min && actual.max <= hi)
-      }
-    })
-  }
-
   test("band-exhaustive minhash == exact shingle jaccard on random corpora") {
     import spark.implicits._
     // random near-dup-rich corpora: draw from a tiny token alphabet so

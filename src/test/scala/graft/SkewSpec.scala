@@ -280,9 +280,8 @@ class SkewSpec extends AnyFunSuite {
   test("sessionizeBatch auto: measured-uniform keys take the windowed strategy; a hot key keeps the carry") {
     // range advertises 8 B/row; at the gate's 64-byte divisor 20M rows
     // estimate ~2.5M — past SegmentedCarryMinRows, so the auto path runs
-    // the measured-skew tier (the layout gate yields no evidence on a
-    // range-backed integer-time frame). The decision job executes (one
-    // hash-sampled user count); the sessionize itself is only planned.
+    // the measured-skew tier. The decision job executes (one hash-sampled
+    // user count); the sessionize itself is only planned.
     val n = 20L * 1000 * 1000
     // uniform: 100k users, 200 events each at a 1000s cadence per user
     val uniform = spark.range(n).select(
@@ -320,14 +319,14 @@ class SkewSpec extends AnyFunSuite {
     import spark.implicits._
     val tiny = (1 to 400).map(i => ((i % 100).toLong, i.toLong, 1.0))
       .toDF("user_id", "ts", "value")
-    assert(graft.streaming.EventStreams.measuredUniformKeys(tiny,
+    assert(Joins.measuredUniformKeys(tiny, "user_id", "ts",
       estRows = 400, sampleTarget = Long.MaxValue, minSampleOverride = 1))
-    assert(!graft.streaming.EventStreams.measuredUniformKeys(tiny,
+    assert(!Joins.measuredUniformKeys(tiny, "user_id", "ts",
       estRows = 400, sampleTarget = Long.MaxValue, minSampleOverride = 100000))
     val tinyHot = (1 to 400).map(i =>
       (if (i % 10 < 8) 0L else i.toLong, i.toLong, 1.0))
       .toDF("user_id", "ts", "value")
-    assert(!graft.streaming.EventStreams.measuredUniformKeys(tinyHot,
+    assert(!Joins.measuredUniformKeys(tinyHot, "user_id", "ts",
       estRows = 400, sampleTarget = Long.MaxValue, minSampleOverride = 1))
   }
 
@@ -335,7 +334,7 @@ class SkewSpec extends AnyFunSuite {
     // spark.range advertises 8 bytes/row, so 40M rows estimate ~2.4M rows
     // at the gate's 64-byte divisor — past SegmentedCarryMinRows. Only
     // the plan is inspected (plus the skew-measure sample job and, on
-    // the segmented side, autoGranule's min/max pre-pass); the carry
+    // the segmented side, spanGranule's min/max pre-pass); the carry
     // itself never executes.
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LW}
     def bareKeyWindows(got: org.apache.spark.sql.DataFrame): Seq[LW] =
@@ -383,6 +382,89 @@ class SkewSpec extends AnyFunSuite {
         big.select(col("k"), col("t"), col("pay")), "k", "t", Seq("pay"),
         granule = Some(100L), strategy = "window")
     }
+  }
+
+  /** `body`'s result and the optimized plans of the SQL actions that ran
+    * while it built its frame (the eager probes of the carries' auto
+    * rule). */
+  private def actionsDuring[A](body: => A): (A, Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]) = {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit = seen.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = seen.add(qe.optimizedPlan)
+    }
+    org.apache.spark.GraftTestShims.drainListeners(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val result = body
+      org.apache.spark.GraftTestShims.drainListeners(spark.sparkContext)
+      (result, seen.toArray(Array.empty[LogicalPlan]).toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** True when `plan` is the key-skew sample (its filter hashes rows). */
+  private def isKeySample(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
+    plan.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.XxHash64])))
+
+  test("sessionizeBatch auto above the gate, hot key: one key sample, one width pre-pass, segmented plan") {
+    // the ~2.5M-estimate range fixture of the measured-tier test, 80% of
+    // events on one user: the auto rule samples the keys, finds the hot
+    // one, and derives the width with ONE min/max pass — no other action
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LW}
+    val hot = spark.range(20L * 1000 * 1000).select(
+      when(col("id") % 10 < 8, 0L).otherwise(col("id")).as("user_id"),
+      (col("id") * 7L).as("ts"), lit(1.0).as("value"))
+    val (plan, actions) = actionsDuring(
+      graft.streaming.EventStreams.sessionizeBatch(hot, gapSeconds = 500000))
+    assert(actions.size == 2, s"expected a key sample and a width pass: $actions")
+    assert(actions.count(isKeySample) == 1)
+    val windows = plan.queryExecution.optimizedPlan.collect { case w: LW => w }
+    assert(windows.exists(_.partitionSpec.flatMap(_.references.map(_.name))
+      .toSet == Set("user_id", "__g")), "the carry segments by (user, granule)")
+    windows.filter(_.partitionSpec.size <= 1).foreach { w =>
+      assert(w.child.collectFirst { case a: Aggregate => a }.nonEmpty)
+    }
+  }
+
+  test("asOfJoin auto above the gate, hot key: one key sample, one width pre-pass, segmented plan") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LW}
+    val hot = spark.range(40L * 1000 * 1000)
+      .select(when(col("id") % 10 < 8, 0L).otherwise(col("id")).as("k"),
+        (col("id") * 7).as("t"), col("id").as("pay"))
+    val (plan, actions) = actionsDuring(Joins.asOfJoin(hot.select("k", "t"),
+      hot.select(col("k"), col("t"), col("pay")), "k", "t", Seq("pay")))
+    assert(actions.size == 2, s"expected a key sample and a width pass: $actions")
+    assert(actions.count(isKeySample) == 1)
+    val windows = plan.queryExecution.optimizedPlan.collect { case w: LW => w }
+    assert(windows.exists(_.partitionSpec.flatMap(_.references.map(_.name))
+      .toSet == Set("__k", "__g")), "the carry segments by (key, granule)")
+    windows.filter(_.partitionSpec.size <= 1).foreach { w =>
+      assert(w.child.collectFirst { case a: Aggregate => a }.nonEmpty)
+    }
+  }
+
+  test("asOfJoin auto path over parquet frames stays exact vs explicit granule") {
+    // the derived width must not change RESULTS, only task granularity:
+    // pin auto == explicit on a parquet-backed pair (the gate won't fire
+    // at this size, so the auto side is the one-window carry)
+    val dir = java.nio.file.Files.createTempDirectory("parquet_asof").toString
+    val left = (1L to 400L).map(i => (i % 7, i * 10, i)).toDF("k", "t", "eid")
+    val right = (1L to 100L).map(i => (i % 7, i * 37, i * 1000)).toDF("k", "t", "payload")
+    left.write.mode("overwrite").parquet(s"$dir/l.parquet")
+    right.write.mode("overwrite").parquet(s"$dir/r.parquet")
+    val l = spark.read.parquet(s"$dir/l.parquet")
+    val r = spark.read.parquet(s"$dir/r.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("eid").collect().map(x => (x.getLong(2), Option(x.get(3)))).toSeq
+    val auto = rows(Joins.asOfJoin(l, r, "k", "t", Seq("payload")))
+    val explicit = rows(Joins.asOfJoin(l, r, "k", "t", Seq("payload"),
+      granule = Some(Joins.spanGranule(l.select("t").union(r.select("t")), col("t")))))
+    assert(auto == explicit)
+    assert(rows(Joins.asOfJoin(l, r, "k", "t", Seq("payload"), strategy = "segmented")) == auto)
   }
 
   test("asOfJoin: strategy choice never changes the result (hot fixture)") {

@@ -633,6 +633,26 @@ class XopSpec extends AnyFunSuite {
                            "granule": 100}}}""").df }
   }
 
+  test("sessionize strategy=segmented segments a small table; its rows equal the auto rows") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LW}
+    def windowKeys(df: DataFrame): Seq[Set[String]] =
+      df.queryExecution.optimizedPlan.collect {
+        case w: LW => w.partitionSpec.flatMap(_.references.map(_.name)).toSet
+      }
+    val auto = QueryEngine.run(events,
+      """{"xop": {"name": "sessionize", "args": {"gap_seconds": 60}},
+          "order_by": ["user_id", "session_start"]}""").df
+    val seg = QueryEngine.run(events,
+      """{"xop": {"name": "sessionize",
+                  "args": {"gap_seconds": 60, "strategy": "segmented"}},
+          "order_by": ["user_id", "session_start"]}""").df
+    // below the row gate the auto path keeps the one-window carry ...
+    assert(windowKeys(auto).nonEmpty && windowKeys(auto).forall(_ == Set("user_id")))
+    // ... while "segmented" plans the granule-bucketed local windows
+    assert(windowKeys(seg).contains(Set("user_id", "__g")))
+    assert(seg.collect().toSeq == auto.collect().toSeq)
+  }
+
   test("sessionizeWindowed ≡ the segmented carry row for row (explicit strategies agree)") {
     // a fixture with cross-granule sessions at an explicit narrow width,
     // so the segmented path's carry machinery actually merges — the
@@ -648,7 +668,7 @@ class XopSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("user_id", "session_start").collect().toSeq
     val seg = graft.streaming.EventStreams.sessionizeBatch(
-      ev, gapSeconds = 60, granule = Some(100L), autoNative = false)
+      ev, gapSeconds = 60, granule = Some(100L), strategy = "segmented")
     val win = graft.streaming.EventStreams.sessionizeWindowed(ev, gapSeconds = 60)
     assert(rows(win) == rows(seg) && rows(win).nonEmpty)
   }
