@@ -50,7 +50,7 @@ SPEC = {
 def main():
     os.makedirs(DST, exist_ok=True)
     con = duckdb.connect()
-    con.execute("SET threads TO 16")
+    con.execute(f"SET threads TO {os.cpu_count() or 1}")
 
     # offset base = max(key)+1 over the SOURCE table, computed once
     offsets = {}

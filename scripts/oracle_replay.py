@@ -27,12 +27,13 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 def connect(data_dir):
     con = duckdb.connect()
-    con.execute("SET threads TO 16")
+    con.execute(f"SET threads TO {os.cpu_count() or 1}")
     # Cap DuckDB so a heavy oracle (e.g. the 100M-row range-join compare
     # at sf10) spills to disk instead of racing a resident Spark JVM to a
-    # box-level OOM. Defaults sized for a 128 GB box with a 48g JVM.
-    con.execute(f"SET memory_limit = "
-                f"'{os.environ.get('ORACLE_REPLAY_MEM', '40GB')}'")
+    # box-level OOM: half the host's RAM unless ORACLE_REPLAY_MEM says.
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    mem = os.environ.get("ORACLE_REPLAY_MEM", f"{ram_mb // 2}MB")
+    con.execute(f"SET memory_limit = '{mem}'")
     tmp = os.environ.get("ORACLE_REPLAY_TMP", "/tmp/duckdb_replay_tmp")
     con.execute(f"SET temp_directory = '{tmp}'")
     for t in TABLES:

@@ -14,6 +14,10 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** Every fixture table the queries read; materialized before timing. */
+  val Tables: Seq[String] = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
   /** Host-contamination evidence, stamped into the JSON so a dirty run is
     * self-identifying: this suite reads ~20% high across the board when
     * another Spark JVM (e.g. the HTTP server) is live on the host
@@ -100,35 +104,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // UTC everywhere: the NTZ time handling (timeEmbedding's NTZ->LTZ
-      // cast, x47's epoch-micro window bounds, sessionize's NTZ
-      // unification) assumes session-UTC; a DST host zone would make the
-      // NTZ embedding non-monotone and shift window bounds.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE partition-coalescing policy, MEASURED this round (A/B at
-      // sf0.1, calibration-stamped): parallelism-first (the default,
-      // kept) beat size-based coalescing 35.0 s vs 41.7 s on the full
-      // suite — with the size-based run on the FASTER box state
-      // (calib_cpu 230 vs 368 ms). Size-based coalescing collapsed the
-      // CPU-heavy post-shuffle stages (signature kernels, verify joins)
-      // to one task, serializing work 32 cores could split; the
-      // per-task overhead it saves is smaller than the parallelism it
-      // costs at this scale. At fleet scale the guide's 100 MB-1 GB
-      // partition sizing comes from advisoryPartitionSizeInBytes
-      // (deployment conf), not from flipping this policy.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-    // committer v2 + codegen cache sizing moved to the shared library
-    // tuning (graft.engine.SessionTuning) so Bench, Verify and the HTTP
-    // server run the same write path — a conf that lived only here
-    // measured the bench harness, not the library (round-20 verdict).
-    val spark = graft.engine.SessionTuning.tuned(builder).getOrCreate()
+    // the session every graft main runs (graft.engine.SessionTuning): the
+    // bench measures the library's own write path, extensions and confs
+    val spark = graft.engine.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jvmsAtStart = competingJvms()
     // calibration runs BEFORE warmups: the numbers must reflect the box,
@@ -137,9 +115,7 @@ object Bench {
     val calibCpuMs = calibrateCpuMs()
     val calibSparkMs = calibrateSparkMs(spark)
 
-    graft.sources.TableRegistry.warmup(spark, sfDir, Seq("region", "nation",
-      "customer", "supplier", "part", "orders", "lineitem", "events",
-      "documents", "embeddings"))
+    graft.sources.TableRegistry.warmup(spark, sfDir, Tables)
 
     // Steady-state timing, matching the reference's methodology (its 7-70ms
     // envelope is warm queries against a RAM cache). Two UNTIMED passes over

@@ -3,13 +3,46 @@ package graft.engine
 import org.apache.spark.sql.SparkSession
 
 /** Library-level session configuration shared by every entry point that
-  * drives graft queries (Bench, Verify, the HTTP server). These confs
+  * drives graft queries: the HTTP server, Bench, Verify, the tools and
+  * the tests all build their session with [[local]]. These confs
   * belong to the LIBRARY, not to any one harness: an artifact writer's
   * commit cost or codegen-cache pressure is the same regardless of who
   * built the session, so setting them only where the timing happens
   * (the round-20 state for the committer) measured the bench instead of
   * the library. */
 object SessionTuning {
+
+  /** Cores a graft main runs on: `SPARK_GRAFT_CPUS`, else every core the
+    * JVM sees. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The session builder of every graft main: `local[cpus]` with one
+    * shuffle partition per core, no UI, and [[tuned]].
+    *
+    *  - UTC everywhere: the NTZ time handling (timeEmbedding's NTZ->LTZ
+    *    cast, x47's epoch-micro window bounds, sessionize's NTZ
+    *    unification) assumes session-UTC; a DST host zone would make the
+    *    NTZ embedding non-monotone and shift window bounds.
+    *  - `nanosAsLong`: fixture parquet written with nanosecond timestamps
+    *    reads as LONG nanos, which the event readers convert themselves.
+    *  - Adaptive execution stays at Spark's defaults, including
+    *    parallelism-first partition coalescing. Measured at sf0.1 on 32
+    *    cores (calibration-stamped A/B over the full Bench suite):
+    *    parallelism-first 35.0 s against size-based coalescing 41.7 s,
+    *    with the size-based run on the faster box state. Size-based
+    *    coalescing collapsed the CPU-heavy post-shuffle stages (signature
+    *    kernels, verify joins) to one task, serializing work the cores
+    *    could split. At fleet scale partition sizing comes from
+    *    `advisoryPartitionSizeInBytes` (a deployment conf), not from
+    *    flipping this policy. */
+  def local(cpus: Int = SessionTuning.cpus): SparkSession.Builder =
+    tuned(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
 
   /** Performance confs applied by all graft mains.
     *

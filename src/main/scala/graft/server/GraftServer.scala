@@ -601,17 +601,9 @@ object Main {
     // there is no auto-reload to mirror.
     val debug = args.contains("--debug") || args.contains("-d")
 
-    // shared library tuning (committer v2, codegen cache sizing): the
-    // server's artifact writers must run the same write path the bench
-    // measures — see graft.engine.SessionTuning
-    val spark = graft.engine.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true"))
-      .getOrCreate()
+    // the session every graft main runs (graft.engine.SessionTuning): the
+    // server's artifact writers run the write path the bench measures
+    val spark = graft.engine.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel(if (debug) "INFO" else "WARN")
     // session conf, not builder conf: the xop layer reads it per query,
     // and tests toggle it on a shared session the same way

@@ -814,7 +814,7 @@ object EventStreams {
     // join twice (per-branch column pruning made the subtrees
     // canonically unequal, so AQE couldn't stage-reuse the exchange —
     // a documented ~2× at sf1); this shape measures left ≈ inner
-    // (ProfileIjParts, warm: 1.3 s vs 1.4 s at sf1, one shuffled
+    // (warm: 1.3 s vs 1.4 s at sf1, one shuffled
     // SortMergeJoin each). The ≤2× granule explode moves from the
     // anchor side to the match side — the exchanged row totals are
     // within ~25% of each other on the events fixture and the swap

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Offline Bloom-exclusion builder — the entry that produces the
   * persistable sketch artifact (graft.ops.BloomIndex) a server then
   * serves via `--index-root` + the `index` arg on the `exclude_ids`
@@ -21,13 +19,7 @@ object BuildBloomIndex {
       sys.exit(2)
     }
     val Array(src, idCol, fppS, out) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.engine.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val exclude = spark.read.parquet(src)
     val bytes = graft.ops.BloomIndex.buildAndSave(exclude, idCol, fppS.toDouble, out)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Offline ANN/cluster index builder — the operator-facing entry that
   * produces the persistable quantizer artifact (graft.ops.IvfIndex) a
   * server then serves via `--index-root` + the `index` xop argument.
@@ -20,13 +18,7 @@ object BuildIvfIndex {
       sys.exit(2)
     }
     val Array(src, idCol, vecCol, nCellsS, itersS, out) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.engine.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val corpus = spark.read.parquet(src)
     val centroids = graft.ops.IvfIndex.buildAndSave(

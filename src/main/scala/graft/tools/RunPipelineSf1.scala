@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end curation-pipeline timing at a given sf dir — the
@@ -17,15 +16,7 @@ import org.apache.spark.sql.functions._
 object RunPipelineSf1 {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/testdata-sf1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = graft.engine.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.ops._
     graft.sources.TableRegistry.warmup(spark, dir, Seq("documents", "embeddings"))

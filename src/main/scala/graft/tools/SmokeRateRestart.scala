@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EventStreams
@@ -38,14 +38,7 @@ object SmokeRateRestart {
     val windows = args.lift(4).map(_.toLong).getOrElse(4096L)
     val trailing = args.lift(5).map(_.toInt).getOrElse(5)
     require(restartAfter > 0 && restartAfter < chunks)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.engine.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val base = java.nio.file.Files.createTempDirectory("smoke_rate")

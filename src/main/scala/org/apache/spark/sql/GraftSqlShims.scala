@@ -75,4 +75,10 @@ object GraftSqlShims {
           }
     }
   }
+
+  /** Block until every posted event has reached the listeners (the bus is
+    * `private[spark]`), so a listener has seen every job of the actions
+    * that already returned. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -396,11 +396,11 @@ class SkewSpec extends AnyFunSuite {
       def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
           e: Exception): Unit = seen.add(qe.optimizedPlan)
     }
-    org.apache.spark.GraftTestShims.drainListeners(spark.sparkContext)
+    org.apache.spark.sql.GraftSqlShims.drainListeners(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       val result = body
-      org.apache.spark.GraftTestShims.drainListeners(spark.sparkContext)
+      org.apache.spark.sql.GraftSqlShims.drainListeners(spark.sparkContext)
       (result, seen.toArray(Array.empty[LogicalPlan]).toSeq)
     } finally spark.listenerManager.unregister(listener)
   }
